@@ -270,18 +270,6 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # first-order Markov transition matrix over per-user event streams:
-    # lead window per user (bounded by one user's history), counts
-    # map-side-combinable, totals joined back — no second window.
-    from smartlogic_concordance_transformer_spark.streaming_analytics import (
-        event_transitions,
-    )
-
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return event_transitions(e)
-
-
 def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot diff of two KG triple materializations (the audit a
     # nightly graph rebuild publishes): v2 removes doc_id%17==3, retargets
@@ -345,17 +333,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tree.unionByName(ring).unionByName(bridge)
     v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
     return GraphFrame(v, e).kCore(k=3, rounds=4)
-
-
-def q_events_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-user daily grid with gap fill: empty days appear with n=0 and
-    # the last observed daily total forward-filled across the gap.
-    from smartlogic_concordance_transformer_spark.datapipe.timeseries import (
-        resample_gapfill,
-    )
-
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return resample_gapfill(e, unit="day")
 
 
 def q_text_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -436,17 +413,6 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select("id", F.round("pagerank", 6).alias("pagerank"))
 
 
-def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-user anomalous days over the DENSE daily grid (empty days count
-    # as zero — silence flags too); two-phase decimal stats joined back.
-    from smartlogic_concordance_transformer_spark.datapipe.timeseries import (
-        anomalous_buckets,
-    )
-
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return anomalous_buckets(e, unit="day", z_threshold=2.0)
-
-
 def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-document character-distribution Shannon entropy, the
     # gibberish/filler quality signal — zero-shuffle in-row fold.
@@ -475,20 +441,6 @@ def q_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = part if e is None else e.union(part)
     v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
     return clustering_coefficient(GraphFrame(v, e))
-
-
-def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # click -> view -> purchase funnel within 1 hour of the first click,
-    # greedy earliest-match per user. The oracle is the chained-min
-    # formulation (t2 = min view ts after t1, t3 = min purchase ts after
-    # t2, both within t1 + 1h) — provably the same rule the in-row fold
-    # applies event-by-event.
-    from smartlogic_concordance_transformer_spark.streaming_analytics import (
-        funnel_steps,
-    )
-
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return funnel_steps(e, ["click", "view", "purchase"], within="1 hour")
 
 
 def q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,24 +500,6 @@ def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             ref_integrity("o_custkey", c, "c_custkey"),
         ],
     )
-
-
-def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the attribution-window join (purchase within 10 min of a click by
-    # the same user), run in its static form — the IDENTICAL expression
-    # Spark executes as a watermarked stream-stream join on streams
-    # (streaming == static is pinned by test_streaming_analytics). The
-    # oracle is the declarative time-range join.
-    from smartlogic_concordance_transformer_spark.streaming_analytics import (
-        stream_interval_join,
-    )
-
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    clicks = e.filter("event_type = 'click'").select("user_id", "ts", "event_id")
-    purch = e.filter("event_type = 'purchase'").select(
-        "user_id", "ts", "event_id"
-    )
-    return stream_interval_join(clicks, purch)
 
 
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1520,71 +1454,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "kept", "stage", "split")
 
 
-def q_pipeline_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pipeline_e2e with the substring-dedup stage enabled: duplicated
-    # >= 40-char runs (the planted cross-doc disclaimer, the planted
-    # within-doc repeat, and the corpus-wide scrubbed PII line — 54
-    # identical chars in every doc) are excised keep-first from the
-    # near-dedup survivors, shingles REBUILD from the excised text, and
-    # decontamination/mix/split run downstream of the rewrite. Output is
-    # the 'excised' stage table itself (captured via the materialize
-    # hook) joined to each doc's final ledger outcome — so the oracle
-    # checks the rewritten BYTES and that the tail consumed them.
-    from smartlogic_concordance_transformer_spark.datapipe.curation import (
-        pretraining_pipeline,
-    )
-
-    raw, bench = _pipeline_raw(spark, sf_dir, plant_substrings=True)
-    captured: dict[str, DataFrame] = {}
-
-    def hook(df: DataFrame, stage: str) -> DataFrame:
-        out = df.localCheckpoint(eager=False)
-        captured[stage] = out
-        return out
-
-    ledger = pretraining_pipeline(
-        raw,
-        bench,
-        mix_fractions={"src0": 64, "src1": 128},
-        substring_dedup=True,
-        substring_k=40,
-        materialize=hook,
-    )
-    ex = captured["excised"].select("doc_id", "clean")
-    return ex.join(ledger.select("doc_id", "stage", "split"), "doc_id")
-
-
-def q_pipeline_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pipeline_e2e with the paragraph-dedup stage enabled: the planted
-    # 3-doc shared community-guidelines lines AND the corpus-wide
-    # scrubbed-PII line (identical in every doc post-scrub) are excised
-    # keep-first from the near-dedup survivors; shingles rebuild from the
-    # rewritten text and decontamination/mix/split consume it. Output is
-    # the 'paragraphs' stage table (rewritten BYTES) joined to each doc's
-    # final ledger outcome — same contract shape as pipeline_substring.
-    from smartlogic_concordance_transformer_spark.datapipe.curation import (
-        pretraining_pipeline,
-    )
-
-    raw, bench = _pipeline_raw(spark, sf_dir, plant_paragraphs=True)
-    captured: dict[str, DataFrame] = {}
-
-    def hook(df: DataFrame, stage: str) -> DataFrame:
-        out = df.localCheckpoint(eager=False)
-        captured[stage] = out
-        return out
-
-    ledger = pretraining_pipeline(
-        raw,
-        bench,
-        mix_fractions={"src0": 64, "src1": 128},
-        paragraph_dedup=True,
-        materialize=hook,
-    )
-    ex = captured["paragraphs"].select("doc_id", "clean")
-    return ex.join(ledger.select("doc_id", "stage", "split"), "doc_id")
-
-
 def q_web_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     # URL normalization — the CommonCrawl URL-level dedup key: drop
     # fragment, lowercase scheme/authority (not path), strip default
@@ -1628,142 +1497,11 @@ def q_web_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pipeline_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pipeline_e2e with the model-based quality gate enabled: a trained
-    # (here: literal) spam-vocabulary weight table gates the heuristic
-    # survivors on mean-pooled logit — the CCNet/Llama 'quality
-    # classifier' cascade position (cheap rules first, model second).
-    # Planted 35k+11 docs are vocabulary-spammy but heuristic-clean, so
-    # they reach and fail ONLY the classifier stage; unplanted docs
-    # score exactly 0.0 (invented tokens absent) and pass untouched.
-    from smartlogic_concordance_transformer_spark.datapipe.curation import (
-        pretraining_pipeline,
-    )
-
-    raw, bench = _pipeline_raw(spark, sf_dir, plant_classifier=True)
-    out = pretraining_pipeline(
-        raw,
-        bench,
-        mix_fractions={"src0": 64, "src1": 128},
-        classifier_weights=_CLF_WEIGHTS,
-        classifier_threshold=_CLF_THRESHOLD,
-    )
-    return out.select("doc_id", "kept", "stage", "split")
-
-
-# duplicated-substring plants for the substring_dedup pipeline variant:
-# a fixed cross-doc disclaimer tail (every doc_id % 30 == 7) and a
-# back-to-back repeat of the doc's own first 60 chars (every
-# doc_id % 45 == 13). The offsets are CRT-chosen so planted docs never
-# coincide with the twin (%40), spam (%60), or benchmark (%50) multiples:
-# 40k mod 30 ∈ {0,10,20}, 60k mod 30 = 0, 50k mod 30 ∈ {0,10,20} — never
-# 7; 40k/60k/50k mod 45 are multiples of 5 — never 13; and 7 (mod 30)
-# never meets 13 (mod 45). So planting perturbs no pipeline_e2e fixture
-# family and creates no new exact/near-dup pairs.
-_SUB_DISC = (
-    "this content is provided as is without warranty of any kind "
-    "either express or implied"
-)
-
-# classifier-gate plant family: doc_id % 35 == 11. Disjoint from every
-# other family by CRT: vs 40k/60k/50k, gcd(35, m) = 5 and 11 mod 5 = 1
-# while 0 mod 5 = 0; vs 30k+7 / 45k+13, 7 mod 5 = 2 and 13 mod 5 = 3.
-# The tokens are invented strings absent from the synthetic corpus, so
-# every unplanted doc's logit is EXACTLY 0.0 and every planted doc's is
-# <= -12/n_tokens (n <= ~120 post-clean => <= -0.1) — both sides clear
-# the -0.01 threshold with >=10x margin.
-_CLF_TOKENS = [
-    "clickbait", "freecrypto", "megadeal", "buynow", "zerocost", "winbig",
-    "instaoffer", "spamcoupon", "hypersale", "dealblast", "promoblitz",
-    "cashgrab",
-]
-_CLF_WEIGHTS = {t: -1000 for t in _CLF_TOKENS}
-_CLF_THRESHOLD = -0.01
-
-
-def _pipeline_raw(
-    spark: SparkSession,
-    sf_dir: str,
-    plant_substrings: bool = False,
-    plant_classifier: bool = False,
-    plant_paragraphs: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+def _pipeline_raw(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The pipeline_e2e input corpus (raw docs with planted failures +
     benchmark frame) — shared by the contract query and the oracle-
-    precondition tests so both see the identical construction.
-
-    ``plant_substrings``: additionally plant duplicated >= 40-char runs
-    (see _SUB_DISC note) into the BASE docs, before twins/spam/bench are
-    derived — the pipeline_substring corpus.
-
-    ``plant_classifier``: plant a unique-per-doc promo line of invented
-    spam-vocabulary tokens (see _CLF_TOKENS note) into every 35k+11 doc
-    — vocabulary-spammy but heuristic-clean (distinct words, normal
-    length), so ONLY the model gate catches it: the pipeline_classifier
-    corpus.
-
-    ``plant_paragraphs``: plant a shared line into every 55k+19 doc
-    (3 groups keyed by doc_id % 3 — small enough to stay under the
-    boilerplate min_docs=5 threshold at the sf0.01 oracle corpus, so
-    hygiene can't strip it and only the paragraph stage catches it;
-    %55+19 is CRT-disjoint from the 40/60/50/30+7/45+13/35+11 families):
-    the pipeline_paragraph corpus. The corpus-wide scrubbed-PII line is
-    a second, unplanted duplicate paragraph in EVERY doc."""
+    precondition tests so both see the identical construction."""
     d = _spread(spark, _docs(spark, sf_dir))
-    if plant_paragraphs:
-        t = F.col("text")
-        d = d.withColumn(
-            "text",
-            F.when(
-                F.pmod("doc_id", 55) == 19,
-                F.concat(
-                    t,
-                    F.lit("\ncommunity guidelines apply to group "),
-                    F.pmod("doc_id", 3).cast("string"),
-                ),
-            ).otherwise(t),
-        )
-    if plant_classifier:
-        t = F.col("text")
-        # doc-id prefix keeps the line unique per doc (a byte-identical
-        # line across >= min_docs docs would be stripped as boilerplate
-        # BEFORE the classifier ever saw it)
-        d = d.withColumn(
-            "text",
-            F.when(
-                F.pmod("doc_id", 35) == 11,
-                F.concat(
-                    t,
-                    F.lit("\ndoc"),
-                    F.col("doc_id").cast("string"),
-                    F.lit(" promo: " + " ".join(_CLF_TOKENS)),
-                ),
-            ).otherwise(t),
-        )
-    if plant_substrings:
-        t = F.col("text")
-        d = d.withColumn(
-            "text",
-            F.when(
-                F.pmod("doc_id", 30) == 7,
-                F.concat(
-                    t,
-                    F.lit("\ndoc"),
-                    F.col("doc_id").cast("string"),
-                    F.lit(" notice: " + _SUB_DISC),
-                ),
-            )
-            .when(
-                F.pmod("doc_id", 45) == 13,
-                F.concat(
-                    t,
-                    F.lit("\nrepeat: "),
-                    F.substring(t, 1, 60),
-                    F.substring(t, 1, 60),
-                ),
-            )
-            .otherwise(t),
-        )
     # planted failures so every stage fires: every 40th doc gets an exact
     # content twin whose PII line DIFFERS pre-scrub (different doc_id ->
     # different synthetic IP) but is identical post-scrub — exact dedup
@@ -1937,8 +1675,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stateful sessionization semantics applied in batch over events:
     # session = maximal run of a user's events with gaps < 30 min.
     # SQL-expressible via the classic gaps-and-islands window pattern,
-    # so it gets a DuckDB oracle even though the streaming form uses
-    # applyInPandasWithState (tests/test_streaming_analytics.py).
+    # so it gets a DuckDB oracle.
     from pyspark.sql import Window
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -2282,13 +2019,11 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_semantic_incremental": q_dedup_semantic_incremental,
         "text_bpe_encode": q_text_bpe_encode,
         "sample_token_budget": q_sample_token_budget,
-        "pipeline_substring": q_pipeline_substring,
         "text_quality_classifier": q_text_quality_classifier,
         "sample_weighted": q_sample_weighted,
         "sample_weighted_stratified": q_sample_weighted_stratified,
         "sample_pack": q_sample_pack,
         "sim_recall": q_sim_recall,
-        "pipeline_classifier": q_pipeline_classifier,
         "web_urls": q_web_urls,
         "kg_cc_incremental": q_kg_cc_incremental,
         "fuzzy_match": q_fuzzy_match,
@@ -2297,20 +2032,15 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_resolve_fuzzy": q_kg_resolve_fuzzy,
         "changeset_apply": q_changeset_apply,
         "join_salted": q_join_salted,
-        "pipeline_paragraph": q_pipeline_paragraph,
         "zorder_key": q_zorder_key,
-        "stream_interval_join": q_stream_interval_join,
         "quality_checks": q_quality_checks,
         "kg_negatives": q_kg_negatives,
-        "events_funnel": q_events_funnel,
         "graph_sssp": q_graph_sssp,
         "text_tfidf": q_text_tfidf,
         "text_bm25": q_text_bm25,
         "text_pmi": q_text_pmi,
-        "events_transitions": q_events_transitions,
         "kg_diff": q_kg_diff,
         "graph_kcore": q_graph_kcore,
-        "events_resample": q_events_resample,
         "text_inverted": q_text_inverted,
         "graph_lpa": q_graph_lpa,
         "kg_related": q_kg_related,
@@ -2318,7 +2048,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_clustering": q_graph_clustering,
         "graph_ppr": q_graph_ppr,
         "text_entropy": q_text_entropy,
-        "events_anomaly": q_events_anomaly,
         # swapped INTO the driver gate in favour of these (round 6):
         # text_fingerprint is a one-expression projection — the
         # substring-dedup and LM-perplexity operators carry far more
@@ -2557,44 +2286,6 @@ def retired_oracle_sql() -> dict[str, str]:
           from p join deg da on p.a = da.a
           join deg db on p.b = db.a
         """,
-        # the dense-grid zscore: grid replay + identical stat op order
-        "events_anomaly": """
-          with a as (
-            select user_id, date_trunc('day', ts) as bucket,
-                   sum(cast(value as decimal(18,6))) as total
-            from events group by 1, 2),
-          g as (
-            select user_id,
-                   unnest(generate_series(min(bucket), max(bucket),
-                                          interval 1 day)) as bucket
-            from a group by user_id),
-          rows_ as (
-            select g.user_id, g.bucket,
-                   cast(coalesce(a.total, 0) as decimal(18,6)) as x
-            from g left join a using (user_id, bucket)),
-          st as (
-            select user_id, count(*) as m, sum(x) as s, sum(x * x) as ss
-            from rows_ group by user_id)
-          select r.user_id, r.bucket, r.x as total,
-                 round((cast(r.x as double)
-                        - (cast(st.s as double) / cast(st.m as double)))
-                       / sqrt((cast(st.ss as double)
-                               - cast(st.s as double) * cast(st.s as double)
-                                 / cast(st.m as double))
-                              / (cast(st.m as double) - 1.0)), 6) as z
-          from rows_ r join st using (user_id)
-          where st.m >= 2
-            and (cast(st.ss as double)
-                 - cast(st.s as double) * cast(st.s as double)
-                   / cast(st.m as double))
-                / (cast(st.m as double) - 1.0) > 0
-            and abs(round((cast(r.x as double)
-                           - (cast(st.s as double) / cast(st.m as double)))
-                          / sqrt((cast(st.ss as double)
-                                  - cast(st.s as double) * cast(st.s as double)
-                                    / cast(st.m as double))
-                                 / (cast(st.m as double) - 1.0)), 6)) > 2.0
-        """,
         # per-char counts via explode (the oracle need not be zero-shuffle,
         # only equal); n derives from summed counts because DuckDB's
         # string_split('','') yields [''] where Spark yields []
@@ -2707,28 +2398,6 @@ def retired_oracle_sql() -> dict[str, str]:
           from d join q using (doc_id)
           group by d.source
         """,
-        # dense per-user daily grid: same date_trunc buckets, decimal
-        # sums, generate_series grid, ignore-nulls forward fill
-        "events_resample": """
-          with a as (
-            select user_id, date_trunc('day', ts) as bucket,
-                   count(*) as n,
-                   sum(cast(value as decimal(18,6))) as total
-            from events group by 1, 2),
-          g as (
-            select user_id,
-                   unnest(generate_series(min(bucket), max(bucket),
-                                          interval 1 day)) as bucket
-            from a group by user_id),
-          j as (
-            select g.user_id, g.bucket, coalesce(a.n, 0) as n, a.total
-            from g left join a using (user_id, bucket))
-          select user_id, bucket, n, total,
-                 last_value(total ignore nulls) over (
-                   partition by user_id order by bucket
-                   rows between unbounded preceding and current row) as filled
-          from j
-        """,
         "text_tfidf": _tfidf_oracle(top_k=5, min_df=2, max_df_frac=0.8),
         "text_bm25": _bm25_oracle(_BM25_QUERY),
         # band-pass before list aggregation, postings sorted
@@ -2774,20 +2443,6 @@ def retired_oracle_sql() -> dict[str, str]:
             where pa.co >= 5)
           select a, b, co, pmi from out
         """,
-        # lead-window replay with the same (ts, event_id) total order
-        "events_transitions": """
-          with s as (
-            select user_id, event_type,
-                   lead(event_type) over (partition by user_id
-                                          order by ts asc, event_id asc) as to_type
-            from events),
-          p as (select event_type as from_type, to_type, count(*) as n
-                from s where to_type is not null group by 1, 2),
-          t as (select from_type, sum(n) as tot from p group by 1)
-          select p.from_type, p.to_type, p.n,
-                 round(cast(p.n as double) / cast(t.tot as double), 6) as prob
-          from p join t using (from_type)
-        """,
         # full-outer replay of the snapshot compare with the same planted
         # removed/changed/added families
         "kg_diff": """
@@ -2818,33 +2473,7 @@ def retired_oracle_sql() -> dict[str, str]:
           where v1.subj is null or v2.subj is null
              or v1.obj is distinct from v2.obj
         """,
-        "pipeline_substring": _pipeline_oracle(substring=True),
-        "pipeline_classifier": _pipeline_oracle(classifier=True),
-        "pipeline_paragraph": _pipeline_oracle(paragraph=True),
         "graph_sssp": _sssp_oracle(rounds=8),
-        # chained-min replay of the greedy funnel fold
-        "events_funnel": """
-          with s1 as (select user_id, min(ts) as t1 from events
-                      where event_type = 'click' group by user_id),
-          s2 as (select e.user_id, min(e.ts) as t2
-                 from events e join s1 using (user_id)
-                 where e.event_type = 'view' and e.ts > s1.t1
-                   and e.ts <= s1.t1 + interval 1 hour
-                 group by e.user_id),
-          s3 as (select e.user_id, min(e.ts) as t3
-                 from events e join s2 using (user_id) join s1 using (user_id)
-                 where e.event_type = 'purchase' and e.ts > s2.t2
-                   and e.ts <= s1.t1 + interval 1 hour
-                 group by e.user_id)
-          select s1.user_id,
-                 case when s3.user_id is not null then 3
-                      when s2.user_id is not null then 2
-                      else 1 end as steps_completed,
-                 s1.t1 as t_first
-          from s1
-          left join s2 on s1.user_id = s2.user_id
-          left join s3 on s1.user_id = s3.user_id
-        """,
         # the successor rule replayed as a correlated min over the WHOLE
         # ring (no bucketing) — agreement re-proves the 2-bucket probe
         "kg_negatives": """
@@ -2902,19 +2531,6 @@ def retired_oracle_sql() -> dict[str, str]:
           select v.constraint, v."column", t.total, v.violations,
                  v.violations = 0 as passed
           from v cross join t
-        """,
-        # the declarative time-range join the streaming state-store
-        # evaluation must equal
-        "stream_interval_join": """
-          select c.user_id, c.ts, c.event_id,
-                 p.ts as r_ts, p.event_id as r_event_id
-          from (select user_id, ts, event_id from events
-                where event_type = 'click') c
-          join (select user_id, ts, event_id from events
-                where event_type = 'purchase') p
-            on c.user_id = p.user_id
-           and p.ts >= c.ts
-           and p.ts <= c.ts + interval 10 minutes
         """,
         # the same bit interleave with DuckDB shift/mask operators
         "zorder_key": """
@@ -3388,9 +3004,9 @@ def _factset_uuid_oracle() -> str | None:
     (handlers_test.go 012345-E) guards the Python spec itself."""
     import pyarrow.parquet as pq
 
-    from smartlogic_concordance_transformer_spark.uuids import ft_factset_uuid_py
+    from smartlogic_concordance_transformer_spark.pyfold import _factset_uuid
 
-    assert ft_factset_uuid_py("012345-E") == "949a7e7f-2516-30c0-9123-f866601ffbe4"
+    assert _factset_uuid("012345-E") == "949a7e7f-2516-30c0-9123-f866601ffbe4"
     path = os.path.join(ORACLE_SF_DIR, "documents.parquet")
     if not os.path.exists(path):
         return None
@@ -3400,7 +3016,7 @@ def _factset_uuid_oracle() -> str | None:
     rows = []
     for d in doc_ids:
         fid = "0" + hashlib.md5(str(d).encode()).hexdigest()[:5].upper() + "-E"
-        rows.append(f"({d}, '{ft_factset_uuid_py(fid)}')")
+        rows.append(f"({d}, '{_factset_uuid(fid)}')")
     return (
         "select cast(doc_id as bigint) as doc_id, factset_uuid from (values "
         + ", ".join(rows)
@@ -4039,29 +3655,12 @@ def _pii_oracle() -> str:
     return f"select doc_id, {_pii_chain(expr)} as clean from documents"
 
 
-def _pipeline_oracle(
-    substring: bool = False, classifier: bool = False, paragraph: bool = False
-) -> str:
+def _pipeline_oracle() -> str:
     """Independent SQL replay of the whole curation cascade. Each stage
     reuses the same fragment shapes its standalone oracle uses; near-dedup
     is all-pairs (oracles don't need to scale) where the engine is
     banded-LSH — row-identical because every qualifying pair on this
-    corpus sits at j >= 0.9 (see q_pipeline_e2e's band note).
-
-    ``substring=True`` replays the pipeline_substring variant: the
-    planted corpus (see _SUB_DISC), a keep-first duplicated-substring
-    excision stage after near-dedup (grams grouped on the RAW 40-char
-    substring where the engine groups on xxhash64 — agreement certifies
-    zero hash collisions, same as the dedup_substrings oracle), shingles
-    REBUILT from the excised text for the decontamination tail, and the
-    output = excised bytes joined to each doc's ledger outcome.
-
-    ``classifier=True`` replays the pipeline_classifier variant: the
-    planted promo-line corpus (see _CLF_TOKENS), a mean-pooled-logit
-    gate CTE over the SAME ``dw.words`` token array the repetition
-    fractions use (one tokenizer, no drift), stage 'classifier' between
-    repetition and exact-dedup — identical operation order to the
-    engine (exact integer weight sum, one IEEE division)."""
+    corpus sits at j >= 0.9 (see q_pipeline_e2e's band note)."""
     # shingle-set builder over a (doc_id, c) relation
     sets = (
         "select doc_id, list_distinct(list_transform("
@@ -4072,64 +3671,9 @@ def _pipeline_oracle(
         "coalesce(list_aggregate(list_filter(string_split(r.t, chr(10)), "
         "x -> not list_contains(bpl.ls, trim(x))), 'string_agg', chr(10)), '')"
     )
-    if substring:
-        # the planted base docs (mirrors _pipeline_raw plant_substrings;
-        # bench stays on raw documents — no %50 multiple is ever planted,
-        # see the _SUB_DISC CRT note)
-        docs0 = f"""docs0 as (
-        select doc_id, source,
-               case when doc_id % 30 = 7
-                    then text || chr(10) || 'doc' || cast(doc_id as varchar) ||
-                         ' notice: {_SUB_DISC}'
-                    when doc_id % 45 = 13
-                    then text || chr(10) || 'repeat: ' ||
-                         substr(text, 1, 60) || substr(text, 1, 60)
-                    else text end as text
-        from documents),
-      """
-    elif classifier:
-        docs0 = f"""docs0 as (
-        select doc_id, source,
-               case when doc_id % 35 = 11
-                    then text || chr(10) || 'doc' || cast(doc_id as varchar) ||
-                         ' promo: {" ".join(_CLF_TOKENS)}'
-                    else text end as text
-        from documents),
-      """
-    elif paragraph:
-        # mirrors _pipeline_raw plant_paragraphs: 3 shared-line groups,
-        # each under the boilerplate min_docs threshold at sf0.01
-        docs0 = """docs0 as (
-        select doc_id, source,
-               case when doc_id % 55 = 19
-                    then text || chr(10) ||
-                         'community guidelines apply to group ' ||
-                         cast(doc_id % 3 as varchar)
-                    else text end as text
-        from documents),
-      """
-    else:
-        docs0 = "docs0 as (select doc_id, source, text from documents),\n      "
-    if classifier:
-        in_list = ", ".join(f"'{t}'" for t in _CLF_TOKENS)
-        clf_ctes = f"""cl as (select doc_id,
-                   cast(list_sum(list_transform(words,
-                        t -> case when t in ({in_list}) then -1000 else 0 end)) as double)
-                     / (len(words) * 1000.0) as logit
-            from dw),
-      dcl as (select b.doc_id, 'classifier' as stage from base b join cl using (doc_id)
-              where quality >= 0.7 and dwf <= 0.7 and top2 <= 0.125
-                and logit <= {_CLF_THRESHOLD!r}),
-      """
-        s1_sql = f"""s1 as (select b.doc_id, b.source, b.c from base b join cl using (doc_id)
-             where quality >= 0.7 and dwf <= 0.7 and top2 <= 0.125
-               and logit > {_CLF_THRESHOLD!r}),"""
-    else:
-        clf_ctes = ""
-        s1_sql = """s1 as (select doc_id, source, c from base
-             where quality >= 0.7 and dwf <= 0.7 and top2 <= 0.125),"""
     return f"""
-      with {docs0}raw0 as (
+      with docs0 as (select doc_id, source, text from documents),
+      raw0 as (
         select doc_id, source, text from docs0
         union all
         select doc_id + 200000, source, text from docs0 where doc_id % 40 = 0
@@ -4172,7 +3716,8 @@ def _pipeline_oracle(
       dq as (select doc_id, 'quality' as stage from base where quality < 0.7),
       dr as (select doc_id, 'repetition' as stage from base
              where quality >= 0.7 and not (dwf <= 0.7 and top2 <= 0.125)),
-      {clf_ctes}{s1_sql}
+      s1 as (select doc_id, source, c from base
+             where quality >= 0.7 and dwf <= 0.7 and top2 <= 0.125),
       s1r as (select *, row_number() over (partition by sha256(c) order by doc_id) as rn from s1),
       de as (select doc_id, 'exact_dup' as stage from s1r where rn > 1),
       s2 as (select doc_id, source, c from s1r where rn = 1),
@@ -4183,27 +3728,18 @@ def _pipeline_oracle(
              group by 1),
       dn as (select doc_id, 'near_dup' as stage from np),
       s3 as (select * from s2 where doc_id not in (select doc_id from np)),
-      {_pipeline_oracle_tail(sets, substring, classifier, paragraph)}
-    """
-
-
-def _pipeline_oracle_tail(
-    sets: str, substring: bool, classifier: bool = False, paragraph: bool = False
-) -> str:
-    """The cascade tail after near-dedup: [paragraph dedup -> |
-    substring excision ->] decontamination -> mix -> split, plus the
-    variant's final select."""
-    dcl_union = "union all select * from dcl " if classifier else ""
-    bsh = """bsh as (select distinct unnest(s) as g from (
+      bsh as (select distinct unnest(s) as g from (
                 select list_distinct(list_transform(range(greatest(len(toks) - 2, 1)),
                        i -> array_to_string(toks[i+1:i+3], ' '))) as s
                 from (select string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') as toks
-                      from documents where doc_id % 50 = 0))),"""
-    mix_tail = """fl as (select doc_id from
+                      from documents where doc_id % 50 = 0))),
+      dsh as (select t.doc_id, len(t.s) as n_sh, unnest(t.s) as g
+              from sets2 t join s3 using (doc_id)),
+      fl as (select doc_id from
              (select doc_id, n_sh, count(*) as n_o from dsh join bsh using (g) group by 1, 2)
              where round(n_o * 1.0 / greatest(n_sh, 1), 6) >= 0.5),
       dc as (select doc_id, 'contaminated' as stage from fl),
-      s4 as (select {s4_cols} from {s4_src} where doc_id not in (select doc_id from fl)),
+      s4 as (select * from s3 where doc_id not in (select doc_id from fl)),
       keptmix as (select * from s4 where case
                     when source = 'src0'
                       then substr(md5('sample:' || cast(doc_id as varchar)), 1, 2) < '40'
@@ -4211,110 +3747,16 @@ def _pipeline_oracle_tail(
                       then substr(md5('sample:' || cast(doc_id as varchar)), 1, 2) < '80'
                     else true end),
       dm as (select doc_id, 'mix' as stage from s4
-             where doc_id not in (select doc_id from keptmix))"""
-    if paragraph:
-        # paragraph-grain keep-first over s3's cleaned text (winner =
-        # min (doc_id, idx) per distinct paragraph, sub-1-char rows pass
-        # through — none exist on this corpus), docs rebuilt in index
-        # order, shingles rebuilt from the rewritten bytes, then the
-        # identical decontamination/mix tail and the substring-variant
-        # contract shape (rewritten bytes + ledger outcome)
-        return f"""pls as (select doc_id, string_split(c, chr(10)) as l from s3),
-      ppx as (select doc_id,
-                     unnest(list_transform(range(len(l)),
-                                           i -> {{'idx': i, 'para': l[i+1]}})) as u
-              from pls),
-      pp2 as (select doc_id, u.idx as idx, u.para as para from ppx),
-      pel as (select doc_id, idx, para,
-                     row_number() over (partition by para
-                                        order by doc_id, idx) as rn
-              from pp2 where length(para) >= 1),
-      pkeep as (select doc_id, idx, para from pel where rn = 1
-                union all
-                select doc_id, idx, para from pp2 where length(para) < 1),
-      pagg as (select doc_id, string_agg(para, chr(10) order by idx) as c2
-               from pkeep group by doc_id),
-      pdoc as (select s3.doc_id, s3.source, coalesce(p.c2, '') as c
-               from s3 left join pagg p using (doc_id)),
-      sets3 as ({sets.format(src='pdoc')}),
-      {bsh}
-      dsh as (select t.doc_id, len(t.s) as n_sh, unnest(t.s) as g from sets3 t),
-      {mix_tail.format(s4_cols='doc_id, source', s4_src='pdoc')},
-      ledger as (
-        select doc_id, 'kept' as stage,
-               case when substr(md5('split:' || cast(doc_id as varchar)), 1, 2) < '1a'
-                    then 'test' else 'train' end as split
-        from keptmix
-        union all
-        select doc_id, 'contaminated', cast(null as varchar) from fl
-        union all
-        select doc_id, 'mix', cast(null as varchar) from dm)
-      select x.doc_id as doc_id, x.c as clean, l.stage as stage, l.split as split
-      from pdoc x join ledger l using (doc_id)"""
-    if not substring:
-        return f"""{bsh}
-      dsh as (select t.doc_id, len(t.s) as n_sh, unnest(t.s) as g
-              from sets2 t join s3 using (doc_id)),
-      {mix_tail.format(s4_cols='*', s4_src='s3')},
-      drops as (select * from dq union all select * from dr {dcl_union}union all select * from de
+             where doc_id not in (select doc_id from keptmix)),
+      drops as (select * from dq union all select * from dr union all select * from de
                 union all select * from dn union all select * from dc union all select * from dm)
       select doc_id, true as kept, 'kept' as stage,
              case when substr(md5('split:' || cast(doc_id as varchar)), 1, 2) < '1a'
                   then 'test' else 'train' end as split
       from keptmix
       union all
-      select doc_id, false, stage, cast(null as varchar) from drops"""
-    # substring variant: keep-first span detection + excision over s3's
-    # cleaned text (k = 40, min_df = 2), shingles rebuilt from the
-    # excised bytes, then the identical decontamination/mix tail
-    return f"""sg as (select doc_id, c,
-                    unnest(range(1, greatest(len(c) - 39, 0) + 1)) as pos
-             from s3),
-      sgg as (select doc_id, cast(pos as int) as pos, substr(c, pos, 40) as gram from sg),
-      smk as (select doc_id, pos,
-                     count(*) over (partition by gram) as df,
-                     row_number() over (partition by gram order by doc_id, pos) as rn
-              from sgg),
-      sm as (select doc_id, pos from smk where df >= 2 and rn > 1),
-      sbrk as (select doc_id, pos,
-                      case when pos - lag(pos) over (partition by doc_id order by pos) <= 40
-                           then 0 else 1 end as brk
-               from sm),
-      sgrp as (select doc_id, pos,
-                      sum(brk) over (partition by doc_id order by pos) as grp
-               from sbrk),
-      sspan as (select doc_id, cast(min(pos) as int) as ss,
-                       cast(max(pos) + 40 as int) as se
-                from sgrp group by doc_id, grp),
-      ssp as (select doc_id, list({{'s': ss, 'e': se}} order by ss) as sps
-              from sspan group by doc_id),
-      excised as (
-        select s3.doc_id, s3.source,
-               case when sp.sps is null then s3.c
-                    else array_to_string(list_transform(
-                      range(len(sp.sps) + 1), i ->
-                        substr(s3.c,
-                          case when i = 0 then 1 else sp.sps[i].e end,
-                          (case when i = len(sp.sps) then len(s3.c) + 1
-                                else sp.sps[i + 1].s end)
-                          - (case when i = 0 then 1 else sp.sps[i].e end))), '')
-               end as c
-        from s3 left join ssp sp using (doc_id)),
-      sets3 as ({sets.format(src='excised')}),
-      {bsh}
-      dsh as (select t.doc_id, len(t.s) as n_sh, unnest(t.s) as g from sets3 t),
-      {mix_tail.format(s4_cols='doc_id, source', s4_src='excised')},
-      ledger as (
-        select doc_id, 'kept' as stage,
-               case when substr(md5('split:' || cast(doc_id as varchar)), 1, 2) < '1a'
-                    then 'test' else 'train' end as split
-        from keptmix
-        union all
-        select doc_id, 'contaminated', cast(null as varchar) from fl
-        union all
-        select doc_id, 'mix', cast(null as varchar) from dm)
-      select x.doc_id as doc_id, x.c as clean, l.stage as stage, l.split as split
-      from excised x join ledger l using (doc_id)"""
+      select doc_id, false, stage, cast(null as varchar) from drops
+    """
 
 
 def oracle_sql() -> dict[str, str]:

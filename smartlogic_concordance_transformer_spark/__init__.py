@@ -9,15 +9,15 @@ source-code repositories:
 
 Pipeline stages (see SURVEY.md section 2 for the operator map):
 
-    parse      -- vectorized pandas UDF: JSON-LD -> typed struct
-    transform  -- validation + deterministic UUID derivation + concordance
-                  assembly, all native Column expressions (codegen'd)
-    encode     -- byte-exact UPP concordance JSON (reference key order)
+    transform  -- parse + validation + deterministic UUID derivation +
+                  concordance assembly in one Arrow-batched pandas UDF
+                  (pyfold.py); byte-exact UPP concordance JSON
     triples    -- (subj, pred, obj) edge/node emission + tombstone ops
     cc         -- iterative connected components for entity linking
     io_tables  -- partitioned sink + checkpoint ledger (resume)
-    datapipe   -- dedup / similarity / text-analysis operators for
-                  large-scale training-data pipelines
+    pipeline   -- the batch KG job; streaming -- the same job per micro-batch
+    datapipe   -- dedup / similarity / text-analysis operators and the
+                  pretraining-data curation cascade
 """
 
 __version__ = "0.1.0"

@@ -8,14 +8,16 @@ run would execute, as ONE DataFrame DAG over the library operators:
       -> stratified mix -> deterministic train/test split
 
 Every stage is individually oracle-checked elsewhere; this module proves
-they COMPOSE — column contracts line up, the shared ``shingles`` builder
-keeps gram semantics identical across dedup/decontamination, and the
-whole cascade stays a lazy plan (no driver-side data movement).
+they COMPOSE — column contracts line up, and the shared ``shingles``
+builder keeps gram semantics identical across dedup/decontamination.
+Building the plan is NOT free of driver work: ``strip_boilerplate``
+(``via='auto'``) collects the boilerplate-line dictionary to the driver
+while the cascade is being built, and the lineage barriers below run
+their jobs when the ledger is first consumed.
 
 Output is a per-document ledger (doc_id, kept, stage, split): ``stage``
 is the first stage that dropped the doc ('quality', 'repetition',
-['classifier',] 'exact_dup', 'near_dup', 'contaminated', 'mix') or
-'kept'; ``split`` is
+'exact_dup', 'near_dup', 'contaminated', 'mix') or 'kept'; ``split`` is
 'train'/'test' for kept docs, null otherwise.
 
 Scale shape: the cleaned corpus (clean text + per-doc quality/repetition
@@ -32,7 +34,7 @@ count). Stage scan counts over
 the materialized base: exact dedup 1 (hash window), near-dedup 2
 (signature agg + candidate verify), decontamination 1 (explode +
 broadcast join), mix/split 0 extra (pure projections on survivors).
-Nothing all-pairs, nothing collected.
+Nothing all-pairs.
 """
 
 from __future__ import annotations
@@ -71,17 +73,13 @@ def pretraining_pipeline(
     mix_fractions: dict[str, int] | None = None,
     boilerplate_min_docs: int = 5,
     shingle_k: int = 3,
-    paragraph_dedup: bool = False,
-    paragraph_min_chars: int = 1,
-    substring_dedup: bool = False,
-    substring_k: int = 50,
-    classifier_weights: dict[str, int] | None = None,
-    classifier_threshold: float = 0.0,
     materialize: Callable[[DataFrame, str], DataFrame] | None = None,
 ) -> DataFrame:
     """Run the full curation cascade; returns the per-doc ledger.
 
-    ``docs``: (key_col, strata_col, text_col) raw corpus.
+    ``docs``: (key_col, strata_col, text_col) raw corpus; ``key_col``
+    must be unique and non-null (the drop stages attach by key — see
+    ``dedup.exact_dedup``).
     ``benchmark``: (text_col,) eval corpus for decontamination (may
     overlap the training corpus — leaked eval sets are the point).
     Near-dedup drops the larger key of every verified pair (deterministic
@@ -96,37 +94,7 @@ def pretraining_pipeline(
     run becomes resumable per stage via the stage ledger (a rerun over
     the same root reuses completed stages), which is the 100 TB shape
     the module docstring describes. Stage names, in write order:
-    cleaned, base, s2, sigs, dup_keys, [paragraphs,] [excised,]
-    flagged, kept_mix.
-
-    ``paragraph_dedup``: insert a paragraph-grain dedup stage (the
-    RefinedWeb rule) between near-dedup and the substring/decon tail —
-    each distinct paragraph keeps only its corpus-wide first occurrence
-    (lowest ``(key, idx)``), documents are REWRITTEN in place (no new
-    drop stage), and the shingle column rebuilds from the rewritten
-    text. Paragraphs shorter than ``paragraph_min_chars`` pass through.
-    Stage name: 'paragraphs'. Composes with ``substring_dedup`` —
-    paragraph grain first (cheap exact line hashing), substring spans
-    on what survives.
-
-    ``substring_dedup``: insert a substring-level dedup stage (Lee et
-    al. 2022) between near-dedup and decontamination — duplicated
-    >= ``substring_k``-char spans are excised from the survivors,
-    keeping each duplicated gram's corpus-wide first copy. The stage
-    REWRITES documents rather than dropping them (the ledger gains no
-    new drop stage); with a durable ``materialize`` the 'excised' table
-    is the run's curated-text artifact. The shingle column is REBUILT
-    from the excised text so decontamination judges what training will
-    actually see, not pre-excision grams.
-
-    ``classifier_weights``: enable the model-based quality gate (the
-    CCNet / Llama 'quality classifier' stage): a trained token -> integer
-    milli-weight vocabulary applied via ``text.classifier_logit`` over
-    the CLEANED text; docs whose mean-pooled logit is <=
-    ``classifier_threshold`` drop with stage 'classifier'. The gate runs
-    AFTER the heuristic quality/repetition gates (cheap rules first,
-    model second — the standard cascade order) and adds no shuffle: the
-    logit is an in-row fold over the already-barriered base.
+    cleaned, base, s2, sigs, dup_keys, flagged, kept_mix.
     """
     mix_fractions = mix_fractions or {}
     barrier = materialize or (lambda df, stage: df.localCheckpoint(eager=False))
@@ -178,22 +146,7 @@ def pretraining_pipeline(
     )
     drops_quality = _drop(base.filter(~q_ok), key_col, "quality")
     drops_rep = _drop(base.filter(q_ok & ~r_ok), key_col, "repetition")
-
-    # -- model-based quality gate (optional): cheap heuristic rules
-    # above prune first, the classifier judges only their survivors —
-    # in-row fold over the barriered base, no new scan, no shuffle
-    if classifier_weights is not None:
-        from .text import classifier_logit
-
-        c_ok = (
-            classifier_logit(F.col("clean"), classifier_weights)
-            > classifier_threshold
-        )
-        drops_clf = _drop(base.filter(q_ok & r_ok & ~c_ok), key_col, "classifier")
-        s1 = base.filter(q_ok & r_ok & c_ok)
-    else:
-        drops_clf = None
-        s1 = base.filter(q_ok & r_ok)
+    s1 = base.filter(q_ok & r_ok)
 
     # -- exact dedup (lowest key survives). r8: decide with small rows,
     # move big rows never (guide §8) — the former shape ranked a window
@@ -265,45 +218,6 @@ def pretraining_pipeline(
     drops_near = _drop(s2.join(dup_keys, key_col, "left_semi"), key_col, "near_dup")
     s3 = s2.join(dup_keys, key_col, "left_anti")
 
-    if paragraph_dedup:
-        # -- paragraph-grain dedup (RefinedWeb): excise every non-first
-        # occurrence of each distinct paragraph from the near-dedup
-        # survivors. Whole-document grain above caught copies; this
-        # catches the shared LINE (quote blocks, license footers, the
-        # corpus-wide scrubbed-PII line) inside otherwise-distinct docs.
-        # Shingles rebuild so downstream stages judge the rewritten text.
-        from .dedup import paragraph_dedup as _paragraph_dedup
-
-        s3 = (
-            _paragraph_dedup(
-                s3, text_col="clean", key_col=key_col,
-                min_chars=paragraph_min_chars, clean_col="clean",
-            )
-            .drop("n_dropped")
-            .withColumn("_sh", shingles("clean", shingle_k))
-        )
-        s3 = barrier(s3, "paragraphs")
-
-    if substring_dedup:
-        # -- substring-level dedup (Lee et al. 2022): cut duplicated
-        # >= substring_k-char spans out of the near-dedup survivors,
-        # keep-first. Whole-document grain above caught copies; this
-        # catches the shared boilerplate/citation/disclaimer RUNS inside
-        # otherwise-distinct documents. Shingles rebuild from the excised
-        # text — decontamination must judge post-excision content — and
-        # the stage barriers: the span join subgraph is expensive lineage
-        # every downstream consumer would otherwise replay.
-        from .dedup import excise_duplicate_substrings
-
-        s3 = (
-            excise_duplicate_substrings(
-                s3, text_col="clean", key_col=key_col, k=substring_k,
-                keep_first=True, clean_col="clean",
-            )
-            .withColumn("_sh", shingles("clean", shingle_k))
-        )
-        s3 = barrier(s3, "excised")
-
     # -- benchmark decontamination, length-normalized threshold
     flagged = (
         flag_contaminated(
@@ -338,8 +252,6 @@ def pretraining_pipeline(
 
     out = kept
     parts = [drops_quality, drops_rep, drops_exact, drops_near, drops_con, drops_mix]
-    if drops_clf is not None:
-        parts.insert(2, drops_clf)
     for part in parts:
         out = out.unionByName(part)
     return out

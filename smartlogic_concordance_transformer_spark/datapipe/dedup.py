@@ -27,6 +27,12 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") 
     """Keep one row per distinct text (lowest key wins). Returns the
     surviving rows.
 
+    Precondition: ``key_col`` is unique and non-null. The survivors are
+    an anti-join on the key, so rows sharing a duplicated key are ALL
+    removed when one of them loses, and a null-key loser is never
+    removed (null keys do not equi-join). The same holds for the
+    exact-dedup stage of ``curation.pretraining_pipeline``.
+
     r8, guide §8 (decide with small rows, move big rows never): the
     former shape ranked a window partitioned by the content hash over
     the FULL input rows — hashing first did not slim the exchange, the

@@ -390,8 +390,8 @@ def spherical_assign(
     assignment semantic-dedup needs: cos(s*x, c) == cos(x, c) bit-exactly
     in IEEE for power-of-two s, and to the working precision for any
     s > 0, so rescaled duplicates land in the same cell without any
-    pre-normalization pass over the corpus. Same batched-matmul kernel
-    shape as ``ivf_assign`` (one numpy matmul per Arrow batch); the full
+    pre-normalization pass over the corpus. One numpy pass per Arrow
+    batch with per-row reductions (see the kernel note); the full
     cosine formula (not the argmax-equivalent dropped-norm shortcut) is
     computed so an independent verifier evaluating cos(x, c_j) literally
     agrees to the last ulp wherever summation order doesn't bite."""
@@ -399,7 +399,6 @@ def spherical_assign(
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype="float64")  # k x d
-    CT = C.T
     cn = np.sqrt((C * C).sum(axis=1))  # k
 
     # no type hints: stringified annotations break closure pandas_udfs
@@ -409,7 +408,7 @@ def spherical_assign(
             return pd.DataFrame({"cell": [], "ccos": []})
         vals = v.to_numpy()
         ok = np.fromiter(
-            (x is not None and len(x) == CT.shape[0] for x in vals),
+            (x is not None and len(x) == C.shape[1] for x in vals),
             count=len(vals),
             dtype=bool,
         )
@@ -418,7 +417,13 @@ def spherical_assign(
         if ok.any():
             X = np.vstack(vals[ok])  # n_ok x d
             xn = np.sqrt((X * X).sum(axis=1))  # n_ok
-            scores = (X @ CT) / (xn[:, None] * cn[None, :])
+            # per-row reductions, not a matmul: BLAS may round a row's dot
+            # product differently depending on the batch shape it sits in,
+            # which broke the bit-exact tie between a vector and its
+            # power-of-two-scaled twin whenever the two landed in
+            # different Arrow batches
+            dots = np.stack([(X * c).sum(axis=1) for c in C], axis=1)
+            scores = dots / (xn[:, None] * cn[None, :])
             cell[ok] = scores.argmax(axis=1).astype("int32")
             ccos[ok] = scores.max(axis=1)
         return pd.DataFrame({"cell": cell, "ccos": ccos})

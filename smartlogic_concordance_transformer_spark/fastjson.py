@@ -6,11 +6,9 @@ bench payload, ~16% of the whole per-doc fold) when importable, stdlib
 otherwise. Import-try gated per the environment rules: nothing outside the
 stdlib is assumed present.
 
-BOTH engines (the SQL-path ``parse.py`` UDF and the fused Arrow fold in
-``pyfold.py``) must import ``loads`` from here: the malformed-payload
-quarantine error embeds the decoder's exception text, and the
-engine-equality suite pins the two engines byte-equal — sharing one
-decoder keeps that invariant regardless of which library is installed.
+The fold in ``pyfold.py`` imports ``loads`` from here. The
+malformed-payload quarantine error embeds the decoder's exception text,
+so that text depends on which library is installed.
 
 Semantics alignment: orjson rejects NaN/Infinity literals and parses
 integers beyond the 64-bit range as float64 (both behaviors match Go
@@ -19,9 +17,8 @@ than stdlib's accept-NaN / arbitrary-precision-int). So that
 valid/quarantine ROUTING and parsed values cannot depend on which
 library happens to be installed, the stdlib fallback mirrors both via
 ``parse_constant``/``parse_int`` hooks (verified in tests). The
-exception TEXT still differs between libraries — within one environment
-both engines share this one decoder, which is what the engine-equality
-byte contract requires.
+exception TEXT still differs between libraries, which is why tests
+compare JSON parse errors by status only.
 """
 
 from __future__ import annotations

@@ -1,21 +1,21 @@
-"""Fused Arrow engine: parse + validate + derive + assemble in ONE
-Arrow-batched pandas UDF.
+"""The KG fold: parse + validate + derive + assemble in ONE Arrow-batched
+pandas UDF (one call per ~10k-row Arrow batch, no per-row Python at the
+Spark level).
 
-Why this exists alongside the pure-SQL engine in transform.py: the per-doc
-fold uses higher-order array functions on the SQL path, and Spark
-evaluates HOF lambdas interpreted (CodegenFallback) — measured ~900us/doc
-on this workload. The same fold in plain Python is ~53us/doc (17x), and
-Python workers are separate processes, so it also *scales* better than a
-shared-heap JVM under allocation pressure. ``input_hint`` mandates
-pandas/Arrow UDFs (no per-row Python at the Spark level) — this is that
-path, one UDF call per ~10k-row Arrow batch.
+Why Python rather than Column expressions: the per-document fold is a
+short sequential walk over a handful of id lists. As higher-order array
+functions Spark evaluates it interpreted (CodegenFallback) — measured
+~900us/doc on this workload, against ~53us/doc for the same fold in
+plain Python (17x), and Python workers are separate processes, so it
+also *scales* better than a shared-heap JVM under allocation pressure.
 
 Byte-exactness: the emitted JSON matches Go's ``json.Marshal`` key order
 and Spark's ``to_json`` byte-for-byte (compact separators, raw UTF-8).
-The two engines are cross-checked for equality in tests; the SQL engine
-remains the DuckDB-oracle-checkable reference.
+Tests pin it against the reference's golden fixtures and against the
+pure-Python model in ``tests/reference_model.py``.
 
-Parity map (reference file:line): see transform.py — semantics identical.
+Parity map (reference file:line): ``smartlogic/service.go:96-183`` (the
+fold), ``smartlogic/model.go:67-95`` (namespace dispatch).
 """
 
 from __future__ import annotations
@@ -36,8 +36,6 @@ _ML = "http://www.ft.com/ontology/managedlocation/"
 _ED = "http://www.ft.com/ontology/"
 _VAR = "89ab89ab89ab89ab"
 
-SYNTACTIC = "SyntacticallyIncorrect"
-SEMANTIC = "SemanticallyIncorrect"
 
 # Slim Arrow return payload. The fold's natural output (a list<struct> of
 # concordances + status/op strings per row) costs more to ship than to

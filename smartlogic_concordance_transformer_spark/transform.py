@@ -8,28 +8,14 @@ DBPedia -> Geonames -> Wikidata), deriving a UUID per id, erroring on the
 first invalid/duplicate/self-concordant id (TME/FACTSET) or skipping
 blanks/duplicates (locations).
 
-Spark-first re-expression — **zero shuffles, no UDFs** (beyond the parse
-stage's single pandas UDF): every document's fold happens *inside the row*
-with higher-order array functions:
-
-1.  envelope checks F1-F6 -> ``doc_error`` struct via ``when`` chains;
-2.  the five identifier arrays are concatenated into one ordered
-    struct array (rank, pos, authority, value) — Go's processing order
-    by construction;
-3.  blanks (F7) removed with ``filter``; validity (V1/V2) and UUID
-    derivation (U1-U3, native md5 kernels) via ``transform``;
-4.  duplicate detection (D1/D2): ``exists`` over ``slice`` of the
-    preceding elements — Go's accumulated-list membership test verbatim,
-    O(k^2) per doc on arrays of length <= ~dozens;
-5.  first error in payload order = ``element_at(filter(...), 1)`` — the
-    array is already ordered;
-6.  concordances = ``filter`` + ``transform`` into the output structs.
-
-Scale shape: the whole operator chain is one narrow projection pipeline —
-parse -> validate -> derive -> assemble runs in a single stage with no
-exchange, so it scales embarrassingly to any row count; the only shuffles
-in the job are whatever the *sink* needs (partitioning) and the optional
-cross-document CC pass.
+Spark shape: that fold runs in ONE Arrow-batched pandas UDF
+(``pyfold.convert_udf``) inside a single narrow projection — no shuffle,
+no join. The UDF returns a slim payload (status code, error, concept
+uuid, authority, concordances pre-serialized as JSON); this module
+rebuilds everything user-facing natively: status/http from the code, the
+concordance struct array with ``from_json``, and the byte-exact
+``upp_json`` as a plain concat. The only shuffles in the job are whatever
+the *sink* needs (partitioning) and the optional cross-document CC pass.
 """
 
 from __future__ import annotations
@@ -37,392 +23,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parse import parse_concept
-from .uuids import ft_factset_uuid, ft_md5_uuid
+from .pyfold import convert_udf
 
-# Statuses (service.go:35-41) and their HTTP codes (handlers.go:148-166).
+# Statuses (service.go:35-41); their HTTP codes (handlers.go:148-166)
+# are mapped in _http_code.
 SYNTACTICALLY_INCORRECT = "SyntacticallyIncorrect"
 SEMANTICALLY_INCORRECT = "SemanticallyIncorrect"
 VALID_CONCEPT = "ValidConcept"
-STATUS_HTTP = {
-    SYNTACTICALLY_INCORRECT: 400,
-    SEMANTICALLY_INCORRECT: 422,
-    VALID_CONCEPT: 200,
-}
 
-THING_PREFIX = "http://www.ft.com/thing/"
-LOCATION_PREFIX = "http://www.ft.com/ontology/managedlocation/"
-UUID_RE = "^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$"
-TME_RE = "^[^-]+-[^-]+$"          # exactly two non-empty '-'-parts (service.go:293-299)
-FACTSET_RE = "^0.{5}-E$"          # len 8, leading '0', '-E' suffix (service.go:301-304)
-
-# Authority processing order (service.go:148-173).
-AUTH_TME, AUTH_FACTSET, AUTH_DBPEDIA, AUTH_GEONAMES, AUTH_WIKIDATA = (
-    "TME", "FACTSET", "DBPedia", "Geonames", "Wikidata",
-)
-AUTHORITY_RANK = {AUTH_TME: 1, AUTH_FACTSET: 2, AUTH_DBPEDIA: 3, AUTH_GEONAMES: 4, AUTH_WIKIDATA: 5}
-
-_ERR_GRAPH_MISSING = "invalid Request Json: Missing/invalid @graph field"
-_ERR_GRAPH_MULTI = (
-    "invalid Request Json: More than 1 concept in smartlogic concept payload "
-    "which is currently not supported"
-)
-_ERR_ID_MISSING = "invalid Request Json: Missing/invalid @id field"
-_ERR_TYPE_NOT_ALLOWED = "concept type not allowed"
-
-
-def parse_stage(source: DataFrame, content_col: str = "content") -> DataFrame:
-    """source_repos -> + (doc_key, concept struct). Column-pruned: only
-    ``content`` feeds the UDF; lineage columns ride along untouched."""
-    df = source.withColumn(
-        "doc_key",
-        F.sha2(
-            F.concat_ws(
-                "\x1f",
-                *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in ("repo", "path", "commit") if c in source.columns],
-                F.col(content_col),
-            ),
-            256,
-        ),
-    )
-    # E3 transaction id (handlers.go:36-41): deterministic lineage id from
-    # (repo, path, commit, content) instead of wall-clock randomness, so
-    # re-runs are reproducible and the quarantine/log rows are joinable.
-    df = df.withColumn("tid", F.concat(F.lit("tid_"), F.substring("doc_key", 1, 16)))
-    return df.withColumn("concept", parse_concept(content_col))
-
-
-def doc_validate(parsed: DataFrame) -> DataFrame:
-    """Envelope-level checks F1-F6 -> doc_error columns.
-
-    Exact error strings + status enum parity: service.go:96-143.
-    """
-    c = F.col("concept")
-    concept_uuid = F.when(
-        c["id"].startswith(THING_PREFIX)
-        & F.regexp_extract(c["id"], f"^{THING_PREFIX}(.*)$", 1).rlike(UUID_RE),
-        F.regexp_extract(c["id"], f"^{THING_PREFIX}(.*)$", 1),
-    ).when(
-        c["id"].startswith(LOCATION_PREFIX)
-        & F.regexp_extract(c["id"], f"^{LOCATION_PREFIX}(.*)$", 1).rlike(UUID_RE),
-        F.regexp_extract(c["id"], f"^{LOCATION_PREFIX}(.*)$", 1),
-    )
-    authority = F.when(
-        concept_uuid.isNotNull() & c["id"].startswith(THING_PREFIX), F.lit("Smartlogic")
-    ).when(
-        concept_uuid.isNotNull() & c["id"].startswith(LOCATION_PREFIX), F.lit("ManagedLocation")
-    )
-
-    first_type = F.try_element_at(c["types"], F.lit(1))
-    short_type = F.substring_index(first_type, "/", -1)
-
-    df = (
-        parsed.withColumn("concept_uuid", concept_uuid)
-        .withColumn("concept_authority", authority)
-        .withColumn("short_type", short_type)
-    )
-
-    err = (
-        F.when(
-            c["parse_error"].isNotNull(),
-            F.struct(
-                F.lit(SYNTACTICALLY_INCORRECT).alias("status"),
-                c["parse_error"].alias("error"),
-            ),
-        )
-        .when(
-            c["n_concepts"] == 0,
-            F.struct(F.lit(SEMANTICALLY_INCORRECT).alias("status"), F.lit(_ERR_GRAPH_MISSING).alias("error")),
-        )
-        .when(
-            c["n_concepts"] > 1,
-            F.struct(F.lit(SEMANTICALLY_INCORRECT).alias("status"), F.lit(_ERR_GRAPH_MULTI).alias("error")),
-        )
-        .when(
-            F.col("concept_uuid").isNull(),
-            F.struct(F.lit(SEMANTICALLY_INCORRECT).alias("status"), F.lit(_ERR_ID_MISSING).alias("error")),
-        )
-        .when(
-            F.size(F.coalesce(c["types"], F.array().cast("array<string>"))) == 0,
-            F.struct(
-                F.lit(SYNTACTICALLY_INCORRECT).alias("status"),
-                F.concat(
-                    F.lit("bad Request: Type has not been set for concept: "),
-                    F.col("concept_uuid"),
-                    F.lit(")"),  # trailing ')' is in the reference format string (service.go:118)
-                ).alias("error"),
-            ),
-        )
-        .when(
-            first_type == "skos:Concept",  # denylist, sole entry (service.go:46-52)
-            F.struct(F.lit(SEMANTICALLY_INCORRECT).alias("status"), F.lit(_ERR_TYPE_NOT_ALLOWED).alias("error")),
-        )
-        .when(
-            F.col("short_type").isin("Membership", "MembershipRole")
-            & (F.size(F.coalesce(c["tme"], F.array().cast("array<string>"))) > 0),
-            F.struct(
-                F.lit(SYNTACTICALLY_INCORRECT).alias("status"),
-                F.concat(
-                    F.lit("bad Request: Concept type "),
-                    F.col("short_type"),
-                    F.lit(" does not support concordance"),
-                ).alias("error"),
-            ),
-        )
-    )
-    return df.withColumn("doc_error", err)
-
-
-def _ranked_ids() -> Column:
-    """The five identifier arrays concatenated into one ordered
-    struct<rank,pos,authority,value> array — Go's processing order
-    (service.go:148-173) by construction."""
-    c = F.col("concept")
-    parts = []
-    def tag(rank: int, auth: str):
-        def fn(v, i):
-            return F.struct(
-                F.lit(rank).alias("rank"),
-                i.alias("pos"),
-                F.lit(auth).alias("authority"),
-                v.alias("value"),
-            )
-
-        return fn
-
-    for field, auth in (
-        ("tme", AUTH_TME),
-        ("factset", AUTH_FACTSET),
-        ("dbpedia", AUTH_DBPEDIA),
-        ("geonames", AUTH_GEONAMES),
-        ("wikidata", AUTH_WIKIDATA),
-    ):
-        parts.append(
-            F.transform(
-                F.coalesce(c[field], F.array().cast("array<string>")),
-                tag(AUTHORITY_RANK[auth], auth),
-            )
-        )
-    return F.concat(*parts)
-
-
-def derive_ids(doc_ok: DataFrame) -> DataFrame:
-    """Per-row id fold: blanks -> validity -> UUIDs -> dups -> first error
-    + ordered concordances. All higher-order array expressions; no shuffle.
-    """
-    # F7: blank location values skipped with a warning (service.go:255-258).
-    kept = F.filter(
-        _ranked_ids(), lambda x: ~((x["rank"] >= 3) & (F.trim(x["value"]) == ""))
-    )
-
-    def enrich(x):
-        is_tme = x["rank"] == 1
-        is_factset = x["rank"] == 2
-        valid = (
-            F.when(is_tme, x["value"].rlike(TME_RE))
-            .when(is_factset, x["value"].rlike(FACTSET_RE))
-            .otherwise(F.lit(True))
-        )
-        derived = F.when(
-            valid,
-            F.when(is_factset, ft_factset_uuid(x["value"])).otherwise(ft_md5_uuid(x["value"])),
-        )
-        return F.struct(
-            x["rank"].alias("rank"),
-            x["pos"].alias("pos"),
-            x["authority"].alias("authority"),
-            x["value"].alias("value"),
-            valid.alias("valid"),
-            derived.alias("uuid"),
-        )
-
-    df = doc_ok.withColumn("_ids", F.transform(kept, enrich))
-    # Plain string array of derived UUIDs: duplicate detection is a single
-    # array_position scan per element (no per-element slice/copy — HOF
-    # lambdas are interpreted, so allocation count dominates their cost).
-    df = df.withColumn("_uuids", F.transform(F.col("_ids"), lambda x: x["uuid"]))
-
-    # D1/D2: Go's accumulated-list membership check — element i is a dup
-    # iff an earlier element derived the same UUID (service.go:202-209,
-    # 236-243, 266-269): first occurrence index != own index.
-    def flag(x, i):
-        dup = x["uuid"].isNotNull() & (
-            F.array_position(F.col("_uuids"), x["uuid"]) < (i.cast("long") + 1)
-        )
-        self_conc = x["uuid"] == F.col("concept_uuid")
-        is_location = x["rank"] >= 3
-        error = (
-            F.when(
-                self_conc,
-                F.when(
-                    is_location,
-                    F.concat(
-                        F.lit("bad Request: Payload from Smartlogic has a Smartlogic uuid "
-                              "that is the same as the uuid generated from "),
-                        x["authority"],
-                        F.lit(" id"),
-                    ),
-                ).otherwise(
-                    F.concat(
-                        F.lit("bad Request: Payload from smartlogic has a smartlogic uuid "
-                              "that is the same as the uuid generated from the "),
-                        x["authority"],
-                        F.lit(" id"),
-                    )
-                ),
-            )
-            .when(
-                ~x["valid"],
-                F.concat(
-                    F.lit("Bad Request: Concordance id "),
-                    x["value"],
-                    F.lit(" is not a valid "),
-                    x["authority"],
-                    F.lit(" Id"),
-                ),
-            )
-            .when(
-                dup & ~is_location,
-                F.concat(
-                    F.lit("bad Request: Payload from smartlogic contains duplicate "),
-                    x["authority"],
-                    F.lit(" id values"),
-                ),
-            )
-        )
-        skip = dup & is_location
-        return F.struct(
-            x["authority"].alias("authority"),
-            x["value"].alias("value"),
-            x["uuid"].alias("uuid"),
-            error.alias("error"),
-            skip.alias("skip"),
-        )
-
-    df = df.withColumn("_flagged", F.transform(F.col("_ids"), flag))
-    first_error = F.try_element_at(
-        F.filter(F.col("_flagged"), lambda x: x["error"].isNotNull()), F.lit(1)
-    )["error"]
-    concordances = F.transform(
-        F.filter(F.col("_flagged"), lambda x: ~x["skip"]),
-        lambda x: F.struct(
-            x["authority"].alias("authority"),
-            x["value"].alias("authorityValue"),
-            x["uuid"].alias("uuid"),
-        ),
-    )
-    return (
-        df.withColumn("id_error", first_error)
-        .withColumn("concordances", concordances)
-        .drop("_ids", "_uuids", "_flagged")
-    )
-
-
-def transform_unified(
-    source: DataFrame,
-    content_col: str = "content",
-    carry: tuple[str, ...] = (),
-    engine: str = "arrow",
-) -> DataFrame:
-    """Full pipeline as ONE op-typed frame — the shape to persist before a
-    multi-sink fan-out (otherwise each sink re-runs the parse UDF over the
-    full input; at 100 TB that is one extra scan + UDF pass per sink).
-
-    Columns: doc_key, concept_uuid, authority, status, http_code, error,
-    concordances, upp_json, op [+ carry]. Valid rows have status
-    'ValidConcept' / http_code 200; quarantined rows carry the error and
-    null concordances/upp_json/op. The frame is a single narrow projection
-    (no union of filtered branches), so persisting it caches exactly one
-    parse pass.
-    """
-    carry = tuple(carry)
-    if engine == "arrow":
-        return _unified_arrow(source, content_col, carry)
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r}; use 'arrow' or 'sql'")
-
-    # SQL engine: derive_ids runs over every row (doc-error rows included —
-    # its HOF chain is null-safe and those rows are a small fraction), and a
-    # single when-chain folds doc_error/id_error into the row-wise status.
-    derived = derive_ids(doc_validate(parse_stage(source, content_col)))
-    doc_err = F.col("doc_error")
-    status = (
-        F.when(doc_err.isNotNull(), doc_err["status"])
-        .when(F.col("id_error").isNotNull(), F.lit(SYNTACTICALLY_INCORRECT))
-        .otherwise(F.lit(VALID_CONCEPT))
-    )
-    error = F.when(doc_err.isNotNull(), doc_err["error"]).otherwise(F.col("id_error"))
-    valid = status == VALID_CONCEPT
-    conc = F.when(valid, F.col("concordances"))
-    return derived.select(
-        "doc_key",
-        "concept_uuid",
-        F.when(valid, F.col("concept_authority")).alias("authority"),
-        status.alias("status"),
-        _http_code(status).alias("http_code"),
-        error.alias("error"),
-        conc.alias("concordances"),
-        # E1: byte-exact UPP JSON — key order = Go struct order
-        # (model.go:50-60); empty list stays [] (service.go:146). to_json
-        # of struct preserves field order; no nulls in the emitted fields.
-        F.when(
-            valid,
-            F.to_json(
-                F.struct(
-                    F.col("concept_authority").alias("authority"),
-                    F.col("concept_uuid").alias("uuid"),
-                    F.col("concordances"),
-                )
-            ),
-        ).alias("upp_json"),
-        F.when(
-            valid,
-            F.when(F.size("concordances") > 0, F.lit("upsert")).otherwise(F.lit("delete")),
-        ).alias("op"),
-        *carry,
-    )
-
-
-def split_unified(
-    unified: DataFrame, carry: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame]:
-    """Op-typed frame -> (concordances DF, quarantine DF); cheap filters,
-    so a persisted ``unified`` serves both without recomputing the parse."""
-    carry = tuple(carry)
-    good = unified.filter(F.col("status") == VALID_CONCEPT).select(
-        "doc_key", "concept_uuid", "authority", "concordances", *carry, "upp_json", "op"
-    )
-    quarantine = unified.filter(F.col("status") != VALID_CONCEPT).select(
-        "doc_key", "concept_uuid", "status", "error", *carry, "http_code"
-    )
-    return good, quarantine
-
-
-def transform(
-    source: DataFrame,
-    content_col: str = "content",
-    carry: tuple[str, ...] = (),
-    engine: str = "arrow",
-) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline: source table -> (concordances DF, quarantine DF).
-
-    concordances: doc_key, concept_uuid, authority, concordances (array),
-                  upp_json (byte-exact), op ('upsert'|'delete') [+ carry]
-    quarantine:   doc_key, concept_uuid, status, error [+ carry], http_code
-
-    ``carry`` columns from the source (e.g. the partition bucket, repo,
-    path) ride through to both outputs. Both engines are narrow projection
-    chains — no shuffle, no join:
-
-    * ``engine="arrow"`` (default): the fused pandas-UDF fold (pyfold.py)
-      — one Arrow batch per ~10k rows, ~17x faster per core than the
-      interpreted-HOF SQL path, scales across process-isolated workers.
-    * ``engine="sql"``: pure Column expressions (this module) — zero
-      Python beyond the parse UDF, whole-stage-codegen for the UUID
-      kernels, DuckDB-oracle-checkable. The two engines are byte-equal
-      and cross-checked in tests.
-    """
-    return split_unified(transform_unified(source, content_col, carry, engine), tuple(carry))
+_CONC_TYPE = "array<struct<authority:string,authorityValue:string,uuid:string>>"
 
 
 def _http_code(status) -> Column:
@@ -434,24 +43,26 @@ def _http_code(status) -> Column:
     )
 
 
-_CONC_TYPE = "array<struct<authority:string,authorityValue:string,uuid:string>>"
-
-
-def _unified_arrow(
-    source: DataFrame, content_col: str, carry: tuple[str, ...]
+def transform_unified(
+    source: DataFrame,
+    content_col: str = "content",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fused-UDF engine: one narrow projection, one Arrow exchange.
+    """Full pipeline as ONE op-typed frame — the shape to persist before a
+    multi-sink fan-out (otherwise each sink re-runs the parse UDF over the
+    full input; at 100 TB that is one extra scan + UDF pass per sink).
 
-    The UDF returns the slim payload (see pyfold.RESULT_SCHEMA): an int8
-    status code and the concordances pre-serialized as one JSON string.
-    Everything user-facing is reconstructed natively here — status/http
-    from the code, the struct array with ``from_json`` (Jackson), and
-    ``upp_json`` as a plain concat (authority is an enum and concept_uuid
-    is regex-validated hex, so no JSON escaping is ever needed) — which
-    keeps the Arrow exchange to scalars and halves the UDF wall time.
+    Columns: doc_key, concept_uuid, authority, status, http_code, error,
+    concordances, upp_json, op [+ carry]. Valid rows have status
+    'ValidConcept' / http_code 200; quarantined rows carry the error and
+    null concordances/upp_json/op. The frame is a single narrow projection
+    (no union of filtered branches), so persisting it caches exactly one
+    parse pass.
+
+    The fold's slim payload (see pyfold.RESULT_SCHEMA) keeps the Arrow
+    exchange to scalars: ``upp_json`` needs no JSON escaping because
+    authority is an enum and concept_uuid is regex-validated hex.
     """
-    from .pyfold import convert_udf
-
     df = source.withColumn(
         "doc_key",
         F.sha2(
@@ -483,6 +94,8 @@ def _unified_arrow(
         _http_code(status).alias("http_code"),
         r["error"].alias("error"),
         F.when(valid, F.from_json(r["conc_json"], _CONC_TYPE)).alias("concordances"),
+        # E1: byte-exact UPP JSON — key order = Go struct order
+        # (model.go:50-60); an empty list stays [] (service.go:146)
         F.when(
             valid,
             F.concat(
@@ -501,3 +114,36 @@ def _unified_arrow(
         ).alias("op"),
         *carry,
     )
+
+
+def split_unified(
+    unified: DataFrame, carry: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """Op-typed frame -> (concordances DF, quarantine DF); cheap filters,
+    so a persisted ``unified`` serves both without recomputing the parse."""
+    carry = tuple(carry)
+    good = unified.filter(F.col("status") == VALID_CONCEPT).select(
+        "doc_key", "concept_uuid", "authority", "concordances", *carry, "upp_json", "op"
+    )
+    quarantine = unified.filter(F.col("status") != VALID_CONCEPT).select(
+        "doc_key", "concept_uuid", "status", "error", *carry, "http_code"
+    )
+    return good, quarantine
+
+
+def transform(
+    source: DataFrame,
+    content_col: str = "content",
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Full pipeline: source table -> (concordances DF, quarantine DF).
+
+    concordances: doc_key, concept_uuid, authority, concordances (array),
+                  upp_json (byte-exact), op ('upsert'|'delete') [+ carry]
+    quarantine:   doc_key, concept_uuid, status, error [+ carry], http_code
+
+    ``carry`` columns from the source (e.g. the partition bucket, repo,
+    path) ride through to both outputs.
+    """
+    carry = tuple(carry)
+    return split_unified(transform_unified(source, content_col, carry), carry)

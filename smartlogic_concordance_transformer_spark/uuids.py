@@ -13,14 +13,16 @@ verified against all 13 golden UUIDs in its test suite; see SURVEY.md 2.4):
   ``MD5(MD5(id))`` — the inner digest fed as raw 16 bytes — then the same
   version/variant surgery on the outer digest only.
 
-Both are expressed here as **native Spark SQL column expressions** (``md5``,
-``unhex``, ``substring``, ``translate``, ``concat``) so that:
+The KG job derives both inside its fold (``pyfold._md5_uuid`` /
+``_factset_uuid``). This module keeps them as **native Spark SQL column
+expressions** (``md5``, ``unhex``, ``substring``, ``translate``,
+``concat``) for the ``kg_uuid_tme`` / ``kg_uuid_factset`` queries:
 
 * they run inside whole-stage codegen on the JVM — no Python in the hot
   path, no Arrow exchange, vectorized end to end;
-* the identical expression is runnable in DuckDB for the oracle check
-  (DuckDB's ``md5`` is VARCHAR-only, so only the single-MD5 kernel is
-  oracle-checkable; the FACTSET kernel is pinned by pytest goldens).
+* the single-MD5 expression is runnable in DuckDB for the oracle check
+  (DuckDB's ``md5`` is VARCHAR-only, so the FACTSET kernel's oracle is a
+  hashlib-literal table instead).
 
 Hex surgery on the 32-char lowercase digest ``h``:
 
@@ -31,8 +33,6 @@ Hex surgery on the 32-char lowercase digest ``h``:
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -90,29 +90,3 @@ def ft_md5_uuid_sql(expr: str) -> str:
         f" || substr({h},18,3) || '-' || substr({h},21,12)"
     )
 
-
-def ft_factset_uuid_sql_spark(expr: str) -> str:
-    """Spark-SQL-only fragment for the FACTSET kernel (DuckDB md5 cannot
-    digest BLOBs, so this one has no SQL oracle)."""
-    h = f"md5(unhex(md5({expr})))"
-    return (
-        f"substr({h},1,8) || '-' || substr({h},9,4) || '-3' || substr({h},14,3)"
-        f" || '-' || translate(substr({h},17,1),'0123456789abcdef','{_VARIANT_MAP}')"
-        f" || substr({h},18,3) || '-' || substr({h},21,12)"
-    )
-
-
-# Pure-Python reference implementations (test oracles, driver-side checks).
-
-def _surgery_py(h: str) -> str:
-    h = h[:12] + "3" + h[13:16] + _VARIANT_MAP[int(h[16], 16)] + h[17:]
-    return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-
-
-def ft_md5_uuid_py(value: str) -> str:
-    return _surgery_py(hashlib.md5(value.encode("utf-8")).hexdigest())
-
-
-def ft_factset_uuid_py(value: str) -> str:
-    inner = hashlib.md5(value.encode("utf-8")).digest()
-    return _surgery_py(hashlib.md5(inner).hexdigest())

@@ -24,6 +24,7 @@ from smartlogic_concordance_transformer_spark.datapipe import (
     token_count,
     winnowing_fingerprints,
 )
+from tests.repetition_fold import repetition_fold
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -334,25 +335,6 @@ def test_repetition_char_dup_fractions(spark):
     assert got[3].top_2gram_frac == 0.6
 
 
-def test_repetition_fold_equals_shuffle(spark):
-    # the zero-shuffle fold form and the round-5 explode/groupBy form are
-    # independent implementations of the same per-document statistics —
-    # they must return bit-identical rows (same integer counts, same
-    # int/int divisions) on a real corpus, with and without gram hashing
-    from smartlogic_concordance_transformer_spark.datapipe import repetition_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for hg in (True, False):
-        a = repetition_stats(
-            docs, ns=(2, 3), char_dup_ns=(2, 5), hash_grams=hg, via="fold"
-        )
-        b = repetition_stats(
-            docs, ns=(2, 3), char_dup_ns=(2, 5), hash_grams=hg, via="shuffle"
-        )
-        assert a.columns == b.columns
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_minhash_inrow_fold_equals_explode_agg(spark):
     # the r8 in-row signature fold must be bit-equal to the former
     # explode + per-seed min aggregation (the same xxhash64 chain with
@@ -381,10 +363,11 @@ def test_minhash_inrow_fold_equals_explode_agg(spark):
 
 
 def test_repetition_arrow_equals_fold(spark):
-    # the r8 Arrow kernel vs the pure-SQL fold: independent
-    # implementations of the same per-document statistics must return
-    # bit-identical rows — on the real corpus AND on an adversarial set
-    # exercising the tokenizer's JVM-parity edges (empty text, null,
+    # the library's Arrow kernel vs the pure-SQL fold kept in
+    # tests/repetition_fold.py: independent implementations of the same
+    # per-document statistics must return bit-identical rows — on the
+    # real corpus AND on an adversarial set exercising the tokenizer's
+    # JVM-parity edges (empty text, null,
     # whitespace-only, non-ASCII letters + case, NBSP which Java \s does
     # NOT treat as whitespace, blank lines, short docs below every gram
     # size, heavy exact repetition, overlapping duplicated grams)
@@ -409,20 +392,18 @@ def test_repetition_arrow_equals_fold(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for frame in (docs, adv):
         a = repetition_stats(
-            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5),
-            via="arrow",
+            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5)
         )
-        b = repetition_stats(
-            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5),
-            via="fold",
+        b = repetition_fold(
+            frame, ns=(2, 3), char_dup_ns=(2, 5), char_coverage_ns=(2, 5)
         )
         assert a.columns == b.columns
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_repetition_fold_has_no_shuffle(spark):
-    # every A1 statistic is per-document: the default fold form must stay
-    # a pure projection — no Exchange, no explode-driven Generate — so at
+    # every A1 statistic is per-document: the Arrow kernel must stay a
+    # pure projection — no Exchange, no explode-driven Generate — so at
     # 100 TB it runs at scan speed with zero cross-executor traffic
     from smartlogic_concordance_transformer_spark.datapipe import repetition_stats
 
@@ -432,9 +413,6 @@ def test_repetition_fold_has_no_shuffle(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Generate" not in plan
-
-    with __import__("pytest").raises(ValueError):
-        repetition_stats(docs, via="nope")
 
 
 def test_minhash_incremental_candidates(spark):
@@ -833,97 +811,6 @@ def test_pretraining_pipeline_stage_attribution(spark):
     assert all(r.stage == "kept" and r.split in ("train", "test") for r in kept)
     dropped = [r for r in out.values() if not r.kept]
     assert all(r.split is None for r in dropped)
-
-
-def test_pretraining_pipeline_substring_stage(spark):
-    """substring_dedup=True: duplicated >=k-char runs are excised from
-    the near-dedup survivors (keep-first), the 'excised' barrier carries
-    the rewritten text, and decontamination judges the POST-excision
-    shingles — a doc whose only benchmark overlap lives inside an excised
-    span must flip from contaminated (flag-only run) to kept."""
-    from smartlogic_concordance_transformer_spark.datapipe.curation import (
-        pretraining_pipeline,
-    )
-
-    hdr = "=== COOKIE BANNER ==="
-    disc = "all rights reserved no part of this text may be reproduced in any form"
-    unit = "the silver train hums along the quiet valley line "  # 51 chars
-    bodies = {
-        0: "the red fox runs across the open field and the morning light falls "
-           "gently on the quiet hills while distant birds call softly from the "
-           "old oak trees near the river bend",
-        1: "a small boat drifts slowly down the winding river as the fisherman "
-           "casts his line into the deep water hoping that the evening catch "
-           "will feed his family for the week",
-        2: "inside the busy kitchen the chef prepares a rich stew with fresh "
-           "herbs and root vegetables while steam rises from the copper pots "
-           "hanging above the worn wooden counter",
-        3: "the old library holds thousands of dusty books about science "
-           "history and art where students wander for hours between tall "
-           "shelves looking for that one perfect page of insight",
-        4: "heavy rain fell on the city all night filling the storm drains and "
-           "washing the empty streets clean before the sun returned to dry the "
-           "pavement in the early light",
-        # cross-doc duplication: 20 and 21 share the disclaimer sentence
-        # embedded in doc-specific lines (so hygiene cannot strip it: the
-        # trimmed LINES differ); keep-first keeps doc 20's copy
-        20: "wind turbines spin steadily on the far ridge while engineers "
-            "check the gearbox readings and log every small vibration in "
-            "their worn field notebooks before the evening shift",
-        21: "the night market fills with the smell of grilled corn and sweet "
-            "tea as vendors call out prices and children weave between the "
-            "crowded stalls under strings of paper lanterns",
-        # within-doc duplication: 22 repeats a 51-char run back to back
-        22: "the observatory dome opens slowly at dusk and the astronomer "
-            "aligns the mirror toward a faint cluster while crickets sing "
-            "in the dry grass outside the white walls",
-    }
-    rows = (
-        [(i, "web", f"{hdr}\n{bodies[i]}") for i in range(5)]
-        + [
-            (20, "web", f"{hdr}\n{bodies[20]}\nnote20 {disc}"),
-            (21, "web", f"{hdr}\n{bodies[21]}\nnote21 {disc}"),
-            (22, "web", f"{hdr}\n{bodies[22]}\nrep22 {unit}{unit}"),
-        ]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    bench = spark.createDataFrame([(disc,)], "text string")
-
-    captured = {}
-
-    def hook(df, stage):
-        out = df.localCheckpoint(eager=False)
-        captured[stage] = out
-        return out
-
-    kwargs = dict(mix_fractions={}, boilerplate_min_docs=5, contamination_frac=0.15)
-    out = {
-        r.doc_id: r
-        for r in pretraining_pipeline(
-            docs, bench, substring_dedup=True, substring_k=30,
-            materialize=hook, **kwargs
-        ).collect()
-    }
-    assert len(out) == len(rows)  # rewrite stage drops no ledger rows
-    ex = {r.doc_id: r.clean for r in captured["excised"].collect()}
-    # keep-first: doc 20 (corpus-wide first occurrence) keeps the
-    # disclaimer; doc 21's copy is excised
-    assert disc in ex[20]
-    assert "rights reserved" not in ex[21] and bodies[21] in ex[21]
-    # within-doc: the back-to-back second copy collapses to one
-    assert ex[22].count("silver train") == 1 and bodies[22] in ex[22]
-    # decontamination judged POST-excision text: the disclaimer keeper is
-    # flagged, the doc whose copy was excised survives
-    assert out[20].stage == "contaminated" and not out[20].kept
-    assert out[21].kept and out[22].kept
-    # ...and flipping the stage off makes doc 21 contaminated — the
-    # excision, not the corpus, is what saved it
-    out_plain = {
-        r.doc_id: r
-        for r in pretraining_pipeline(docs, bench, **kwargs).collect()
-    }
-    assert out_plain[21].stage == "contaminated"
-    assert out_plain[20].stage == "contaminated"
 
 
 def test_asof_join_backward_semantics(spark):

@@ -66,17 +66,16 @@ def test_raw_corpus_jaccard_band_is_empty():
     )
 
 
-@pytest.mark.parametrize("plant", [False, True], ids=["e2e", "substring"])
-def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, plant):
+@pytest.mark.parametrize("corpus", ["e2e"])
+def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, corpus):
     """pipeline_e2e's near-dedup (threshold 0.8, CLEANED text) does NOT
     have an empty band — 8 qualifying pairs sit in [0.857, 0.898) on the
     shipped corpus — so its engine=oracle equality rests on the stronger,
     deterministic fact asserted here: the fixed-seed 16x4 MinHash banding
     produces a candidate set that covers EVERY all-pairs qualifying pair
     of the cleaned corpus. (The pipeline's s2 stage is a subset of the
-    cleaned corpus, so coverage here implies coverage there.) Checked on
-    BOTH corpora: the pipeline_e2e one and the substring-planted
-    pipeline_substring one (plants perturb shingle sets slightly)."""
+    cleaned corpus, so coverage here implies coverage there.) ``corpus``
+    names the ``_pipeline_raw`` corpus checked: the pipeline_e2e one."""
     from pyspark.sql import functions as F
 
     from smartlogic_concordance_transformer_spark.datapipe.dedup import (
@@ -89,7 +88,7 @@ def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, plant):
     )
     from smartlogic_concordance_transformer_spark.datapipe.text import scrub_pii
 
-    raw, _ = entry._pipeline_raw(spark, SF_DIR, plant_substrings=plant)
+    raw, _ = entry._pipeline_raw(spark, SF_DIR)
     cleaned = strip_boilerplate(raw, min_docs=5).select(
         "doc_id", scrub_pii(F.col("clean_text")).alias("text")
     ).localCheckpoint(eager=False)
@@ -118,59 +117,6 @@ def test_pipeline_lsh_candidates_cover_qualifying_pairs(spark, plant):
         "corpus; pipeline_e2e's engine (banded) would diverge from its "
         "all-pairs oracle — regenerate the corpus or widen the banding"
     )
-
-
-def test_pipeline_substring_stage_fires(spark):
-    """pipeline_substring's engine=oracle hash equality would also hold
-    if the excision stage silently no-opped (both sides would emit the
-    unrewritten text) — assert the planted duplication actually fires on
-    the shipped corpus: keep-first leaves exactly ONE copy of the planted
-    cross-doc disclaimer and of the corpus-wide scrubbed PII line, and
-    every planted within-doc back-to-back repeat is collapsed."""
-    con = _con()
-    firsts = dict(
-        con.execute(
-            "select doc_id, substr(text, 1, 60) from read_parquet(?) "
-            "where doc_id % 45 = 13",
-            [os.path.join(SF_DIR, "documents.parquet")],
-        ).fetchall()
-    )
-    by_id = {
-        r.doc_id: r.clean for r in entry.q_pipeline_substring(spark, SF_DIR).collect()
-    }
-    disc_docs = [i for i in by_id if i % 30 == 7]
-    assert len(disc_docs) >= 2, "planted disclaimer docs dropped before excision"
-    assert sum(entry._SUB_DISC in by_id[i] for i in disc_docs) == 1
-    pii = "contact <EMAIL> or <PHONE> ssn <SSN> card <CC> ip <IP>"
-    assert sum(pii in c for c in by_id.values()) == 1
-    rep_docs = [i for i in by_id if i % 45 == 13]
-    assert rep_docs, "planted within-doc repeat docs dropped before excision"
-    for i in rep_docs:
-        u = firsts[i]
-        assert u + u not in by_id[i] and by_id[i].count(u) <= 1
-
-
-def test_pipeline_paragraph_stage_fires(spark):
-    """pipeline_paragraph's engine=oracle hash equality would also hold
-    if the paragraph stage silently no-opped — assert the planted
-    duplication actually fires on the shipped corpus: keep-first leaves
-    exactly ONE copy of each planted community-guidelines group line and
-    exactly ONE copy of the corpus-wide scrubbed PII line, and every
-    non-winner planted doc had its line excised (not the doc dropped)."""
-    by_id = {
-        r.doc_id: r.clean for r in entry.q_pipeline_paragraph(spark, SF_DIR).collect()
-    }
-    planted = [i for i in by_id if i % 55 == 19]
-    assert len(planted) >= 4, "planted paragraph docs dropped before the stage"
-    for g in range(3):
-        line = f"community guidelines apply to group {g}"
-        group_docs = [i for i in planted if i % 3 == g]
-        if not group_docs:
-            continue
-        hits = [i for i in group_docs if line in by_id[i]]
-        assert hits == [min(group_docs)], (g, hits, group_docs)
-    pii = "contact <EMAIL> or <PHONE> ssn <SSN> card <CC> ip <IP>"
-    assert sum(pii in c for c in by_id.values()) == 1
 
 
 def test_sim_ivf_float_separation():
@@ -324,45 +270,3 @@ def test_semantic_cell_and_pair_margins():
         f"within-cell pair cosine sits {pair_margin:.3e} from the 0.99 "
         "threshold — too close for cross-engine float agreement"
     )
-
-
-def test_pipeline_classifier_stage_fires(spark):
-    """pipeline_classifier's hash equality would also hold if the model
-    gate silently no-opped AND no doc were planted — assert the gate
-    actually decides on the shipped corpus: every planted 35k+11 base
-    doc reaches the classifier (not eaten by an earlier stage) and
-    drops there with >=10x logit margin, and no unplanted doc is
-    touched by it (invented tokens => logit exactly 0.0)."""
-    rows = entry.q_pipeline_classifier(spark, SF_DIR).collect()
-    by_stage: dict[str, list[int]] = {}
-    for r in rows:
-        by_stage.setdefault(r["stage"], []).append(r["doc_id"])
-    clf = by_stage.get("classifier", [])
-    planted = [
-        i for i in {r["doc_id"] for r in rows}
-        if i % 35 == 11 and i < 200000  # base family, not twin/spam ids
-    ]
-    assert planted, "corpus has no 35k+11 docs"
-    assert sorted(clf) == sorted(planted), (
-        "classifier stage must catch exactly the planted family: "
-        f"extra={sorted(set(clf) - set(planted))[:5]} "
-        f"missed={sorted(set(planted) - set(clf))[:5]}"
-    )
-    # margin check: the weakest planted doc clears the threshold 5x even
-    # on RAW text (banner/PII/footer tokens included — the actual gate
-    # runs on CLEANED text, which is strictly shorter, i.e. strictly
-    # more negative than this bound)
-    from smartlogic_concordance_transformer_spark.datapipe.text import (
-        classifier_logit,
-    )
-
-    raw, _ = entry._pipeline_raw(spark, SF_DIR, plant_classifier=True)
-    import pyspark.sql.functions as F
-
-    worst = (
-        raw.filter((F.pmod("doc_id", 35) == 11) & (F.col("doc_id") < 200000))
-        .select(classifier_logit("text", entry._CLF_WEIGHTS).alias("lg"))
-        .agg(F.max("lg"))
-        .collect()[0][0]
-    )
-    assert worst <= entry._CLF_THRESHOLD * 5

@@ -344,20 +344,17 @@ def test_token_budget_mix_two_phase_plan(spark):
 
 
 def test_repetition_with_coverage_is_zero_shuffle(spark):
-    # the true-A1 char-coverage columns must not break the fold plan's
-    # design claim: pure projection chain, no Exchange, no Generate, no
-    # Python — and the staged positional streams must stay materialized
-    # (no array_sort inlined into a get()/filter() lambda, which would
-    # re-sort per element). Library surface directly — the contract
-    # query's _spread adds its own upstream repartition exchange.
-    from smartlogic_concordance_transformer_spark.datapipe.text import (
-        repetition_stats,
-    )
+    # the pure-SQL reference fold (tests/repetition_fold.py) with the
+    # true-A1 char-coverage columns: pure projection chain, no Exchange,
+    # no Generate, no Python — and the staged positional streams must
+    # stay materialized (no array_sort inlined into a get()/filter()
+    # lambda, which would re-sort per element and make the reference
+    # too slow to cross-check the kernel on a real corpus)
+    from tests.repetition_fold import repetition_fold
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = repetition_stats(
-        docs, ns=(2, 3, 4), char_dup_ns=(5, 10), char_coverage_ns=(5, 10),
-        via="fold",
+    df = repetition_fold(
+        docs, ns=(2, 3, 4), char_dup_ns=(5, 10), char_coverage_ns=(5, 10)
     )
     plan = _plan(df)
     assert "Exchange" not in plan
@@ -369,7 +366,7 @@ def test_repetition_with_coverage_is_zero_shuffle(spark):
 
 
 def test_repetition_arrow_is_zero_shuffle_single_kernel(spark):
-    # the r8 default: same per-document contract, computed by ONE
+    # the library path: same per-document contract, computed by ONE
     # Arrow-batched kernel — no Exchange, no Generate, and exactly one
     # ArrowEvalPython (the asNondeterministic pin must keep the
     # optimizer from duplicating it below a gate filter)
@@ -471,35 +468,6 @@ def test_pack_documents_two_phase_plan(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_pipeline_classifier_gate_adds_no_exchange(spark):
-    # the model gate's design claim: an in-row fold over the already-
-    # barriered base — enabling it must not add a single Exchange (or
-    # Python eval) to the cascade plan, and disabling it must leave the
-    # ledger stage set without 'classifier'
-    from smartlogic_concordance_transformer_spark.datapipe.curation import (
-        pretraining_pipeline,
-    )
-
-    docs = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .limit(80)
-        .select("doc_id", "source", "text")
-    )
-    bench = docs.limit(5).select("text")
-    off = pretraining_pipeline(docs, bench)
-    on = pretraining_pipeline(
-        docs, bench, classifier_weights={"zzq": -1000}, classifier_threshold=-0.5
-    )
-    p_off, p_on = _plan(off), _plan(on)
-    assert p_on.count("Exchange") == p_off.count("Exchange"), (
-        p_on.count("Exchange"),
-        p_off.count("Exchange"),
-    )
-    assert "EvalPython" not in p_on
-    stages_off = {r["stage"] for r in off.select("stage").distinct().collect()}
-    assert "classifier" not in stages_off
-
-
 def test_fuzzy_match_has_no_cartesian_product(spark):
     # deletion-neighborhood blocking joins on the 8-byte variant hash;
     # all-pairs must never appear even for a pathological vocabulary
@@ -578,17 +546,6 @@ def test_cooccurrence_pmi_builds_pairs_in_row(spark):
     plan = _plan(entry.q_text_pmi(spark, SF))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # all joins broadcast at this size
-
-
-def test_event_transitions_totals_need_no_second_window(spark):
-    # per-from totals come from a groupBy joined back: downstream of the
-    # pair stream's lineage cut there must be NO window node at all (a
-    # second window over from_type would sort whole event types inside
-    # single tasks — the q_events_zscore finding)
-    import __spark_entry__ as entry
-
-    plan = _plan(entry.q_events_transitions(spark, SF))
-    assert plan.count("Window [") == 0, plan
 
 
 def test_tfidf_top_k_is_one_rank_limited_window(spark):

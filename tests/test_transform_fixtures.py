@@ -1,8 +1,13 @@
 """The reference's full correctness corpus, re-run through the Spark
-pipeline: every fixture in /root/reference/resources becomes one row of the
+pipeline: every fixture in tests/fixtures/ becomes one row of the
 source_repos table; expected outputs are transcribed from
 /root/reference/smartlogic/service_test.go:146-426 and the byte-exact
 response goldens in handlers_test.go:70-84.
+
+The 28 payloads are vendored so the gate runs anywhere; they follow the
+scenario table and payload schemas A/B in FIXTURES.md. Where the
+reference checkout exists, ``test_vendored_fixtures_match_reference``
+compares them with the originals byte for byte.
 
 The invariant is per-row sha256 equality of the emitted UPP JSON (per
 BASELINE.json input_hint), which pins key order, omitempty behavior, and
@@ -13,11 +18,17 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from smartlogic_concordance_transformer_spark.transform import parse_stage, transform
+from smartlogic_concordance_transformer_spark.transform import transform
 
-RES = "/root/reference/resources"
+RES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+# the reference repository's own payloads, where a checkout of it sits
+# next to this repository (as ``reference/``)
+REFERENCE_RES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+    "resources",
+)
 UUID = "20db1bd6-59f9-4404-adb5-3165a448f8b0"
 
 
@@ -98,18 +109,26 @@ HANDLER_GOLDENS = {
 }
 
 
-@pytest.fixture(scope="module", params=["sql", "arrow"])
-def results(spark, request):
+@pytest.fixture(scope="module")
+def results(spark):
     rows = [
         ("ft/fixtures", name, "0" * 40, "json", open(os.path.join(RES, name)).read())
         for name in sorted(os.listdir(RES))
     ]
     df = spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string")
-    keymap = {r.doc_key: r.path for r in parse_stage(df).select("doc_key", "path").collect()}
-    good, quar = transform(df, engine=request.param)
-    good_by_path = {keymap[r.doc_key]: r for r in good.collect()}
-    quar_by_path = {keymap[r.doc_key]: r for r in quar.collect()}
+    good, quar = transform(df, carry=("path",))
+    good_by_path = {r.path: r for r in good.collect()}
+    quar_by_path = {r.path: r for r in quar.collect()}
     return good_by_path, quar_by_path
+
+
+@pytest.mark.skipif(not os.path.isdir(REFERENCE_RES), reason="reference checkout not present")
+def test_vendored_fixtures_match_reference():
+    names = sorted(os.listdir(RES))
+    assert names == sorted(os.listdir(REFERENCE_RES))
+    for name in names:
+        with open(os.path.join(RES, name), "rb") as a, open(os.path.join(REFERENCE_RES, name), "rb") as b:
+            assert a.read() == b.read(), name
 
 
 def test_every_fixture_routed_exactly_once(results):

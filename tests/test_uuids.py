@@ -1,20 +1,21 @@
 """UUID kernel goldens — all 13 golden UUIDs from the reference test suite
-(/root/reference/smartlogic/service_test.go:48-91,146-315) plus a random
-cross-check between the Spark-native expression and the pure-Python
-reference implementation."""
+(smartlogic/service_test.go:48-91,146-315), pinned on the
+kernels the KG job runs: the fold's ``pyfold._md5_uuid``/``_factset_uuid``
+and the native ``uuids.ft_md5_uuid``/``ft_factset_uuid`` Column kernels
+(used by kg_uuid_tme / kg_uuid_factset), plus a random cross-check of all
+four against the reference model."""
 
 import random
 import string
 
-from pyspark.sql import functions as F
-
+from smartlogic_concordance_transformer_spark.pyfold import _factset_uuid, _md5_uuid
+from smartlogic_concordance_transformer_spark.transform import transform
 from smartlogic_concordance_transformer_spark.uuids import (
     ft_factset_uuid,
-    ft_factset_uuid_py,
     ft_md5_uuid,
-    ft_md5_uuid_py,
     ft_md5_uuid_sql,
 )
+from tests.reference_model import factset_uuid, md5_uuid
 
 MD5_GOLDENS = {
     "AbCdEfgHiJkLMnOpQrStUvWxYz-0123456789": "e9f4525a-401f-3b23-a68e-e48f314cdce6",
@@ -38,23 +39,35 @@ FACTSET_GOLDENS = {
 
 def test_python_kernels_match_goldens():
     for k, v in MD5_GOLDENS.items():
-        assert ft_md5_uuid_py(k) == v
+        assert _md5_uuid(k) == v
     for k, v in FACTSET_GOLDENS.items():
-        assert ft_factset_uuid_py(k) == v
+        assert _factset_uuid(k) == v
 
 
 def test_spark_kernels_match_goldens(spark):
-    rows = [(k,) for k in list(MD5_GOLDENS) + list(FACTSET_GOLDENS)]
-    df = spark.createDataFrame(rows, "id string").select(
-        "id",
-        ft_md5_uuid("id").alias("u_md5"),
-        ft_factset_uuid("id").alias("u_factset"),
+    df = spark.createDataFrame([(k,) for k in MD5_GOLDENS], "id string").select(
+        "id", ft_md5_uuid("id").alias("u")
     )
-    got = {r.id: (r.u_md5, r.u_factset) for r in df.collect()}
-    for k, v in MD5_GOLDENS.items():
-        assert got[k][0] == v
-    for k, v in FACTSET_GOLDENS.items():
-        assert got[k][1] == v
+    assert {r.id: r.u for r in df.collect()} == MD5_GOLDENS
+    df = spark.createDataFrame([(k,) for k in FACTSET_GOLDENS], "id string").select(
+        "id", ft_factset_uuid("id").alias("u")
+    )
+    assert {r.id: r.u for r in df.collect()} == FACTSET_GOLDENS
+    # FACTSET uuids as the KG job derives them: through the fold on Spark
+    payload = (
+        '{"@graph":[{"@id":"http://www.ft.com/thing/20db1bd6-59f9-4404-adb5-3165a448f8b0",'
+        '"@type":["http://www.ft.com/ontology/Organisation"],'
+        '"http://www.ft.com/ontology/factsetIdentifier":['
+        + ",".join('{"@value":"%s"}' % k for k in FACTSET_GOLDENS)
+        + "]}]}"
+    )
+    src = spark.createDataFrame(
+        [("r", "p", "c", "json", payload)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    good, _ = transform(src)
+    conc = good.first().concordances
+    assert {c.authorityValue: c.uuid for c in conc} == FACTSET_GOLDENS
 
 
 def test_spark_matches_python_on_random_inputs(spark):
@@ -67,8 +80,11 @@ def test_spark_matches_python_on_random_inputs(spark):
         "id", ft_md5_uuid("id").alias("a"), ft_factset_uuid("id").alias("b")
     )
     for r in df.collect():
-        assert r.a == ft_md5_uuid_py(r.id)
-        assert r.b == ft_factset_uuid_py(r.id)
+        assert r.a == md5_uuid(r.id)
+        assert r.b == factset_uuid(r.id)
+    for v in values:
+        assert _md5_uuid(v) == md5_uuid(v)
+        assert _factset_uuid(v) == factset_uuid(v)
 
 
 def test_sql_fragment_parity_spark_and_duckdb(spark):
