@@ -192,6 +192,7 @@ def q_kg_validate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _ensure_shipped(spark)  # the union-find rounds run a Python kernel
     edges = _docs(spark, sf_dir).selectExpr(
         "concat('d', lpad(cast(doc_id as string), 8, '0')) as subj",
         "concat('g', lpad(cast(pmod(doc_id, 50) as string), 4, '0')) as obj",
@@ -580,7 +581,8 @@ def q_kg_resolve_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + levenshtein verify) -> connected components -> canonical label per
     # term (singletons map to themselves). Term set capped at 300 names so
     # the oracle's recursive-CTE closure stays oracle-sized; the engine
-    # side is the same O(log^2 n) star algorithm as kg_cc.
+    # side is the same partition-local union-find rounds as kg_cc.
+    _ensure_shipped(spark)
     from smartlogic_concordance_transformer_spark.datapipe.fuzzy import (
         fuzzy_match_pairs,
     )
@@ -682,6 +684,7 @@ def q_kg_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joining group 20. The oracle recomputes the FULL updated label table
     # from scratch via the known merged-group structure; equality proves
     # incremental == full recompute including untouched pass-through rows.
+    _ensure_shipped(spark)
     from smartlogic_concordance_transformer_spark.cc import incremental_components
 
     d = _docs(spark, sf_dir)
@@ -974,7 +977,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction as dedup_lsh_verified) -> connected components ->
     # (doc, cluster representative = min doc_id in the class). The oracle
     # computes the same transitive closure with a recursive CTE — fine at
-    # oracle scale; the engine side is the O(log^2 n) star algorithm.
+    # oracle scale; the engine side is the partition-local union-find
+    # rounds of kg_cc.
+    _ensure_shipped(spark)
     pairs = q_dedup_lsh_verified(spark, sf_dir).select("a", "b")
     cc = connected_components(pairs, src="a", dst="b")
     return cc.select(
@@ -1023,6 +1028,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mirrors the cell bucketing from the same independently retrained
     # centroid literals (shared bit-deterministic kmeans kernel, see
     # sim_ivf) and re-derives pairs/components/representatives as SQL.
+    _ensure_shipped(spark)
     from smartlogic_concordance_transformer_spark.datapipe.similarity import (
         lloyd_kmeans,
         semantic_dedup,

@@ -6,34 +6,40 @@ UUID in the class. The reference has no cross-document linking at all (one
 Kafka message = one star), so this operator is new design mandated by the
 north rule, not parity.
 
-Algorithm: **alternating large-star / small-star** (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14) — converges in
-O(log^2 n) rounds regardless of graph diameter, unlike plain min-label
-propagation which needs diameter rounds (a 20k-doc synthetic corpus
-already chains shared-id components past 25 hops; found by running the
-actual spark-submit job, see tests).
+Algorithm: **rounds of partition-local union-find** (the local phase of
+BTS, "Load-Balanced Distributed Union-Find ... Balanced Tree Structures",
+ICDE'24). One round over the canonical edges ``(u, v)``, ``u > v``:
 
-Both star operations are expressed as groupBy-min + join — **never a
-collect_list of neighbors**, so a mega-hub's edge list stays distributed
-and map-side partial `min` defuses reduce-side skew automatically; AQE
-skew-join splitting handles the join side; an explicit ``salt`` pre-splits
-known-hot keys two-phase. Lineage is truncated per round with
-``localCheckpoint`` so plans don't compound.
+    route:  emit every edge twice, keyed by each endpoint; repartition
+            by the key, so ALL edges of a node meet in one partition
+    local:  per partition (``mapInArrow``), union-find over its edges,
+            smaller root wins; emit (member, local min) for every
+            non-root node, tagged ``changed`` = the partition's output
+            edge set differs from its input edge set
+    merge:  groupBy(u, v) + max(changed); localCheckpoint
 
-    large-star: for each node u, m = min(N(u) ∪ {u});
-                emit (v, m) for every neighbor v > u
-    small-star: direct edges so u >= v, m = min(N<=(u));
-                emit (v, m) for v in N<=(u), plus (u, m)
+Each round keeps connectivity and every emitted edge points down to a
+smaller id. A round where no partition changed is the fixpoint: every
+node's edges sat in one partition whose edges were already a star forest
+rooted at the local minimum, so the global edge set is a star forest
+rooted at each component's minimum. The argument needs only that all
+rows with one key share a partition — AQE coalescing keeps that, so the
+partition count changes the round count, never the result. Long paths
+take a handful of rounds: a 20k-node random-id path takes 6 over 4
+partitions, 2 once AQE coalesces it into one.
 
-Fixpoint: the small-star output edge set is stable (checked by count +
-order-insensitive hash). Result edges then form a star forest rooted at
-each component's minimum node.
+No join and no ``collect_list`` of neighbours: a hub's edges all route to
+the hub's partition every round, where union-find folds them in one pass.
+Ids keep their Spark type; string ids compare in Python code-point order,
+which is Spark's binary UTF-8 order.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 
 class ConvergenceError(RuntimeError):
@@ -47,66 +53,59 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     ).distinct()
 
 
-def _min_neighbor(edges: DataFrame, salt: int) -> DataFrame:
-    """(u, m) where m = min neighbor of u; optional two-phase salted min
-    for mega-hub keys."""
-    if salt > 1:
-        partial = (
-            edges.withColumn("_b", F.pmod(F.xxhash64("v"), F.lit(salt)))
-            .groupBy("u", "_b")
-            .agg(F.min("v").alias("v"))
-        )
-        return partial.groupBy("u").agg(F.min("v").alias("m"))
-    return edges.groupBy("u").agg(F.min("v").alias("m"))
+def _union_find_partition(batches):
+    """mapInArrow kernel: union-find over every edge of the partition,
+    smaller root wins -> (member, root, changed) per non-root node."""
+    us: list = []
+    vs: list = []
+    id_type = None
+    for b in batches:
+        id_type = b.schema.field("u").type
+        # to_numpy(...).tolist() builds the Python objects ~10x faster
+        # than to_pylist()
+        us += b.column("u").to_numpy(zero_copy_only=False).tolist()
+        vs += b.column("v").to_numpy(zero_copy_only=False).tolist()
+    if not us:
+        return
+    parent = dict(zip(vs, vs))
+    parent.update(zip(us, us))
 
+    def find(x):
+        while (p := parent[x]) != x:
+            parent[x] = x = parent[p]  # path halving
+        return x
 
-def _large_star(edges: DataFrame, salt: int) -> DataFrame:
-    # neighborhoods are over the undirected graph: symmetrize first
-    # (small-star output is directed, so this cannot be assumed).
-    # r8: NO distinct on either end of this operator — the loop feeds it
-    # small-star output, which is distinct and strictly directed (u > v),
-    # so fwd ∪ rev cannot contain duplicates (a pair would need both
-    # orientations in the input); and even under duplicate input rows the
-    # groupBy-min is unaffected while the duplicate (v, m) outputs are
-    # absorbed by small-star's own distincts in the same round. Each
-    # removed distinct was a full Exchange per round — at sf0.1 the loop
-    # is bound by per-stage scheduling latency, and at scale by shuffled
-    # bytes; both shrink.
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    for u, v in zip(us, vs):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    for x in parent:
+        parent[x] = find(x)  # full compression: parent is now root
+    members = [x for x, r in parent.items() if r != x]
+    roots = [parent[x] for x in members]
+    # The output {(x, root(x))} equals the input edge set iff every input
+    # edge already points at its root: then the members are exactly the
+    # input u's, and each u has the one edge (u, root(u)).
+    changed = any(parent[u] != v for u, v in zip(us, vs))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(members, id_type), pa.array(roots, id_type), pa.repeat(changed, len(members))],
+        names=["u", "v", "changed"],
     )
-    m = _min_neighbor(sym, salt).withColumn("m", F.least(F.col("m"), F.col("u")))
+
+
+def _union_find_round(edges: DataFrame) -> DataFrame:
+    """One round over directed (u > v) edges -> (u, v, changed), deduped."""
+    uv = edges.select("u", "v")
+    # a new StructType: DataFrame.schema is cached, so .add would mutate it
+    out_schema = StructType([*uv.schema.fields, StructField("changed", BooleanType())])
     return (
-        sym.filter(F.col("v") > F.col("u"))
-        .join(m, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
+        uv.select(F.explode(F.array("u", "v")).alias("k"), "u", "v")
+        .repartition("k")
+        .select("u", "v")
+        .mapInArrow(_union_find_partition, out_schema)
+        .groupBy("u", "v")
+        .agg(F.max("changed").alias("changed"))
     )
-
-
-def _small_star(sym: DataFrame, salt: int) -> DataFrame:
-    directed = sym.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct()
-    m = _min_neighbor(directed, salt)  # m <= all of N<=(u) < u
-    joined = directed.join(m, "u")
-    to_min = joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-    self_edge = m.select(F.col("u"), F.col("m").alias("v"))
-    return (
-        to_min.unionByName(self_edge)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"])
 
 
 def connected_components(
@@ -114,64 +113,24 @@ def connected_components(
     src: str = "subj",
     dst: str = "obj",
     max_iter: int = 40,
-    salt: int = 0,
 ) -> DataFrame:
     """Edge list -> (node, component); component = min node id reachable."""
-    # canonical directed form (u > v, distinct) — the same invariant
-    # small-star output carries, so EVERY round's large-star sees a
-    # duplicate-free input (see _large_star); also halves the initial
-    # distinct vs materializing both orientations
-    cur = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    if cur.isEmpty():
-        return cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    prev_fp = None
-    for i in range(max_iter):
-        # lazy checkpoint: the fingerprint action right below materializes
-        # it, so each round costs ONE job instead of two (eager checkpoint
-        # job + fingerprint job)
-        cur = _small_star(_large_star(cur, salt), salt).localCheckpoint(eager=False)
-        # The convergence probe is itself a full driver action. Probe
-        # every round for the first 3 (small graphs converge immediately),
-        # then every 2nd round — a skipped round's stars simply fold into
-        # the next probed job, so the action count halves on long chains.
-        # Comparing fingerprints 2 rounds apart is still sound: one round
-        # is a deterministic function of the edge set that strictly
-        # decreases the Kiveris potential until the fixpoint, so the edge
-        # set cannot 2-cycle — fp(i) == fp(i-2) already implies fp(i) is
-        # the fixpoint (a missed consecutive fixpoint only costs one
-        # extra cheap round over the final star forest). The LAST
-        # iteration always probes, so the effective iteration budget at
-        # the max_iter boundary is unchanged — a graph that used to
-        # converge exactly at max_iter still does.
-        if i >= 3 and i % 2 == 1 and i != max_iter - 1:
-            continue
-        fp = _fingerprint(cur)
-        if fp == prev_fp:
-            # star forest: every remaining edge points node -> root.
-            # r8: NO distinct on the assembled output — members rows are
-            # unique (cur is distinct), roots rows are unique (their own
-            # distinct), and the two sets are disjoint (members have
-            # node != component by the u != v filter, roots have node ==
-            # component), so the old trailing distinct was a full
-            # output-sized Exchange that could never remove a row.
+    cur = edges.select(
+        F.greatest(F.col(src), F.col(dst)).alias("u"),
+        F.least(F.col(src), F.col(dst)).alias("v"),
+    ).filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
+    for _ in range(max_iter):
+        # lazy: the convergence probe right below materializes it, so a
+        # round is one driver action
+        cur = _union_find_round(cur).localCheckpoint(eager=False)
+        if not cur.agg(F.max("changed")).first()[0]:
+            # star forest: every edge points member -> root. Members and
+            # roots are disjoint (u != v), so the union needs no distinct.
             roots = cur.select(F.col("v").alias("node")).distinct().withColumn(
                 "component", F.col("node")
             )
             members = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
             return members.unionByName(roots)
-        prev_fp = fp
     raise ConvergenceError(f"connected_components did not converge in {max_iter} iterations")
 
 

@@ -4,9 +4,8 @@ A hash join shuffles both sides by the key, so one hot key (the empty
 document, the null-ish placeholder entity, the one mega-publisher host)
 lands its entire match volume in ONE reducer task — the classic 99%-done
 straggler at 100 TB. AQE's skew-join split handles many cases after the
-fact; explicit salting is the planned-for version, and the repo already
-uses the idea inside ``cc._min_neighbor``'s two-phase min. This module is
-the general operator.
+fact; explicit salting is the planned-for version. This module is the
+general operator.
 
 Mechanics: the probe (big, skewed) side gets a salt in ``[0, salt)``
 hashed from the FULL row (hashing only the key would put the hot key back

@@ -495,7 +495,7 @@ def semantic_dedup(
     example of the duplicated content), ties broken by the smaller key.
     Rows with no duplicate partner are kept.
 
-    Shape: pairs (cell-local join) -> alternating-star connected
+    Shape: pairs (cell-local join) -> union-find connected
     components over only the paired keys (a tiny fraction of the corpus)
     -> one window over components for the representative -> broadcast-
     sized join back to the full corpus. The full corpus is scanned once

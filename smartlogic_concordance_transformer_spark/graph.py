@@ -218,11 +218,12 @@ class GraphFrame:
         kicks in automatically when the vertex side is small."""
         return _triplets_of(self._v, self._e)
 
-    def connectedComponents(self, maxIter: int = 40, salt: int = 0) -> DataFrame:
+    def connectedComponents(self, maxIter: int = 40) -> DataFrame:
         """Vertices + ``component`` (= min reachable vertex id). Routes to
-        the alternating large-star/small-star engine; isolated vertices —
-        which never appear in the edge list — are their own component."""
-        comp = connected_components(self._e, src="src", dst="dst", max_iter=maxIter, salt=salt)
+        the partition-local union-find engine (``cc.py``); isolated
+        vertices — which never appear in the edge list — are their own
+        component."""
+        comp = connected_components(self._e, src="src", dst="dst", max_iter=maxIter)
         joined = self._v.join(comp.withColumnRenamed("node", "id"), "id", "left")
         return joined.withColumn("component", F.coalesce("component", F.col("id")))
 
@@ -409,9 +410,9 @@ class GraphFrame:
         rev = self._e.select(F.col("dst").alias("id"), F.col("src").alias("prev"))
 
         def _fp(d: DataFrame) -> tuple:
-            # order-insensitive content hash (same scheme as cc._fingerprint):
-            # decimal(38,0) sum of per-row hashes — a plain (count, sum(dist))
-            # pair can collide when distances shuffle between rows.
+            # order-insensitive content hash: decimal(38,0) sum of per-row
+            # hashes — a plain (count, sum(dist)) pair can collide when
+            # distances shuffle between rows.
             row = d.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(

@@ -11,7 +11,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -160,8 +160,8 @@ def gtg_check(
     return manifest
 
 
-def write_run_manifest(root: str, metrics_df: DataFrame, extra: dict | None = None) -> dict:
-    rows = metrics_df.collect()
+def write_run_manifest(root: str, rows: list[Row], extra: dict | None = None) -> dict:
+    """Write ``run_manifest.json`` from collected ``partition_metrics`` rows."""
     # Merge with a prior manifest so a resume run (which only recomputes
     # pending buckets) updates those buckets in place instead of clobbering
     # the full-run lineage.

@@ -14,6 +14,7 @@ re-run after a kill only pays for unfinished partitions.
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +32,6 @@ def run_pipeline(
     out_root: str,
     n_buckets: int = 16,
     run_cc: bool = True,
-    cc_salt: int = 0,
 ) -> dict:
     os.makedirs(out_root, exist_ok=True)
     ledger = CheckpointLedger(out_root, n_buckets=n_buckets)
@@ -54,17 +54,18 @@ def run_pipeline(
     quarantine.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(out_root, "quarantine"))
     triples.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(out_root, "triples"))
 
-    metrics_df = partition_metrics(good, quarantine, triples, unified=unified)
-    metrics_rows = metrics_df.persist()
+    # One collect: a few rows per bucket, from which the ledger counts and
+    # the manifest are both derived.
+    metrics_rows = partition_metrics(good, quarantine, triples, unified=unified).collect()
 
     # Ledger commit per bucket, after data is durable.
-    written = {int(r["bucket"]) for r in metrics_rows.select("bucket").distinct().collect()}
-    bucket_rows = {
-        int(r["bucket"]): int(r["value"])
-        for r in metrics_rows.filter(F.col("metric").startswith("triples_")).groupBy("bucket").agg(F.sum("value").alias("value")).collect()
-    }
+    written = {int(r["bucket"]) for r in metrics_rows}
+    bucket_rows: Counter = Counter()
+    for r in metrics_rows:
+        if r["metric"].startswith("triples_"):
+            bucket_rows[int(r["bucket"])] += int(r["value"])
     for b in sorted(written - done):
-        ledger.record(b, rows=bucket_rows.get(b, 0))
+        ledger.record(b, rows=bucket_rows[b])
     # Buckets with zero surviving docs still need a ledger mark.
     for b in sorted(set(range(n_buckets)) - done - written):
         ledger.record(b, rows=0)
@@ -75,12 +76,11 @@ def run_pipeline(
             spark.read.parquet(os.path.join(out_root, "triples"))
             .filter((F.col("pred") == "concordsWith") & (F.col("op") == "upsert"))
         )
-        canon = canonical_triples(edges, salt=cc_salt)
+        canon = canonical_triples(edges)
         canon.write.mode("overwrite").parquet(os.path.join(out_root, "canonical_triples"))
         extra["canonical_edges"] = spark.read.parquet(os.path.join(out_root, "canonical_triples")).count()
 
     manifest = write_run_manifest(out_root, metrics_rows, extra=extra)
-    metrics_rows.unpersist()
     unified.unpersist()
 
     # GTG: the batch analog of the reference healthcheck/__gtg surface

@@ -4,7 +4,7 @@
     zip -r pkg.zip smartlogic_concordance_transformer_spark
     spark-submit --py-files pkg.zip submit/main.py \
         --source /path/to/source_repos_parquet \
-        --out /path/to/graph_out --buckets 256 --cc --cc-salt 16
+        --out /path/to/graph_out --buckets 256 --cc
 
 Reads the (repo, path, commit, lang, content) table, runs the resumable
 pipeline (parse -> validate -> derive -> triples -> ledger-committed
@@ -29,7 +29,6 @@ def main() -> int:
     p.add_argument("--out", required=True, help="output root for graph tables + ledger")
     p.add_argument("--buckets", type=int, default=64, help="checkpoint/resume partition count")
     p.add_argument("--cc", action="store_true", help="run connected-components canonicalization")
-    p.add_argument("--cc-salt", type=int, default=0, help="salt buckets for hot CC keys")
     p.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     args = p.parse_args()
     if not args.source and not args.generate:
@@ -50,9 +49,7 @@ def main() -> int:
     else:
         source = spark.read.parquet(args.source)
 
-    manifest = run_pipeline(
-        spark, source, args.out, n_buckets=args.buckets, run_cc=args.cc, cc_salt=args.cc_salt
-    )
+    manifest = run_pipeline(spark, source, args.out, n_buckets=args.buckets, run_cc=args.cc)
     print(json.dumps(manifest, indent=2, sort_keys=True))
     return 0
 

@@ -33,25 +33,115 @@ def union_find_components(edges):
     return {n: find(n) for n in parent}
 
 
-@pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 50, 40), (2, 200, 150), (3, 300, 600)])
-def test_cc_matches_union_find(spark, seed, n_nodes, n_edges):
+def _canonical(roots):
+    """union-find roots -> component min per node."""
+    comp_min = {}
+    for n, root in roots.items():
+        comp_min[root] = min(comp_min.get(root, n), n)
+    return {n: comp_min[root] for n, root in roots.items()}
+
+
+def _random_edges(seed, n_nodes, n_edges):
     rng = random.Random(seed)
     edges = [
         (f"n{rng.randrange(n_nodes):04d}", f"n{rng.randrange(n_nodes):04d}")
         for _ in range(n_edges)
     ]
-    edges = [(u, v) for u, v in edges if u != v]
-    expected = union_find_components(edges)
-    # canonical root per component = min node id
-    comp_min = {}
-    for n, root in expected.items():
-        comp_min.setdefault(root, n)
-        comp_min[root] = min(comp_min[root], n)
-    expected_canon = {n: comp_min[root] for n, root in expected.items()}
+    return [(u, v) for u, v in edges if u != v]
 
+
+GRAPHS = [(1, 50, 40), (2, 200, 150), (3, 300, 600)]
+
+
+@pytest.mark.parametrize("seed,n_nodes,n_edges", GRAPHS)
+def test_cc_matches_union_find(spark, seed, n_nodes, n_edges):
+    edges = _random_edges(seed, n_nodes, n_edges)
     df = spark.createDataFrame(edges, "subj string, obj string")
     got = {r.node: r.component for r in connected_components(df).collect()}
-    assert got == expected_canon
+    assert got == _canonical(union_find_components(edges))
+
+
+@pytest.mark.parametrize("partitions", [1, 3, 8])
+def test_cc_partition_count_invariant(spark, partitions):
+    # correctness needs only "one routing key -> one partition"; with
+    # coalescing off the round really runs over `partitions` tasks
+    conf = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for seed, n_nodes, n_edges in GRAPHS:
+            edges = _random_edges(seed, n_nodes, n_edges)
+            df = spark.createDataFrame(edges, "subj string, obj string")
+            got = {r.node: r.component for r in connected_components(df).collect()}
+            assert got == _canonical(union_find_components(edges)), (partitions, seed)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_cc_bigint_ids_keep_their_type(spark):
+    big = 1 << 40
+    edges = [(big + 5, big + 3), (big + 3, 7), (9, 8), (big, big + 1)]
+    df = spark.createDataFrame(edges, "subj bigint, obj bigint")
+    comp = connected_components(df)
+    assert [f.dataType.simpleString() for f in comp.schema] == ["bigint", "bigint"]
+    got = {r.node: r.component for r in comp.collect()}
+    assert got == _canonical(union_find_components(edges))
+
+
+def test_cc_non_ascii_ids_use_binary_utf8_order(spark):
+    # UTF-16 code units would put U+FFFF above U+1F600 (surrogate 0xD83D);
+    # in binary UTF-8 order, which Spark and Python's code-point order
+    # share, U+FFFF is the smaller one and so the component min
+    edges = [("\U0001F600", "\uffff"), ("\uffff", "\U0001F601"), ("\u00e9", "\u00e8a")]
+    df = spark.createDataFrame(edges, "subj string, obj string")
+    assert df.select(F.least("subj", "obj")).first()[0] == "\uffff"
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _canonical(union_find_components(edges))
+    assert got["\U0001F600"] == "\uffff"
+
+
+def test_union_find_kernel_matches_reference():
+    # the partition kernel alone (no Spark): random directed edge sets,
+    # split over two Arrow batches, against the driver union-find
+    import pyarrow as pa
+
+    from smartlogic_concordance_transformer_spark.cc import _union_find_partition
+
+    rng = random.Random(5)
+    for _ in range(500):
+        n = rng.randrange(2, 60)
+        pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(1, 120))]
+        edges = [(max(a, b), min(a, b)) for a, b in pairs if a != b]
+        if not edges:
+            continue
+        cut = rng.randrange(len(edges) + 1)
+        batches = [
+            pa.RecordBatch.from_arrays(
+                [pa.array([u for u, _ in part], pa.int64()), pa.array([v for _, v in part], pa.int64())],
+                names=["u", "v"],
+            )
+            for part in (edges[:cut], edges[cut:])
+        ]
+        (out,) = _union_find_partition(iter(batches))
+        got = set(zip(out.column("u").to_pylist(), out.column("v").to_pylist()))
+        expected = {(x, c) for x, c in _canonical(union_find_components(edges)).items() if x != c}
+        assert got == expected, edges
+        assert set(out.column("changed").to_pylist()) == {got != set(edges)}, edges
+
+
+def test_cc_round_plan_has_no_join_and_two_exchanges(spark):
+    from smartlogic_concordance_transformer_spark.cc import _union_find_round
+
+    df = spark.createDataFrame([("b", "a"), ("c", "b")], "u string, v string")
+    plan = _union_find_round(df)._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert plan.count("Exchange") <= 2, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_cc_long_chain(spark):
@@ -63,22 +153,24 @@ def test_cc_long_chain(spark):
     assert len(got) == 41
 
 
-def test_cc_salted_equals_unsalted(spark):
+def test_cc_mega_hub_matches_union_find(spark):
+    # a 200-spoke hub: every round routes all of its edges to one partition
     rng = random.Random(9)
     edges = [("hub", f"x{i}") for i in range(200)] + [
         (f"x{rng.randrange(200)}", f"y{i}") for i in range(100)
     ]
     df = spark.createDataFrame(edges, "subj string, obj string")
-    plain = {r.node: r.component for r in connected_components(df).collect()}
-    salted = {r.node: r.component for r in connected_components(df, salt=8).collect()}
-    assert plain == salted
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _canonical(union_find_components(edges))
 
 
 def test_cc_convergence_guard(spark):
     chain = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(30)]
     df = spark.createDataFrame(chain, "subj string, obj string")
+    # a chain this small coalesces into one partition, where one round is
+    # a full union-find and the second confirms it: one round cannot
     with pytest.raises(ConvergenceError):
-        connected_components(df, max_iter=2)
+        connected_components(df, max_iter=1)
 
 
 def test_canonical_triples_shape(spark):
@@ -108,7 +200,7 @@ def test_cc_converges_on_chained_shared_id_corpus(spark):
     edges = emit_triples(good).filter(
         (F.col("pred") == "concordsWith") & (F.col("op") == "upsert")
     )
-    comp = connected_components(edges, salt=8)
+    comp = connected_components(edges)
     # partition invariant: every node appears exactly once
     assert comp.count() == comp.select("node").distinct().count()
     # canonical is the component min
@@ -139,12 +231,7 @@ def test_incremental_cc_equals_full_recompute(spark, seed, n_nodes, n_base, n_ne
     new_df = spark.createDataFrame(new, "subj string, obj string")
     got = {r.node: r.component for r in incremental_components(labels, new_df).collect()}
 
-    full = union_find_components(base + new)
-    comp_min = {}
-    for n, root in full.items():
-        comp_min[root] = min(comp_min.get(root, n), n)
-    expected = {n: comp_min[root] for n, root in full.items()}
-    assert got == expected
+    assert got == _canonical(union_find_components(base + new))
 
 
 def test_incremental_cc_disjoint_batch_leaves_store_untouched(spark):
