@@ -78,7 +78,14 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     fan-out (explode, pandas UDF, payload generation): the test parquet
     files read as 1-2 splits, which would leave 30 of 32 cores idle
     through the expensive downstream stage. At real scale the scan itself
-    provides the splits and this is a no-op-sized shuffle."""
+    provides the splits and this is a no-op-sized shuffle.
+
+    Size a fan-out to the cores, and spread ONCE, after any union of
+    branches derived from the same frame: spreading the input and then
+    unioning it with frames filtered from it multiplies the partition
+    count by the branch count, and every Python-kernel stage downstream
+    runs that many tasks. Each Python task pays a fixed worker-side cost
+    before the kernel runs (docs/SCALE.md, "Python-task floor")."""
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
@@ -834,12 +841,12 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # xxhash64 kernel and its zero-shuffle plan are pinned separately by
     # pytest (tests/test_plan_shape.py, test_datapipe.py).
     _ensure_shipped(spark)
-    d = _spread(spark, _docs(spark, sf_dir)).select("doc_id", "text")
+    d = _docs(spark, sf_dir).select("doc_id", "text")
     pert = d.filter(F.pmod("doc_id", 10) == 0).select(
         (F.col("doc_id") + 1_000_000_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" qzx")).alias("text"),
     )
-    fps = simhash(d.unionByName(pert), token_hash=md5_token_hash)
+    fps = simhash(_spread(spark, d.unionByName(pert)), token_hash=md5_token_hash)
     return simhash_near_dups(fps).select("a", "b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -957,7 +964,7 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_fingerprint_sets,
     )
 
-    d = _spread(spark, _docs(spark, sf_dir)).select("doc_id", "text")
+    d = _docs(spark, sf_dir).select("doc_id", "text")
     part = d.filter(F.pmod("doc_id", 20) == 0).select(
         (F.col("doc_id") + 3_000_000_000_000).alias("doc_id"),
         F.concat(
@@ -967,7 +974,7 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     sets = winnow_fingerprint_sets(
-        d.unionByName(part), k=8, window=4, gram_hash=md5_token_hash
+        _spread(spark, d.unionByName(part)), k=8, window=4, gram_hash=md5_token_hash
     )
     return winnow_candidate_pairs(sets, min_shared=5, max_df=5)
 
@@ -1507,7 +1514,7 @@ def _pipeline_raw(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     """The pipeline_e2e input corpus (raw docs with planted failures +
     benchmark frame) — shared by the contract query and the oracle-
     precondition tests so both see the identical construction."""
-    d = _spread(spark, _docs(spark, sf_dir))
+    d = _docs(spark, sf_dir)
     # planted failures so every stage fires: every 40th doc gets an exact
     # content twin whose PII line DIFFERS pre-scrub (different doc_id ->
     # different synthetic IP) but is identical post-scrub — exact dedup
@@ -1526,7 +1533,9 @@ def _pipeline_raw(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
             (F.col("doc_id") + 300000).cast("string"),
         ).alias("text"),
     )
-    raw0 = d.select("doc_id", "source", "text").unionByName(twins).unionByName(spam)
+    raw0 = _spread(
+        spark, d.select("doc_id", "source", "text").unionByName(twins).unionByName(spam)
+    )
     pii_line = F.concat(
         F.lit("contact john.doe+"),
         F.col("source"),

@@ -12,8 +12,10 @@ they COMPOSE — column contracts line up, and the shared ``shingles``
 builder keeps gram semantics identical across dedup/decontamination.
 Building the plan is NOT free of driver work: ``strip_boilerplate``
 (``via='auto'``) collects the boilerplate-line dictionary to the driver
-while the cascade is being built, and the lineage barriers below run
-their jobs when the ledger is first consumed.
+while the cascade is being built, and under AQE each lineage barrier
+below (``localCheckpoint(eager=False)``) runs the shuffle stages of its
+subtree when it is called, not when the ledger is first consumed — so
+most of the cascade's executor work happens while the query is built.
 
 Output is a per-document ledger (doc_id, kept, stage, split): ``stage``
 is the first stage that dropped the doc ('quality', 'repetition',

@@ -129,30 +129,33 @@ def paragraph_dedup(
     )
 
 
-def shingles(
-    text: Column | str, k: int = 5, word_grams: bool = True, distinct: bool = True
-) -> Column:
-    """k-gram shingle array, computed natively (distinct by default; pass
-    ``distinct=False`` for frequency-sensitive consumers like the
-    repetition filter — one gram builder, no drift between operators).
+def shingles(text: Column | str, k: int = 5, distinct: bool = True) -> Column:
+    """k-word shingle array over ``ws_tokens``: distinct by default,
+    ``distinct=False`` for frequency-sensitive consumers (the repetition
+    filter). A text shorter than k yields one truncated gram; a null text
+    yields [null].
 
-    word_grams: k-word shingles over whitespace tokens (robust to
-    formatting); otherwise character k-grams.
-    """
+    The tokens are let-bound through a single-element transform, so the
+    tokenizer runs once per row, not once per gram (HOF lambdas get no
+    common-subexpression elimination). The binding lambda returns k
+    shifted token views zipped into one struct per gram, and the per-gram
+    lambda reads only its own struct: a nested lambda that captures an
+    outer lambda variable canonicalizes with a dangling reference, and
+    Spark then leaves a Python UDF over the column unextracted."""
     from .text import ws_tokens
 
     c = F.col(text) if isinstance(text, str) else text
-    norm = F.lower(F.regexp_replace(c, r"\s+", " "))
-    if word_grams:
-        toks = ws_tokens(c)
+
+    def shifted(toks: Column) -> Column:
         n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
-        grams = F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
-        )
-    else:
-        n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-        grams = F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k))
+        return F.arrays_zip(*[F.slice(toks, j + 1, n) for j in range(k)])
+
+    zipped = F.get(F.transform(F.array(ws_tokens(c)), shifted), 0)
+    # a short text's missing tail tokens are null, and array_join skips them
+    grams = F.transform(
+        zipped, lambda g: F.array_join(F.array(*[g[str(j)] for j in range(k)]), " ")
+    )
+    grams = F.when(c.isNull(), F.array(F.lit(None).cast("string"))).otherwise(grams)
     return F.array_distinct(grams) if distinct else grams
 
 
@@ -162,7 +165,6 @@ def minhash_signatures(
     key_col: str = "doc_id",
     num_hashes: int = 64,
     k: int = 5,
-    word_grams: bool = True,
     shingles_col: str | None = None,
 ) -> DataFrame:
     """(key, signature array<bigint>) — min over xxhash64(shingle, seed)
@@ -196,7 +198,7 @@ def minhash_signatures(
     else:
         c = F.col(text_col) if isinstance(text_col, str) else text_col
         base = df.filter(c.isNotNull())
-        src = shingles(text_col, k, word_grams)
+        src = shingles(text_col, k)
     # ONE expression tree in which the shingle/hash chain appears exactly
     # once: fold the hashed-shingle array, updating all num_hashes mins
     # per element (transform's (value, index) lambda supplies the seed as
@@ -354,7 +356,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     key_col: str = "doc_id",
     k: int = 5,
-    word_grams: bool = True,
     threshold: float = 0.0,
     shingles_col: str | None = None,
     truncate_lineage: bool = True,
@@ -367,7 +368,7 @@ def ngram_jaccard_pairs(
     default the shingle frame's lineage is cut so the gram build runs
     once, not once per join side; pass ``truncate_lineage=False`` when
     ``df`` is already persisted/barriered (the copy would be redundant)."""
-    src = F.col(shingles_col) if shingles_col else shingles(text_col, k, word_grams)
+    src = F.col(shingles_col) if shingles_col else shingles(text_col, k)
     sh = df.select(F.col(key_col).alias("_k"), src.alias("_s"))
     if truncate_lineage:
         sh = sh.localCheckpoint(eager=False)

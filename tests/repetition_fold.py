@@ -64,7 +64,7 @@ def repetition_fold(
         if arr is None:
             arr = F.array_sort(
                 F.transform(
-                    shingles(c, k=n, word_grams=True, distinct=False),
+                    shingles(c, k=n, distinct=False),
                     lambda g: F.struct(
                         F.xxhash64(g).alias("g"), F.length(g).cast("long").alias("l")
                     ),

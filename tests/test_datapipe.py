@@ -335,6 +335,92 @@ def test_repetition_char_dup_fractions(spark):
     assert got[3].top_2gram_frac == 0.6
 
 
+def _py_shingles(s, k, distinct):
+    # pure-Python replica of dedup.shingles: Java-\s whitespace runs ->
+    # one space, lowercase, trim spaces, split on single spaces; a text
+    # shorter than k yields ONE truncated gram; a null text yields [null]
+    from smartlogic_concordance_transformer_spark.datapipe.text import _JAVA_WS
+
+    if s is None:
+        return [None]
+    toks = _JAVA_WS.sub(" ", s).lower().strip(" ").split(" ")
+    grams = [" ".join(toks[i : i + k]) for i in range(max(len(toks) - k + 1, 1))]
+    return list(dict.fromkeys(grams)) if distinct else grams
+
+
+def test_shingles_match_python_replica(spark):
+    from smartlogic_concordance_transformer_spark.datapipe.dedup import shingles
+
+    texts = [
+        None,
+        "",
+        "one",
+        "two words",
+        "exactly three words",
+        "Exactly FIVE words in here",
+        "a b a b a b a b a b",
+        "tabs\tand\t\tnewlines\n\nand \r\n runs \x0b\f mixed",
+        "  leading and trailing  ",
+        "nbsp\xa0stays inside\xa0\xa0one token",
+        "ÄÖÜ ÉCOLE Çà ÑANDÚ Ärger ärger ÄRGER",
+        BASE,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    for k in (1, 3, 5):
+        for distinct in (True, False):
+            got = dict(df.select("i", shingles("t", k, distinct=distinct)).collect())
+            want = {i: _py_shingles(t, k, distinct) for i, t in enumerate(texts)}
+            assert got == want, (k, distinct)
+
+
+def test_shingles_tokenize_once(spark):
+    # the token array is let-bound outside every lambda: HOF lambdas get
+    # no common-subexpression elimination, so a tokenizer inside the
+    # per-gram lambda would run once per gram
+    from smartlogic_concordance_transformer_spark.datapipe.dedup import shingles
+
+    df = spark.createDataFrame([("a b c d",)], "t string")
+    analyzed = df.select(shingles("t", 3).alias("s"))._jdf.queryExecution().analyzed()
+    assert analyzed.toString().count("regexp_replace(") == 1
+
+    def under_lambda(e, inside):
+        name = e.nodeName()
+        if inside and name in ("RegExpReplace", "StringSplit"):
+            yield name
+        kids = e.children()
+        for j in range(kids.size()):
+            yield from under_lambda(kids.apply(j), inside or name == "LambdaFunction")
+
+    exprs = analyzed.expressions()
+    found = [n for j in range(exprs.size()) for n in under_lambda(exprs.apply(j), False)]
+    assert found == []
+    # Python UDF extraction filters on the CANONICALIZED expression's
+    # references; a lambda variable leaking into them (a nested lambda
+    # capturing an outer one) leaves a UDF over the column unextracted
+    assert exprs.apply(0).canonicalized().references().size() == 1
+
+
+def test_pipeline_raw_is_spread_once(spark, tmp_path):
+    # the planted twins/spam are unioned BEFORE the spread: spreading the
+    # scan first would multiply the partition count by the branch count
+    # (3x the cores), and every Python-kernel stage downstream would run
+    # three waves of tasks
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    pd.DataFrame(
+        {
+            "doc_id": list(range(240)),
+            "source": ["src0"] * 240,
+            "text": [f"doc {i} text" for i in range(240)],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    raw, _ = entry._pipeline_raw(spark, str(tmp_path))
+    assert raw.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert raw.count() == 240 + 6 + 4
+
+
 def test_minhash_inrow_fold_equals_explode_agg(spark):
     # the r8 in-row signature fold must be bit-equal to the former
     # explode + per-seed min aggregation (the same xxhash64 chain with
