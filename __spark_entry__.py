@@ -207,34 +207,6 @@ def q_kg_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(edges)
 
 
-def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # weighted shortest paths from n0 over the 60-node two-generator
-    # graph, run in the oracle-replayable FIXED-ROUNDS form (8 Bellman-
-    # Ford relaxations — an 8-round unroll is polynomial in SQL where
-    # true-shortest recursion on a cyclic graph is not; nodes the 8
-    # rounds haven't reached stay null on both sides). The converged
-    # form is pinned against a python Dijkstra in tests.
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    d = _docs(spark, sf_dir)
-    e = d.selectExpr(
-        "concat('n', cast(pmod(doc_id, 60) as string)) as src",
-        "concat('n', cast(pmod(doc_id + 1, 60) as string)) as dst",
-        "1 + pmod(doc_id, 5) as weight",
-    ).unionByName(
-        d.selectExpr(
-            "concat('n', cast(pmod(doc_id, 60) as string)) as src",
-            "concat('n', cast(pmod(doc_id * 7 + 1, 60) as string)) as dst",
-            "3 + pmod(doc_id, 4) as weight",
-        )
-    )
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    out = GraphFrame(v, e).shortestPathsWeighted(["n0"], rounds=8)
-    # -1 sentinel for not-yet-reached nodes: the driver's multiset compare
-    # sorts row tuples, and mixed null/int sort keys don't order
-    return out.select("id", F.coalesce("dist", F.lit(-1)).alias("dist"))
-
-
 _BM25_QUERY = ["hash", "join", "spark"]
 
 
@@ -308,41 +280,6 @@ def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(v1, v2, keys=["subj", "pred"])
 
 
-def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # 3-core peel in the fixed-rounds oracle-replayable form, over a
-    # degree-heterogeneous graph: a 500-node binary-tree fringe (leaves
-    # unravel one level per round — internal nodes have degree 3 until
-    # their children peel) + a 20-node offset-ring core (degree 6,
-    # survives) + one bridge. 4 rounds leave a provably partial state
-    # (below-k survivors), exercising the fixed-mode semantics; the
-    # converge mode is pinned against a python peeler in tests.
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    d = _docs(spark, sf_dir)
-    tree = d.filter("pmod(doc_id, 500) > 0").selectExpr(
-        "concat('f', cast(pmod(doc_id, 500) as string)) as src",
-        "concat('f', cast(pmod(doc_id, 500) div 2 as string)) as dst",
-    )
-    ring = d.selectExpr(
-        "concat('c', cast(pmod(doc_id, 20) as string)) as src",
-        "concat('c', cast(pmod(doc_id + 1, 20) as string)) as dst",
-    ).unionByName(
-        d.selectExpr(
-            "concat('c', cast(pmod(doc_id, 20) as string)) as src",
-            "concat('c', cast(pmod(doc_id + 2, 20) as string)) as dst",
-        )
-    ).unionByName(
-        d.selectExpr(
-            "concat('c', cast(pmod(doc_id, 20) as string)) as src",
-            "concat('c', cast(pmod(doc_id + 3, 20) as string)) as dst",
-        )
-    )
-    bridge = spark.createDataFrame([("c0", "f0")], "src string, dst string")
-    e = tree.unionByName(ring).unionByName(bridge)
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    return GraphFrame(v, e).kCore(k=3, rounds=4)
-
-
 def q_text_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inverted index with the stopword band-pass applied BEFORE the
     # posting-list aggregation (the row-size bound), postings sorted.
@@ -358,50 +295,6 @@ def q_text_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # label propagation (4 synchronous rounds, deterministic min-label
-    # ties) over two densely wired 30-node blocks joined by one bridge —
-    # the community structure LPA exists to find. The fixed round count
-    # is the oracle-replayable form (same discipline as sssp/kcore).
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    d = _docs(spark, sf_dir)
-    blocks = None
-    for off in (1, 2, 3):
-        part = d.selectExpr(
-            "concat('b', cast(pmod(doc_id, 2) as string), '_', "
-            "cast(pmod(doc_id, 30) as string)) as src",
-            f"concat('b', cast(pmod(doc_id, 2) as string), '_', "
-            f"cast(pmod(doc_id + {off}, 30) as string)) as dst",
-        )
-        blocks = part if blocks is None else blocks.unionByName(part)
-    bridge = spark.createDataFrame([("b0_0", "b1_0")], "src string, dst string")
-    e = blocks.unionByName(bridge)
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    return GraphFrame(v, e).labelPropagation(maxIter=4)
-
-
-def q_kg_related(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # related entities via shared neighbors, Jaccard-scored. The edge
-    # derivation saturates at 600 distinct (subj, obj) pairs (lcm of the
-    # two moduli), so object degrees are scale-invariant; the planted
-    # 'ghub' neighbor (degree 40) exceeds max_hub_degree=12 and is
-    # dropped BEFORE the self-join — the max_df noise rule.
-    from smartlogic_concordance_transformer_spark.graph import related_entities
-
-    d = _docs(spark, sf_dir)
-    e = d.selectExpr(
-        "concat('d', cast(pmod(doc_id, 120) as string)) as src",
-        "concat('g', cast(pmod(doc_id, 50) as string)) as dst",
-    ).unionByName(
-        d.filter("pmod(doc_id, 3) = 0").selectExpr(
-            "concat('d', cast(pmod(doc_id, 120) as string)) as src",
-            "'ghub' as dst",
-        )
-    )
-    return related_entities(e, min_shared=2, max_hub_degree=12)
-
-
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-source mixing report: docs, tokens, mean quality, language mix
     # in ONE map-side-combinable pass over one scan.
@@ -412,43 +305,12 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_report(_docs(spark, sf_dir))
 
 
-def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # personalized PageRank from n1 (reset mass teleports to the source
-    # only; n0's out-edges are all self-loops in this graph, so n1 is the
-    # source whose mass actually propagates), 3 fixed rounds; the oracle
-    # unrolls the same recurrence.
-    pr = _graph(spark, sf_dir).pageRank(maxIter=3, sourceId="n1").vertices
-    return pr.select("id", F.round("pagerank", 6).alias("pagerank"))
-
-
 def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-document character-distribution Shannon entropy, the
     # gibberish/filler quality signal — zero-shuffle in-row fold.
     from smartlogic_concordance_transformer_spark.datapipe.text import char_entropy
 
     return char_entropy(_spread(spark, _docs(spark, sf_dir)))
-
-
-def q_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # local clustering coefficient over the same triangle-rich
-    # two-generator graph as graph_triangles; exact wedge integers, one
-    # rounded division.
-    from smartlogic_concordance_transformer_spark.graph import (
-        GraphFrame,
-        clustering_coefficient,
-    )
-
-    d = _docs(spark, sf_dir)
-    gens = ["pmod(doc_id + 1, 60)", "pmod(doc_id + 2, 60)", "pmod(doc_id * 7 + 1, 60)"]
-    e = None
-    for gexpr in gens:
-        part = d.selectExpr(
-            "concat('n', cast(pmod(doc_id, 60) as string)) as src",
-            f"concat('n', cast({gexpr} as string)) as dst",
-        )
-        e = part if e is None else e.union(part)
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    return clustering_coefficient(GraphFrame(v, e))
 
 
 def q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,7 +575,7 @@ def q_kg_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _graph(spark: SparkSession, sf_dir: str):
     """Deterministic multigraph over <=100 nodes derived from documents
-    (duplicate edges kept: they weight pageRank and degrees)."""
+    (duplicate edges kept: they weight pageRank)."""
     from smartlogic_concordance_transformer_spark.graph import GraphFrame
 
     e = _docs(spark, sf_dir).selectExpr(
@@ -724,8 +586,24 @@ def _graph(spark: SparkSession, sf_dir: str):
     return GraphFrame(v, e)
 
 
-def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _graph(spark, sf_dir).degrees
+def _dense_graph(spark: SparkSession, sf_dir: str):
+    """Denser three-generator multigraph over 60 nodes, so triangles and
+    2-paths actually occur: ring edges u->u+1 and u->u+2 close a triangle
+    at every node; the 7u+1 map adds irregular chords so per-node counts
+    vary."""
+    from smartlogic_concordance_transformer_spark.graph import GraphFrame
+
+    d = _docs(spark, sf_dir)
+    gens = ["pmod(doc_id + 1, 60)", "pmod(doc_id + 2, 60)", "pmod(doc_id * 7 + 1, 60)"]
+    e = None
+    for gexpr in gens:
+        part = d.selectExpr(
+            "concat('n', cast(pmod(doc_id, 60) as string)) as src",
+            f"concat('n', cast({gexpr} as string)) as dst",
+        )
+        e = part if e is None else e.union(part)
+    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
+    return GraphFrame(v, e)
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,43 +614,16 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # denser two-generator graph over 60 nodes so triangles actually occur;
-    # oracle closes the same canonical (a<b<c) wedges in SQL.
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    d = _docs(spark, sf_dir)
-    # ring edges u->u+1 and u->u+2 close a triangle at every node; the
-    # 7u+1 map adds irregular chords so per-node counts vary.
-    gens = ["pmod(doc_id + 1, 60)", "pmod(doc_id + 2, 60)", "pmod(doc_id * 7 + 1, 60)"]
-    e = None
-    for gexpr in gens:
-        part = d.selectExpr(
-            "concat('n', cast(pmod(doc_id, 60) as string)) as src",
-            f"concat('n', cast({gexpr} as string)) as dst",
-        )
-        e = part if e is None else e.union(part)
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    g = GraphFrame(v, e)
-    return g.triangleCount().select("id", F.col("count").cast("long").alias("n_tri"))
+    # the oracle closes the same canonical (a<b<c) wedges in SQL.
+    tri = _dense_graph(spark, sf_dir).triangleCount()
+    return tri.select("id", F.col("count").cast("long").alias("n_tri"))
 
 
 def q_graph_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # motif finding over the dense 60-node multigraph: directed 2-paths
-    # (a)->(b)->(c), counted per middle vertex. find() compiles to one
-    # hash join per pattern term; the oracle is the same join in SQL.
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    d = _docs(spark, sf_dir)
-    gens = ["pmod(doc_id + 1, 60)", "pmod(doc_id + 2, 60)", "pmod(doc_id * 7 + 1, 60)"]
-    e = None
-    for gexpr in gens:
-        part = d.selectExpr(
-            "concat('n', cast(pmod(doc_id, 60) as string)) as src",
-            f"concat('n', cast({gexpr} as string)) as dst",
-        )
-        e = part if e is None else e.union(part)
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    m = GraphFrame(v, e).find("(a)-[]->(b); (b)-[]->(c)")
+    # directed 2-paths (a)->(b)->(c), counted per middle vertex. find()
+    # compiles to one hash join per pattern term; the oracle is the same
+    # join in SQL.
+    m = _dense_graph(spark, sf_dir).find("(a)-[]->(b); (b)-[]->(c)")
     return m.groupBy(F.col("b")["id"].alias("b")).agg(
         F.count(F.lit(1)).alias("n_paths")
     )
@@ -2027,7 +1878,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_pricing": q_rollup_pricing,
         "split_assign": q_split_assign,
         "text_tokens": q_text_tokens,
-        "graph_degrees": q_graph_degrees,
         # overflow, not retired-as-redundant: NEW r6 operators that the
         # 50-entry driver cap has no room for — they get the identical
         # rows+schema+value check through the pytest gate instead
@@ -2050,18 +1900,12 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_key": q_zorder_key,
         "quality_checks": q_quality_checks,
         "kg_negatives": q_kg_negatives,
-        "graph_sssp": q_graph_sssp,
         "text_tfidf": q_text_tfidf,
         "text_bm25": q_text_bm25,
         "text_pmi": q_text_pmi,
         "kg_diff": q_kg_diff,
-        "graph_kcore": q_graph_kcore,
         "text_inverted": q_text_inverted,
-        "graph_lpa": q_graph_lpa,
-        "kg_related": q_kg_related,
         "corpus_stats": q_corpus_stats,
-        "graph_clustering": q_graph_clustering,
-        "graph_ppr": q_graph_ppr,
         "text_entropy": q_text_entropy,
         # swapped INTO the driver gate in favour of these (round 6):
         # text_fingerprint is a one-expression projection — the
@@ -2072,42 +1916,6 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_fingerprint": q_text_fingerprint,
         "kg_uuid_factset": q_kg_uuid_factset,
     }
-
-
-def _sssp_oracle(rounds: int = 8) -> str:
-    """Unrolled Bellman-Ford over the q_graph_sssp edge set: d0 = {n0: 0};
-    d_{k+1}(v) = min(d_k(v), min over edges (d_k(src) + w)). Polynomial
-    (one group-by min per round) where a true-shortest recursive CTE on
-    this cyclic graph would not terminate."""
-    ctes = [
-        """e as (
-        select 'n' || cast(doc_id % 60 as varchar) as src,
-               'n' || cast((doc_id + 1) % 60 as varchar) as dst,
-               1 + doc_id % 5 as w
-        from documents
-        union all
-        select 'n' || cast(doc_id % 60 as varchar),
-               'n' || cast((doc_id * 7 + 1) % 60 as varchar),
-               3 + doc_id % 4
-        from documents)""",
-        "v as (select src as id from e union select dst from e)",
-        "d0 as (select 'n0' as id, cast(0 as bigint) as dist)",
-    ]
-    for k in range(rounds):
-        ctes.append(
-            f"""d{k + 1} as (
-          select id, min(dist) as dist from (
-            select id, dist from d{k}
-            union all
-            select e.dst as id, d.dist + e.w as dist
-            from e join d{k} d on e.src = d.id)
-          group by id)"""
-        )
-    return (
-        "with " + ",\n      ".join(ctes)
-        + f"\n      select v.id, coalesce(d.dist, -1) as dist"
-        + f" from v left join d{rounds} d using (id)"
-    )
 
 
 _TOKENIZE_CTE = """t as (
@@ -2179,128 +1987,8 @@ def _bm25_oracle(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
     """
 
 
-def _kcore_oracle(k: int = 3, rounds: int = 4) -> str:
-    """Unrolled k-core peel over the q_graph_kcore edge set: per round,
-    degrees over the surviving canonical undirected edges, keep ids with
-    deg >= k, re-induce. Output = degrees over the final edge set."""
-    # every CTE is MATERIALIZED: each e{r+1} references e{r}/k{r} three
-    # times, so default inlining re-expands the chain ~5^rounds times —
-    # enough parquet re-opens to exhaust the fd limit before it even runs
-    ctes = [
-        """raw as materialized (
-        select 'f' || cast(doc_id % 500 as varchar) as src,
-               'f' || cast((doc_id % 500) // 2 as varchar) as dst
-        from documents where doc_id % 500 > 0
-        union all
-        select 'c' || cast(doc_id % 20 as varchar),
-               'c' || cast((doc_id + 1) % 20 as varchar) from documents
-        union all
-        select 'c' || cast(doc_id % 20 as varchar),
-               'c' || cast((doc_id + 2) % 20 as varchar) from documents
-        union all
-        select 'c' || cast(doc_id % 20 as varchar),
-               'c' || cast((doc_id + 3) % 20 as varchar) from documents
-        union all
-        select 'c0', 'f0')""",
-        """e0 as materialized (
-          select distinct least(src, dst) as u, greatest(src, dst) as v
-          from raw where src <> dst)""",
-    ]
-    for r in range(rounds):
-        ctes.append(
-            f"""k{r} as materialized (
-          select id from (
-            select u as id from e{r} union all select v from e{r})
-          group by id having count(*) >= {int(k)})"""
-        )
-        ctes.append(
-            f"""e{r + 1} as materialized (
-          select u, v from e{r}
-          where u in (select id from k{r}) and v in (select id from k{r}))"""
-        )
-    return (
-        "with " + ",\n      ".join(ctes)
-        + f"""
-      select id, count(*) as deg from (
-        select u as id from e{rounds} union all select v from e{rounds})
-      group by id"""
-    )
-
-
-def _lpa_oracle(rounds: int = 4) -> str:
-    """Unrolled synchronous label propagation over the q_graph_lpa edge
-    set: per round every vertex adopts its neighbors' most frequent label
-    (ties -> min label), keeping its own when isolated. MATERIALIZED CTEs
-    for the same fd-exhaustion reason as the k-core oracle."""
-    ctes = [
-        """raw as materialized (
-        select 'b' || cast(doc_id % 2 as varchar) || '_'
-                   || cast(doc_id % 30 as varchar) as src,
-               'b' || cast(doc_id % 2 as varchar) || '_'
-                   || cast((doc_id + d.off) % 30 as varchar) as dst
-        from documents cross join (select unnest([1, 2, 3]) as off) d
-        union all
-        select 'b0_0', 'b1_0')""",
-        """sym as materialized (
-          select distinct u, v from (
-            select src as u, dst as v from raw
-            union all
-            select dst, src from raw)
-          where u <> v)""",
-        "vtx as materialized (select distinct u as id from sym)",
-        "l0 as materialized (select id, id as label from vtx)",
-    ]
-    for r in range(rounds):
-        ctes.append(
-            f"""b{r} as materialized (
-          select id, label from (
-            select s.u as id, l.label, count(*) as n,
-                   row_number() over (partition by s.u
-                                      order by count(*) desc, l.label asc) as rr
-            from sym s join l{r} l on s.v = l.id
-            group by s.u, l.label)
-          where rr = 1)"""
-        )
-        ctes.append(
-            f"""l{r + 1} as materialized (
-          select vtx.id, coalesce(b.label, vtx.id) as label
-          from vtx left join b{r} b using (id))"""
-        )
-    return (
-        "with " + ",\n      ".join(ctes)
-        + f"\n      select id, label from l{rounds}"
-    )
-
-
 def retired_oracle_sql() -> dict[str, str]:
     oracles = {
-        "graph_kcore": _kcore_oracle(k=3, rounds=4),
-        "graph_lpa": _lpa_oracle(rounds=4),
-        # same edge derivation, hub filter before the self-join, exact
-        # integer Jaccard pieces with one rounded division
-        "kg_related": """
-          with e as (
-            select distinct 'd' || cast(doc_id % 120 as varchar) as a,
-                   'g' || cast(doc_id % 50 as varchar) as nb
-            from documents
-            union
-            select distinct 'd' || cast(doc_id % 120 as varchar), 'ghub'
-            from documents where doc_id % 3 = 0),
-          ok as (select nb from e group by nb having count(*) <= 12),
-          f as (select a, nb from e join ok using (nb)),
-          deg as (select a, count(*) as d from f group by a),
-          p as (
-            select x.a as a, y.a as b, count(*) as shared
-            from f x join f y on x.nb = y.nb and x.a < y.a
-            group by 1, 2
-            having count(*) >= 2)
-          select p.a, p.b, p.shared,
-                 round(cast(p.shared as double)
-                       / (cast(da.d as double) + cast(db.d as double)
-                          - cast(p.shared as double)), 6) as jaccard
-          from p join deg da on p.a = da.a
-          join deg db on p.b = db.a
-        """,
         # per-char counts via explode (the oracle need not be zero-shuffle,
         # only equal); n derives from summed counts because DuckDB's
         # string_split('','') yields [''] where Spark yields []
@@ -2327,74 +2015,6 @@ def retired_oracle_sql() -> dict[str, str]:
                  end as entropy
           from nn left join t using (doc_id)
           group by nn.doc_id, nn.n_chars
-        """,
-        # the pagerank unroll with source-only init and reset terms
-        "graph_ppr": """
-          with e as (select 'n' || cast(doc_id % 100 as varchar) as src,
-                            'n' || cast(doc_id * 7 % 100 as varchar) as dst
-                     from documents),
-          v as (select src as id from e union select dst from e),
-          od as (select src, count(*) as c from e group by src),
-          r0 as (select id, case when id = 'n1' then 1.0 else 0.0 end as pr
-                 from v),
-          r1 as (select v.id,
-                        (case when v.id = 'n1' then 0.15 else 0.0 end)
-                          + 0.85 * coalesce(t.m, 0) as pr from v
-                 left join (select e.dst as id, sum(r0.pr / od.c) as m
-                            from e join od using (src) join r0 on r0.id = e.src
-                            group by e.dst) t using (id)),
-          r2 as (select v.id,
-                        (case when v.id = 'n1' then 0.15 else 0.0 end)
-                          + 0.85 * coalesce(t.m, 0) as pr from v
-                 left join (select e.dst as id, sum(r1.pr / od.c) as m
-                            from e join od using (src) join r1 on r1.id = e.src
-                            group by e.dst) t using (id)),
-          r3 as (select v.id,
-                        (case when v.id = 'n1' then 0.15 else 0.0 end)
-                          + 0.85 * coalesce(t.m, 0) as pr from v
-                 left join (select e.dst as id, sum(r2.pr / od.c) as m
-                            from e join od using (src) join r2 on r2.id = e.src
-                            group by e.dst) t using (id))
-          select id, round(pr, 6) as pagerank from r3
-        """,
-        # triangle replay + canonical-edge degrees + one rounded division
-        "graph_clustering": """
-          with e0 as (
-            select 'n' || cast(doc_id % 60 as varchar) as src,
-                   'n' || cast((doc_id + 1) % 60 as varchar) as dst
-            from documents
-            union all
-            select 'n' || cast(doc_id % 60 as varchar),
-                   'n' || cast((doc_id + 2) % 60 as varchar)
-            from documents
-            union all
-            select 'n' || cast(doc_id % 60 as varchar),
-                   'n' || cast((doc_id * 7 + 1) % 60 as varchar)
-            from documents),
-          verts as (select src as id from e0 union select dst from e0),
-          e as (select least(src, dst) as a, greatest(src, dst) as b
-                from e0 where src <> dst group by 1, 2),
-          tri as (select ab.a, ab.b, bc.b as c
-                  from e ab
-                  join e bc on bc.a = ab.b
-                  join e ac on ac.a = ab.a and ac.b = bc.b),
-          corners as (select a as id from tri
-                      union all select b from tri
-                      union all select c from tri),
-          cnt as (select id, count(*) as n_tri from corners group by id),
-          deg as (select id, count(*) as deg from (
-                    select a as id from e union all select b from e)
-                  group by id)
-          select verts.id,
-                 coalesce(cnt.n_tri, 0) as triangles,
-                 coalesce(deg.deg, 0) as deg,
-                 case when coalesce(deg.deg, 0) < 2 then 0.0
-                      else round(cast(coalesce(cnt.n_tri, 0) as double)
-                                 / (cast(deg.deg * (deg.deg - 1) as double) / 2.0), 6)
-                 end as coef
-          from verts
-          left join cnt using (id)
-          left join deg using (id)
         """,
         # one-pass per-source report; quality replays the shared SQL
         "corpus_stats": f"""
@@ -2488,7 +2108,6 @@ def retired_oracle_sql() -> dict[str, str]:
           where v1.subj is null or v2.subj is null
              or v1.obj is distinct from v2.obj
         """,
-        "graph_sssp": _sssp_oracle(rounds=8),
         # the successor rule replayed as a correlated min over the WHOLE
         # ring (no bucketing) — agreement re-proves the 2-bucket probe
         "kg_negatives": """
@@ -2703,13 +2322,6 @@ def retired_oracle_sql() -> dict[str, str]:
                  count(*) filter (where event_type = 'signup') as signup,
                  count(*) filter (where event_type = 'view') as view
           from events group by 1
-        """,
-        "graph_degrees": """
-          with e as (select 'n' || cast(doc_id % 100 as varchar) as src,
-                            'n' || cast(doc_id * 7 % 100 as varchar) as dst
-                     from documents),
-          ends as (select src as id from e union all select dst from e)
-          select id, count(*) as degree from ends group by id
         """,
         "text_tokens": "select doc_id, len(string_split_regex(trim(text), '\\s+')) as n_tokens from documents",
         "rollup_pricing": """

@@ -74,6 +74,8 @@ def test_registry_holds_exactly_fifty_queries():
     # retired_queries() below, oracle-checked here instead
     assert len(entry.queries()) == 50
     assert not set(entry.retired_queries()) & set(entry.queries())
+    # every retired query keeps its oracle, and no oracle outlives its query
+    assert set(entry.retired_queries()) == set(entry.retired_oracle_sql())
 
 
 @pytest.mark.parametrize("name", sorted(entry.retired_oracle_sql().keys()))

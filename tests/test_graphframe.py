@@ -1,5 +1,5 @@
-"""GraphFrames-compatible facade: degrees, triplets, connected components,
-pageRank vs an independent numpy power-iteration model."""
+"""GraphFrame facade: schema check, out-degrees, pageRank vs an independent
+numpy power-iteration model, triangle count and motif finding."""
 
 import numpy as np
 import pytest
@@ -27,29 +27,8 @@ def test_schema_validation(spark):
 
 
 def test_degrees(g):
-    assert {(r.id, r.degree) for r in g.degrees.collect()} == {
-        ("a", 2), ("b", 2), ("c", 3), ("d", 1), ("x", 1), ("y", 1),
-    }
     assert {(r.id, r.outDegree) for r in g.outDegrees.collect()} == {
         ("a", 1), ("b", 1), ("c", 2), ("x", 1),
-    }
-    assert {(r.id, r.inDegree) for r in g.inDegrees.collect()} == {
-        ("b", 1), ("c", 1), ("a", 1), ("d", 1), ("y", 1),
-    }
-
-
-def test_triplets(g):
-    rows = g.triplets.collect()
-    assert len(rows) == len(E)
-    assert all(r.src.id == r.edge.src and r.dst.id == r.edge.dst for r in rows)
-
-
-def test_connected_components(g):
-    comp = {r.id: r.component for r in g.connectedComponents().collect()}
-    assert comp == {
-        "a": "a", "b": "a", "c": "a", "d": "a",
-        "x": "x", "y": "x",
-        "z": "z",  # isolated vertex is its own component
     }
 
 
@@ -74,28 +53,6 @@ def test_pagerank_matches_numpy_power_iteration(g):
 def test_triangle_count(g):
     got = {r.id: r["count"] for r in g.triangleCount().collect()}
     assert got == {"a": 1, "b": 1, "c": 1, "d": 0, "x": 0, "y": 0, "z": 0}
-
-
-def test_shortest_paths(g):
-    got = {r.id: dict(r.distances) for r in g.shortestPaths(["a", "d"]).collect()}
-    assert got == {
-        "a": {"a": 0, "d": 3},  # a->b->c->d
-        "b": {"a": 2, "d": 2},
-        "c": {"a": 1, "d": 1},
-        "d": {"d": 0},          # no out-edges: never reaches a
-        "x": {}, "y": {}, "z": {},
-    }
-
-
-def test_label_propagation_deterministic_within_components(g):
-    r1 = {r.id: r.label for r in g.labelPropagation(maxIter=5).collect()}
-    r2 = {r.id: r.label for r in g.labelPropagation(maxIter=5).collect()}
-    assert r1 == r2  # min-label tie-break makes LPA deterministic
-    assert r1["z"] == "z"  # isolated vertex keeps its own label
-    comp = {r.id: r.component for r in g.connectedComponents().collect()}
-    # a label never crosses a component boundary
-    for v, lab in r1.items():
-        assert comp[lab] == comp[v], (v, lab)
 
 
 def test_motif_two_path(g):
@@ -133,387 +90,8 @@ def test_motif_rejects_bad_input(g):
         g.find("(a)-[e]->(b); (b)-[e]->(c)")
 
 
-def test_aggregate_messages_in_degree_and_neighbor_sum(g, spark):
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.graph import AggregateMessages as AM
-
-    # in-degree: every edge sends 1 to its dst
-    indeg = g.aggregateMessages(F.count(AM.msg).alias("n"), sendToDst=F.lit(1))
-    assert {(r.id, r.n) for r in indeg.collect()} == {
-        ("b", 1), ("c", 1), ("a", 1), ("d", 1), ("y", 1),
-    }
-    # each edge sends its dst id to the src: collect sorted neighbor lists
-    nbrs = g.aggregateMessages(
-        F.array_sort(F.collect_list(AM.msg)).alias("out_nbrs"),
-        sendToSrc=AM.dst["id"],
-    )
-    assert {(r.id, tuple(r.out_nbrs)) for r in nbrs.collect()} == {
-        ("a", ("b",)), ("b", ("c",)), ("c", ("a", "d")), ("x", ("y",)),
-    }
-
-
-def test_bfs_shortest_path(g):
-    # a->b->c->d is the only route from a to d (3 hops)
-    out = g.bfs("id = 'a'", "id = 'd'")
-    rows = out.collect()
-    assert out.columns == ["from", "e0", "v1", "e1", "v2", "e2", "to"]
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["from"]["id"], r["v1"]["id"], r["v2"]["id"], r["to"]["id"]) == ("a", "b", "c", "d")
-    assert (r["e0"]["src"], r["e0"]["dst"]) == ("a", "b")
-
-
-def test_bfs_zero_length_and_unreachable(g):
-    zero = g.bfs("id = 'a'", "id = 'a'").collect()
-    assert len(zero) == 1 and zero[0]["from"]["id"] == "a" and zero[0]["to"]["id"] == "a"
-    assert g.bfs("id = 'x'", "id = 'd'", maxPathLength=6).count() == 0
-    assert g.bfs("id = 'zzz'", "id = 'd'").count() == 0
-
-
-def test_filter_vertices_and_edges(g):
-    sub = g.filterVertices("id in ('a','b','c')")
-    assert {r.id for r in sub.vertices.collect()} == {"a", "b", "c"}
-    assert {(r.src, r.dst) for r in sub.edges.collect()} == {("a", "b"), ("b", "c"), ("c", "a")}
-    fe = g.filterEdges("src = 'c'")
-    assert fe.vertices.count() == 7  # vertices untouched
-    assert {(r.src, r.dst) for r in fe.edges.collect()} == {("c", "a"), ("c", "d")}
-    iso = fe.dropIsolatedVertices()
-    assert {r.id for r in iso.vertices.collect()} == {"a", "c", "d"}
-
-
-def test_pregel_pagerank_matches_native(g, spark):
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.graph import Pregel
-
-    # pageRank written against the Pregel builder must equal the dedicated
-    # pageRank loop exactly (same arithmetic, same iteration count)
-    alpha = 0.15
-    with_deg = GraphFrame(
-        g.vertices.join(g.outDegrees, "id", "left").fillna({"outDegree": 0}),
-        g.edges,
-    )
-    ranks = (
-        with_deg.pregel.setMaxIter(3)
-        .withVertexColumn(
-            "rank",
-            F.lit(1.0),
-            F.lit(alpha) + F.lit(1 - alpha) * F.coalesce(Pregel.msg(), F.lit(0.0)),
-        )
-        # try_divide: under ANSI (Spark 4 default) Catalyst may evaluate
-        # the src-only projection below the triplet join, where
-        # outDegree=0 vertices still exist
-        .sendMsgToDst(F.try_divide(Pregel.src("rank"), Pregel.src("outDegree")))
-        .aggMsgs(F.sum(Pregel.msg()))
-        .run()
-    )
-    got = {r.id: r.rank for r in ranks.collect()}
-    want = {r.id: r.pagerank for r in g.pageRank(maxIter=3).vertices.collect()}
-    assert set(got) == set(want)
-    assert all(abs(got[k] - want[k]) < 1e-12 for k in want), (got, want)
-
-
-def test_pregel_propagates_min_id(g):
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.graph import Pregel
-
-    # min-id flood along reversed edges: a tiny CC-flavored program
-    out = (
-        g.pregel.setMaxIter(4)
-        .withVertexColumn(
-            "m", F.col("id"), F.least(F.col("m"), F.coalesce(Pregel.msg(), F.col("m")))
-        )
-        .sendMsgToDst(Pregel.src("m"))
-        .sendMsgToSrc(Pregel.dst("m"))
-        .aggMsgs(F.min(Pregel.msg()))
-        .run()
-    )
-    got = {r.id: r.m for r in out.collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x", "z": "z"}
-
-
 def test_motif_vertex_edge_name_clash_rejected(g):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="both a vertex and an edge"):
         g.find("(a)-[]->(b); (c)-[a]->(d)")
-
-
-def test_pregel_checkpoint_interval_zero_disables(g):
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.graph import Pregel
-
-    out = (
-        g.pregel.setMaxIter(2)
-        .setCheckpointInterval(0)
-        .withVertexColumn(
-            "m", F.col("id"), F.least(F.col("m"), F.coalesce(Pregel.msg(), F.col("m")))
-        )
-        .sendMsgToDst(Pregel.src("m"))
-        .aggMsgs(F.min(Pregel.msg()))
-        .run()
-    )
-    assert out.count() == 7
-
-
-def test_pagerank_tol_converges_to_fixpoint(g):
-    # tol mode must land within tol of the long-run fixed point and
-    # agree with a generous fixed-iteration run; an over-tight budget
-    # still returns (maxIter is the budget, not a failure)
-    ref = {r.id: r.pagerank for r in g.pageRank(maxIter=60).vertices.collect()}
-    got = {r.id: r.pagerank for r in g.pageRank(maxIter=60, tol=1e-9).vertices.collect()}
-    assert set(got) == set(ref)
-    for v, p in ref.items():
-        assert abs(got[v] - p) < 1e-6, (v, got[v], p)
-    budget = {r.id: r.pagerank for r in g.pageRank(maxIter=2, tol=1e-12).vertices.collect()}
-    assert set(budget) == set(ref)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        g.pageRank(tol=0.0)
-
-
-def test_weighted_shortest_paths_match_dijkstra(spark):
-    import heapq
-    import random as _random
-
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    rng = _random.Random(21)
-    n = 40
-    edges = []
-    for _ in range(150):
-        s, d = rng.randrange(n), rng.randrange(n)
-        if s != d:
-            edges.append((f"n{s:02d}", f"n{d:02d}", rng.randrange(1, 20)))
-    v = spark.createDataFrame([(f"n{i:02d}",) for i in range(n)], "id string")
-    e = spark.createDataFrame(edges, "src string, dst string, weight long")
-
-    # python Dijkstra from the same source set
-    adj = {}
-    for s, d, w in edges:
-        adj.setdefault(s, []).append((d, w))
-    dist = {"n00": 0, "n01": 0}
-    pq = [(0, "n00"), (0, "n01")]
-    while pq:
-        du, u = heapq.heappop(pq)
-        if du > dist.get(u, float("inf")):
-            continue
-        for vtx, w in adj.get(u, []):
-            nd = du + w
-            if nd < dist.get(vtx, float("inf")):
-                dist[vtx] = nd
-                heapq.heappush(pq, (nd, vtx))
-
-    got = {
-        r.id: r.dist
-        for r in GraphFrame(v, e).shortestPathsWeighted(["n00", "n01"]).collect()
-    }
-    for i in range(n):
-        vid = f"n{i:02d}"
-        assert got[vid] == dist.get(vid), (vid, got[vid], dist.get(vid))
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        GraphFrame(v, e).shortestPathsWeighted(["n00"], maxIter=5, rounds=5)
-
-
-def test_kcore_converges_to_python_peeler(spark):
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-    import collections
-
-    # deterministic two-generator graph with degree heterogeneity: the
-    # affine maps keep a 21-vertex 3-core; the binary tree peels away
-    pairs = [(i % 23, (2 * (i % 23) + 3) % 23) for i in range(46)]
-    pairs += [(i % 23, (5 * (i % 23) + 1) % 23) for i in range(46)]
-    pairs += [(30 + i, 30 + (i // 2)) for i in range(1, 16)]  # tree fringe
-    edges = [(f"n{a}", f"n{b}") for a, b in pairs if a != b]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    got = {(r.id, r.deg) for r in GraphFrame(v, e).kCore(k=3).collect()}
-
-    E = {(min(a, b), max(a, b)) for a, b in
-         ((f"n{a}", f"n{b}") for a, b in pairs if a != b)}
-    while True:
-        deg = collections.Counter()
-        for u, w in E:
-            deg[u] += 1
-            deg[w] += 1
-        keep = {x for x, c in deg.items() if c >= 3}
-        e2 = {(u, w) for u, w in E if u in keep and w in keep}
-        if e2 == E:
-            break
-        E = e2
-    deg = collections.Counter()
-    for u, w in E:
-        deg[u] += 1
-        deg[w] += 1
-    assert got == set(deg.items())
-    assert got, "expected a nonempty 3-core"
-    assert all(d >= 3 for _, d in got), "converged core degrees must be >= k"
-
-
-def test_kcore_arg_validation(spark):
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-    import pytest as _pytest
-
-    e = spark.createDataFrame([("a", "b")], "src string, dst string")
-    v = e.selectExpr("src as id").union(e.selectExpr("dst as id")).distinct()
-    g = GraphFrame(v, e)
-    with _pytest.raises(ValueError, match="not both"):
-        g.kCore(k=2, maxIter=3, rounds=3)
-    with _pytest.raises(ValueError, match="k must be"):
-        g.kCore(k=0)
-
-
-def test_related_entities_hub_filter_and_jaccard(spark):
-    from smartlogic_concordance_transformer_spark.graph import related_entities
-
-    edges = [
-        # a1 and a2 share n1, n2; a3 shares only n2 with them
-        ("a1", "n1"), ("a2", "n1"),
-        ("a1", "n2"), ("a2", "n2"), ("a3", "n2"),
-        ("a3", "n3"),
-        # hub neighbor everyone touches: must not generate pairs
-        ("a1", "hub"), ("a2", "hub"), ("a3", "hub"), ("a4", "hub"),
-        # duplicate edge: neighbor sets are distinct
-        ("a1", "n1"),
-    ]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    got = {(r.a, r.b): (r.shared, r.jaccard)
-           for r in related_entities(e, max_hub_degree=3).collect()}
-    # degrees AFTER hub drop: a1={n1,n2}, a2={n1,n2}, a3={n2,n3}, a4={}
-    assert got == {
-        ("a1", "a2"): (2, 1.0),
-        ("a1", "a3"): (1, round(1 / 3, 6)),
-        ("a2", "a3"): (1, round(1 / 3, 6)),
-    }
-    only_strong = {(r.a, r.b) for r in
-                   related_entities(e, min_shared=2, max_hub_degree=3).collect()}
-    assert only_strong == {("a1", "a2")}
-
-
-def test_clustering_coefficient_golden(g, spark):
-    from smartlogic_concordance_transformer_spark.graph import (
-        clustering_coefficient,
-    )
-
-    # triangle a-b-c plus tail c-d: a and b have deg 2 and 1 triangle
-    # (coef 1.0); c has deg 3, 1 triangle of 3 wedges; d/x/y deg < 2
-    got = {r.id: (r.triangles, r.deg, r.coef)
-           for r in clustering_coefficient(g).collect()}
-    assert got == {
-        "a": (1, 2, 1.0),
-        "b": (1, 2, 1.0),
-        "c": (1, 3, round(1 / 3, 6)),
-        "d": (0, 1, 0.0),
-        "x": (0, 1, 0.0),
-        "y": (0, 1, 0.0),
-        "z": (0, 0, 0.0),
-    }
-
-
-def test_scc_matches_python_tarjan(spark):
-    from smartlogic_concordance_transformer_spark.graph import GraphFrame
-
-    # deterministic digraph: a 3-cycle, a 2-cycle hanging off it, a chain,
-    # an isolated vertex, plus cross edges that must NOT merge components
-    E = [
-        ("a", "b"), ("b", "c"), ("c", "a"),          # SCC {a,b,c}
-        ("c", "d"), ("d", "e"), ("e", "d"),          # SCC {d,e}
-        ("e", "f"), ("f", "g"),                      # chain: singletons
-        ("g", "b"),                                  # back edge crossing SCCs?
-    ]
-    # g->b plus b..c->d->e->f->g closes a big cycle: recompute truth with
-    # Tarjan rather than by eye
-    V = sorted({x for p in E for x in p} | {"iso"})
-    e = spark.createDataFrame(E, "src string, dst string")
-    v = spark.createDataFrame([(x,) for x in V], "id string")
-    got = {r.id: r.component
-           for r in GraphFrame(v, e).stronglyConnectedComponents().collect()}
-
-    import sys
-    sys.setrecursionlimit(10000)
-    adj = {}
-    for s, d in E:
-        adj.setdefault(s, []).append(d)
-    index, low, onstack, stack, out = {}, {}, set(), [], {}
-    counter = [0]
-
-    def strongconnect(u):
-        index[u] = low[u] = counter[0]
-        counter[0] += 1
-        stack.append(u)
-        onstack.add(u)
-        for w in adj.get(u, []):
-            if w not in index:
-                strongconnect(w)
-                low[u] = min(low[u], low[w])
-            elif w in onstack:
-                low[u] = min(low[u], index[w])
-        if low[u] == index[u]:
-            comp = []
-            while True:
-                w = stack.pop()
-                onstack.discard(w)
-                comp.append(w)
-                if w == u:
-                    break
-            root = min(comp)
-            for w in comp:
-                out[w] = root
-
-    for u in V:
-        if u not in index:
-            strongconnect(u)
-    assert got == out
-    assert got["iso"] == "iso"
-
-
-def test_personalized_pagerank_matches_numpy(g):
-    import numpy as np
-    import pytest as _pytest
-
-    ids = sorted(v[0] for v in V)
-    idx = {v: i for i, v in enumerate(ids)}
-    out_deg = np.zeros(len(ids))
-    for s, _ in E:
-        out_deg[idx[s]] += 1
-    src = idx["a"]
-    pr = np.zeros(len(ids))
-    pr[src] = 1.0
-    for _ in range(10):
-        mass = np.zeros(len(ids))
-        for s, d in E:
-            mass[idx[d]] += pr[idx[s]] / out_deg[idx[s]]
-        nxt = 0.85 * mass
-        nxt[src] += 0.15
-        pr = nxt
-    got = {r.id: r.pagerank
-           for r in g.pageRank(maxIter=10, sourceId="a").vertices.collect()}
-    for v in ids:
-        assert got[v] == _pytest.approx(pr[idx[v]], rel=1e-9, abs=1e-12), v
-    # mass concentrates near the source: a beats the disconnected x/y/z
-    assert got["a"] > got["x"] == got["y"] == got["z"] == 0.0
-
-
-def test_parallel_personalized_pagerank_matches_single_source(g):
-    import pytest as _pytest
-
-    multi = {(r.source, r.id): r.rank
-             for r in g.parallelPersonalizedPageRank(["a", "x"], maxIter=8).collect()}
-    for s in ("a", "x"):
-        single = {r.id: r.pagerank
-                  for r in g.pageRank(maxIter=8, sourceId=s).vertices.collect()}
-        for v, pr in single.items():
-            got = multi.get((s, v), 0.0)
-            assert got == _pytest.approx(pr, rel=1e-12, abs=1e-15), (s, v)
-    # unreachable rows are omitted, not zero-filled
-    assert ("x", "a") not in multi and ("a", "x") not in multi
-
-    with _pytest.raises(ValueError, match="non-empty"):
-        g.parallelPersonalizedPageRank([])

@@ -526,16 +526,6 @@ def test_negative_samples_probes_buckets_not_cartesian(spark):
     assert "Window" not in plan, plan
 
 
-def test_related_entities_has_no_cartesian_product(spark):
-    # the shared-neighbor self-join must stay equi on the neighbor key —
-    # an all-pairs product dies at KG scale
-    import __spark_entry__ as entry
-
-    plan = _plan(entry.q_kg_related(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_cooccurrence_pmi_builds_pairs_in_row(spark):
     # pair enumeration is an in-row transform over the token array: no
     # position self-join (the token stream must never be joined to
