@@ -7,17 +7,25 @@ Parquet behind one interface:
 
 * tables are directories with ``bucket=K`` Hive-style partitions
   (``bucket = pmod(xxhash64(repo), n_buckets)`` — the resume grain);
-* each completed bucket gets a ledger entry
-  ``_ledger/bucket=K.json`` holding row counts, a content hash
-  (sha256 over the sorted triple set — the lineage invariant), status and
-  duration; the ledger write happens only after the bucket's data commit,
-  so a crash leaves at worst an orphaned data dir that resume overwrites;
+* each completed bucket gets a ledger entry ``_ledger/bucket=K.json``,
+  written only after the bucket's data commit, so a crash leaves at worst
+  an orphaned data dir that resume overwrites. What an entry holds
+  depends on its writer:
+
+  - ``pipeline.run_pipeline``: ``bucket``, ``status`` and ``rows`` (the
+    bucket's triple count, from the run metrics);
+  - ``ParquetTableIO.write_bucket``: also ``fingerprint`` (an
+    order-insensitive sum of per-row sha256 prefixes over the named
+    columns — the lineage invariant) and ``duration_sec``;
+  - ``StageMaterializer`` (``_ledger/stage=S.json``, one per cascade
+    barrier): ``stage``, ``status``, ``rows`` from the parquet footers,
+    the caller's input ``fingerprint`` and ``duration_sec``;
 * resume = anti-join against the ledger: buckets with a ``done`` entry are
   pruned *before* the scan (partition pruning on the source side), matching
   Iceberg's manifest-level pruning.
 
-On a real deployment swap `ParquetTableIO` for an Iceberg writer — the
-pipeline only touches this interface.
+On a real deployment swap these parquet writers for an Iceberg writer —
+the pipeline only touches ``with_bucket`` and ``CheckpointLedger``.
 """
 
 from __future__ import annotations

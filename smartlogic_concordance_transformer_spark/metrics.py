@@ -1,16 +1,20 @@
 """Per-partition lineage + metrics (north rule: 'checkpoint-resumable per
 partition with lineage + triple-count metrics logged per partition').
 
-One aggregation computes everything per bucket: doc counts by status,
-triple counts by predicate/op, and the run manifest is dumped as JSON next
-to the ledger. Structured, machine-readable, cheap (single shuffle)."""
+One aggregation computes everything per bucket: doc counts by status and
+op, triple counts by predicate, and the input count; the run manifest is
+dumped as JSON next to the ledger. Structured, machine-readable, cheap
+(single shuffle). The GTG reconciliation re-reads the three durable tables
+in one more aggregation."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,61 +25,84 @@ def partition_metrics(
     triples: DataFrame,
     unified: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-bucket metric rows: (bucket, metric, value). When the op-typed
-    ``unified`` frame is supplied, a ``docs_in`` row per bucket records the
-    input row count — the anchor for the GTG reconciliation
-    (docs_in = docs_valid + quarantined)."""
-    doc_ok = good.groupBy("bucket").agg(F.count("*").alias("value")).select(
-        "bucket", F.lit("docs_valid").alias("metric"), "value"
-    )
-    doc_ops = good.groupBy("bucket", "op").agg(F.count("*").alias("value")).select(
-        "bucket", F.concat(F.lit("docs_"), F.col("op")).alias("metric"), "value"
-    )
-    doc_bad = quarantine.groupBy("bucket", "status").agg(F.count("*").alias("value")).select(
-        "bucket", F.concat(F.lit("docs_"), F.col("status")).alias("metric"), "value"
-    )
-    trip = triples.groupBy("bucket", "pred").agg(F.count("*").alias("value")).select(
-        "bucket", F.concat(F.lit("triples_"), F.col("pred")).alias("metric"), "value"
-    )
-    out = doc_ok.unionByName(doc_ops).unionByName(doc_bad).unionByName(trip)
+    """Per-bucket metric rows: (bucket, metric, value), one row per
+    non-empty count: docs_valid, docs_<op>, docs_<status> of the
+    quarantined, triples_<pred>. When the op-typed ``unified`` frame is
+    supplied, a ``docs_in`` row per bucket records the input row count —
+    the anchor for the GTG reconciliation (docs_in = docs_valid +
+    quarantined).
+
+    Each input is projected to tagged ``(bucket, metric)`` rows and the
+    union is counted by ONE ``groupBy``: one shuffle, however many
+    metrics there are."""
+    tagged = [
+        good.select(
+            "bucket",
+            F.explode(F.array(F.lit("docs_valid"), F.concat(F.lit("docs_"), "op"))).alias("metric"),
+        ),
+        quarantine.select("bucket", F.concat(F.lit("docs_"), "status").alias("metric")),
+        triples.select("bucket", F.concat(F.lit("triples_"), "pred").alias("metric")),
+    ]
     if unified is not None:
-        docs_in = unified.groupBy("bucket").agg(F.count("*").alias("value")).select(
-            "bucket", F.lit("docs_in").alias("metric"), "value"
-        )
-        out = out.unionByName(docs_in)
-    return out
+        tagged.append(unified.select("bucket", F.lit("docs_in").alias("metric")))
+    return functools.reduce(DataFrame.unionByName, tagged).groupBy("bucket", "metric").agg(
+        F.count("*").alias("value")
+    )
 
 
 _QUAR_STATUSES = ("SyntacticallyIncorrect", "SemanticallyIncorrect")
+_TABLES = ("upp", "quarantine", "triples")
 
 
-def _read_bucket_counts(
-    spark: SparkSession, path: str
-) -> tuple[dict[int, int], str | None]:
-    """(per-bucket counts, error). A missing/empty table path (the normal
-    nothing-written-yet case, surfaced by Spark as AnalysisException on
-    schema inference) reads as empty counts; any OTHER failure — corrupt
-    footer, permission error, bad schema — is returned as an error string
-    so the GTG check can flag the table as unreadable instead of silently
-    treating it as correctly-empty."""
-    from pyspark.errors import AnalysisException
+def _bucket_counts(scans: dict[str, DataFrame]) -> dict[str, dict[int, int]]:
+    """Per-table per-bucket row counts of tagged scans: one union counted
+    by ``groupBy(table, bucket)``, so one shuffle however many tables."""
+    union = functools.reduce(
+        DataFrame.unionByName,
+        [df.select(F.lit(t).alias("table"), "bucket") for t, df in scans.items()],
+    )
+    counts: dict[str, dict[int, int]] = {t: {} for t in scans}
+    for r in union.groupBy("table", "bucket").count().collect():
+        counts[r["table"]][int(r["bucket"])] = r["count"]
+    return counts
 
+
+def _durable_counts(
+    spark: SparkSession, root: str
+) -> tuple[dict[str, dict[int, int]], dict[str, str]]:
+    """(per-table per-bucket row counts, error per unreadable table) of the
+    three durable tables.
+
+    The healthy path counts all three in one aggregation. Only when it
+    fails are the tables counted one at a time, so the failure is
+    attributed to its table: a corrupt footer, a permission error or a
+    missing ``bucket`` value reads as unreadable, never as correctly
+    empty."""
+    counts: dict[str, dict[int, int]] = {t: {} for t in _TABLES}
+    errors: dict[str, str] = {}
+    scans = {}
+    for t in _TABLES:
+        try:
+            # a known schema needs no inference job, and a directory with
+            # no data file (nothing to write) reads as an empty frame
+            scans[t] = spark.read.schema("bucket int").parquet(os.path.join(root, t))
+        except AnalysisException:  # path missing = nothing written
+            pass
+        except Exception as e:  # unlistable is NOT the same as empty
+            errors[t] = f"{type(e).__name__}: {e}"
+    if not scans:
+        return counts, errors
     try:
-        df = spark.read.parquet(path)
-    except AnalysisException:  # path missing / no footers = nothing written
-        return {}, None
-    except Exception as e:  # corrupt/unreadable is NOT the same as empty
-        return {}, f"{type(e).__name__}: {e}"
-    try:
-        # separate scope: an AnalysisException HERE is schema drift (e.g.
-        # no `bucket` column), which must read as unreadable, not empty
-        counts = {
-            int(r["bucket"]): int(r["n"])
-            for r in df.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-    except Exception as e:
-        return {}, f"{type(e).__name__}: {e}"
-    return counts, None
+        counts.update(_bucket_counts(scans))
+        return counts, errors
+    except Exception:
+        pass
+    for t, df in scans.items():
+        try:
+            counts.update(_bucket_counts({t: df}))
+        except Exception as e:
+            errors[t] = f"{type(e).__name__}: {e}"
+    return counts, errors
 
 
 def gtg_check(
@@ -115,14 +142,9 @@ def gtg_check(
             n_buckets = (max(done) + 1) if done else 0
     missing_ledger = sorted(set(range(n_buckets)) - done)
 
-    actual: dict[str, dict[int, int]] = {}
-    unreadable: set[str] = set()
-    for table in ("upp", "quarantine", "triples"):
-        counts, err = _read_bucket_counts(spark, os.path.join(root, table))
-        actual[table] = counts
-        if err is not None:
-            unreadable.add(table)
-            mismatches.append({"table": table, "check": "table_unreadable", "error": err})
+    actual, unreadable = _durable_counts(spark, root)
+    for table, err in unreadable.items():
+        mismatches.append({"table": table, "check": "table_unreadable", "error": err})
     for b_str, metrics in sorted(per_bucket.items(), key=lambda kv: int(kv[0])):
         b = int(b_str)
         n_valid = metrics.get("docs_valid", 0)

@@ -2,9 +2,11 @@
 
     read source (only pending buckets — partition-pruned)
       -> parse (pandas UDF) -> validate/derive/assemble (native exprs)
-      -> upp + quarantine + triples, written per bucket with ledger commits
+      -> rebalance by bucket (one exchange), persisted
+      -> upp + quarantine + triples, written with one file per bucket
+      -> per-partition metrics (one aggregation) -> ledger commit per bucket
       -> optional connected-components canonicalization over the full edge set
-      -> per-partition metrics manifest
+      -> run manifest + GTG (one aggregation re-reads the three tables)
 
 Resume: ledger-done buckets are excluded from the *scan* (predicate on the
 bucket expression pushes to the parquet reader / Iceberg manifest), so a
@@ -16,7 +18,7 @@ from __future__ import annotations
 import os
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .cc import canonical_triples
@@ -45,7 +47,11 @@ def run_pipeline(
     # ONE op-typed frame, persisted before the three-sink fan-out: the
     # parse UDF and the source scan run exactly once per run — an
     # unpersisted fan-out would re-run both once per sink (3x at 100 TB).
-    unified = transform_unified(src, carry=("bucket",)).persist()
+    # The rebalance on bucket (after the UDF, in the scan stage) gives each
+    # write task whole buckets, so a dynamic-partition write makes one file
+    # per bucket instead of one per (scan task, bucket); at scale AQE splits
+    # a hot bucket to the advisory partition size.
+    unified = transform_unified(src, carry=("bucket",)).hint("rebalance", "bucket").persist()
     good, quarantine = split_unified(unified, carry=("bucket",))
     triples = emit_triples(good, carry=("bucket",))
 
@@ -72,13 +78,18 @@ def run_pipeline(
 
     extra = {}
     if run_cc:
+        # the full edge set, not just this run's buckets; the written
+        # frame's schema spares a schema-inference job
         edges = (
-            spark.read.parquet(os.path.join(out_root, "triples"))
+            spark.read.schema(triples.schema)
+            .parquet(os.path.join(out_root, "triples"))
             .filter((F.col("pred") == "concordsWith") & (F.col("op") == "upsert"))
         )
-        canon = canonical_triples(edges)
+        # the count arrives with the write: no re-read of the output
+        canon_rows = Observation("canonical_triples")
+        canon = canonical_triples(edges).observe(canon_rows, F.count(F.lit(1)).alias("rows"))
         canon.write.mode("overwrite").parquet(os.path.join(out_root, "canonical_triples"))
-        extra["canonical_edges"] = spark.read.parquet(os.path.join(out_root, "canonical_triples")).count()
+        extra["canonical_edges"] = canon_rows.get["rows"]
 
     manifest = write_run_manifest(out_root, metrics_rows, extra=extra)
     unified.unpersist()

@@ -1,15 +1,19 @@
 """End-to-end pipeline + checkpoint/resume semantics over the synthetic
 source generator."""
 
-import json
 import os
 import shutil
+from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
+from smartlogic_concordance_transformer_spark import pipeline
 from smartlogic_concordance_transformer_spark.gen import generate_source_repos
 from smartlogic_concordance_transformer_spark.io_tables import CheckpointLedger
+from smartlogic_concordance_transformer_spark.metrics import gtg_check
 from smartlogic_concordance_transformer_spark.pipeline import run_pipeline
+from smartlogic_concordance_transformer_spark.transform import transform
 
 N_DOCS = 1500
 N_BUCKETS = 8
@@ -168,3 +172,108 @@ def test_gtg_infers_n_buckets_from_ledger_meta(spark, tmp_path):
     m = gtg_check(spark, out)  # no n_buckets passed
     assert not m["gtg"]["ledger_complete"]
     assert m["gtg"]["missing_ledger"] == [5]
+
+
+def _data_files(d):
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+@pytest.fixture(scope="module")
+def shaped_run(spark, tmp_path_factory):
+    """One run_pipeline at test scale: (out root, manifest, the executed
+    plan of the persisted unified frame as split_unified receives it)."""
+    seen = {}
+    real_split = pipeline.split_unified
+
+    def spy(unified, carry=()):
+        assert unified.is_cached
+        seen["plan"] = unified._jdf.queryExecution().executedPlan().toString()
+        return real_split(unified, carry)
+
+    out = str(tmp_path_factory.mktemp("shaped") / "kg")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "split_unified", spy)
+        manifest = run_pipeline(
+            spark, generate_source_repos(spark, 600, seed=17), out, n_buckets=N_BUCKETS
+        )
+    assert manifest["gtg"]["ok"], manifest["gtg"]
+    return out, manifest, seen["plan"]
+
+
+def test_one_data_file_per_bucket(shaped_run):
+    # each write task owns whole buckets, so a bucket is one file per
+    # table, not one per (scan task, bucket)
+    out, _, _ = shaped_run
+    for table in ("upp", "quarantine", "triples"):
+        buckets = [d for d in os.listdir(os.path.join(out, table)) if d.startswith("bucket=")]
+        assert len(buckets) > 1, table
+        for d in buckets:
+            assert len(_data_files(os.path.join(out, table, d))) == 1, (table, d)
+
+
+def test_persisted_unified_is_rebalanced_by_bucket(shaped_run):
+    _, _, plan = shaped_run
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
+    assert "Exchange hashpartitioning(bucket#" in plan, plan
+    # the parse UDF still runs once, below the exchange
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_metrics_equal_counts_reread_from_tables(spark, shaped_run):
+    out, manifest, _ = shaped_run
+    reread: dict = defaultdict(Counter)
+
+    def add(table, col, prefix):
+        df = spark.read.parquet(os.path.join(out, table))
+        for r in df.groupBy("bucket", col).count().collect():
+            reread[str(r["bucket"])][prefix + r[col]] += r["count"]
+
+    add("upp", "op", "docs_")
+    add("quarantine", "status", "docs_")
+    add("triples", "pred", "triples_")
+    for c in reread.values():
+        c["docs_valid"] = c["docs_upsert"] + c["docs_delete"]
+        c["docs_in"] = c["docs_valid"] + c["docs_SyntacticallyIncorrect"] + c["docs_SemanticallyIncorrect"]
+    expected = {b: {m: v for m, v in c.items() if v} for b, c in reread.items()}
+    assert manifest["per_bucket"] == expected
+    totals: Counter = Counter()
+    for c in expected.values():
+        totals.update(c)
+    assert manifest["totals"] == dict(totals)
+    assert manifest["canonical_edges"] == spark.read.parquet(
+        os.path.join(out, "canonical_triples")
+    ).count()
+
+
+def test_gtg_healthy_root_runs_at_most_two_jobs(spark, shaped_run):
+    # one union groupBy over the three tables under a known schema: a
+    # shuffle map job and a result job, no schema-inference job
+    out, _, _ = shaped_run
+    sc = spark.sparkContext
+    sc.setJobGroup("test-gtg-jobs", "gtg_check on a healthy root")
+    try:
+        m = gtg_check(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["gtg"]["ok"], m["gtg"]
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("test-gtg-jobs")) <= 2
+
+
+def test_gtg_reads_success_only_table_as_empty(spark, tmp_path):
+    # zero quarantined docs: the quarantine directory holds no data file
+    # (under dynamic partition overwrite not even _SUCCESS; a plain
+    # committer leaves only _SUCCESS). Both are an empty table, not an
+    # unreadable one.
+    src = generate_source_repos(spark, 300, seed=23)
+    good, _ = transform(src, carry=("path",))
+    valid = [r["path"] for r in good.select("path").collect()]
+    out = str(tmp_path / "kg6")
+    m = run_pipeline(spark, src.filter(F.col("path").isin(valid)), out, n_buckets=4, run_cc=False)
+    quarantine = os.path.join(out, "quarantine")
+    assert not any(_data_files(d) for d, _, _ in os.walk(quarantine))
+    assert m["gtg"]["ok"], m["gtg"]
+    assert m["totals"]["docs_in"] == len(valid)
+    open(os.path.join(quarantine, "_SUCCESS"), "w").close()
+    assert os.listdir(quarantine) == ["_SUCCESS"]
+    m2 = gtg_check(spark, out)
+    assert m2["gtg"]["ok"], m2["gtg"]

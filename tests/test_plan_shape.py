@@ -5,13 +5,20 @@ designed around must survive refactors.
 * scans are column-pruned (a doc_id/source query never reads `text`);
 * filters are pushed to the parquet scan;
 * the broadcast hint on small dimensions materializes as a
-  BroadcastHashJoin.
+  BroadcastHashJoin;
+* the per-bucket run metrics are one aggregation (one Exchange).
 """
 
 from pyspark.sql import functions as F
 
 from smartlogic_concordance_transformer_spark.gen import generate_source_repos
-from smartlogic_concordance_transformer_spark.transform import transform
+from smartlogic_concordance_transformer_spark.io_tables import with_bucket
+from smartlogic_concordance_transformer_spark.metrics import partition_metrics
+from smartlogic_concordance_transformer_spark.transform import (
+    split_unified,
+    transform,
+    transform_unified,
+)
 from smartlogic_concordance_transformer_spark.triples import emit_triples
 
 SF = "/root/testdata/sf0.01"
@@ -26,6 +33,19 @@ def test_transform_has_no_shuffle(spark):
     assert "Exchange" not in _plan(good)
     assert "Exchange" not in _plan(quar)
     assert "Exchange" not in _plan(emit_triples(good))
+
+
+def test_partition_metrics_is_one_aggregation(spark):
+    # every metric of every bucket comes from one groupBy over a union of
+    # tagged projections: one Exchange, where separate per-metric
+    # aggregations would shuffle (and run a job pair) once each
+    unified = transform_unified(
+        with_bucket(generate_source_repos(spark, 100, seed=1), 4), carry=("bucket",)
+    )
+    good, quar = split_unified(unified, carry=("bucket",))
+    triples = emit_triples(good, carry=("bucket",))
+    plan = _plan(partition_metrics(good, quar, triples, unified=unified))
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_fold_udf_evaluated_exactly_once(spark):
