@@ -250,36 +250,6 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # snapshot diff of two KG triple materializations (the audit a
-    # nightly graph rebuild publishes): v2 removes doc_id%17==3, retargets
-    # doc_id%13==5 (of the survivors) and adds a _new entity per
-    # doc_id%19==2; one full-outer join on the triple key.
-    from smartlogic_concordance_transformer_spark.io_tables import snapshot_diff
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    base = d.selectExpr(
-        "doc_id",
-        "concat('d', doc_id) as subj",
-        "'linksTo' as pred",
-        "concat('g', pmod(doc_id, 50)) as obj",
-    )
-    v1 = base.select("subj", "pred", "obj")
-    v2 = base.filter("pmod(doc_id, 17) != 3").selectExpr(
-        "subj",
-        "pred",
-        "case when pmod(doc_id, 13) = 5 then concat('g', pmod(doc_id + 1, 50)) "
-        "else obj end as obj",
-    ).unionByName(
-        d.filter("pmod(doc_id, 19) = 2").selectExpr(
-            "concat('d', doc_id, '_new') as subj",
-            "'linksTo' as pred",
-            "concat('g', pmod(doc_id, 50)) as obj",
-        )
-    )
-    return snapshot_diff(v1, v2, keys=["subj", "pred"])
-
-
 def q_text_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inverted index with the stopword band-pass applied BEFORE the
     # posting-list aggregation (the row-size bound), postings sorted.
@@ -370,58 +340,6 @@ def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
             ref_integrity("o_custkey", c, "c_custkey"),
         ],
     )
-
-
-def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Morton (Z-order) clustering key — exact integer bit interleave, so
-    # the oracle replays it with DuckDB's shift/mask operators. The
-    # locality property the key exists for (every z-sorted file covers a
-    # narrow (x, y) rectangle in its parquet footer stats) is pinned by
-    # tests/test_io_tables.py::test_write_zordered_files_cover_narrow_rectangles.
-    from smartlogic_concordance_transformer_spark.io_tables import zorder_key
-
-    d = _docs(spark, sf_dir).selectExpr(
-        "doc_id", "pmod(doc_id, 1024) as x", "pmod(doc_id * 7, 1024) as y"
-    )
-    return d.select("doc_id", "x", "y", zorder_key("x", "y").alias("z"))
-
-
-def q_changeset_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # SCD1 merge with tombstones (the reference's op='delete' rows applied
-    # at batch grain): every 10th key upserted, every 20th then deleted at
-    # a later seq (latest-wins over the upsert), every 50th also inserted
-    # under a fresh key. The oracle replays latest-wins + tombstone + pass-
-    # through in SQL.
-    from smartlogic_concordance_transformer_spark.io_tables import apply_changeset
-
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    base = c.select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_acctbal").alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    ups = c.filter("c_custkey % 10 = 0").select(
-        F.col("c_custkey").alias("k"),
-        (F.col("c_acctbal") + 1000.0).alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-        F.lit(1).alias("seq"),
-        F.lit("upsert").alias("op"),
-    )
-    dels = c.filter("c_custkey % 20 = 0").select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_acctbal").alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-        F.lit(2).alias("seq"),
-        F.lit("delete").alias("op"),
-    )
-    ins = c.filter("c_custkey % 50 = 0").select(
-        (F.col("c_custkey") + 1000000).alias("k"),
-        F.col("c_acctbal").alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-        F.lit(1).alias("seq"),
-        F.lit("upsert").alias("op"),
-    )
-    return apply_changeset(base, ups.unionByName(dels).unionByName(ins), ["k"])
 
 
 def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,33 +462,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("term")
     )
     return fuzzy_match_pairs(base.unionByName(planted))
-
-
-def q_kg_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Daily-ingest entity linking: persisted labels (the kg_cc star forest
-    # over the doc->group graph) folded with a batch of new concordance
-    # edges — a bridge chain merging groups 0..10 plus one brand-new node
-    # joining group 20. The oracle recomputes the FULL updated label table
-    # from scratch via the known merged-group structure; equality proves
-    # incremental == full recompute including untouched pass-through rows.
-    _ensure_shipped(spark)
-    from smartlogic_concordance_transformer_spark.cc import incremental_components
-
-    d = _docs(spark, sf_dir)
-    base = d.selectExpr(
-        "concat('d', lpad(cast(doc_id as string), 8, '0')) as subj",
-        "concat('g', lpad(cast(pmod(doc_id, 50) as string), 4, '0')) as obj",
-    )
-    labels = connected_components(base)
-    bridges = d.filter("doc_id < 10").selectExpr(
-        "concat('g', lpad(cast(doc_id as string), 4, '0')) as subj",
-        "concat('g', lpad(cast(doc_id + 1 as string), 4, '0')) as obj",
-    )
-    newnode = d.filter("doc_id = 20").selectExpr(
-        "concat('x', lpad(cast(doc_id as string), 4, '0')) as subj",
-        "concat('g', lpad(cast(pmod(doc_id, 50) as string), 4, '0')) as obj",
-    )
-    return incremental_components(labels, bridges.unionByName(newnode))
 
 
 def _graph(spark: SparkSession, sf_dir: str):
@@ -1890,20 +1781,16 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_pack": q_sample_pack,
         "sim_recall": q_sim_recall,
         "web_urls": q_web_urls,
-        "kg_cc_incremental": q_kg_cc_incremental,
         "fuzzy_match": q_fuzzy_match,
         "dedup_paragraphs": q_dedup_paragraphs,
         "range_join": q_range_join,
         "kg_resolve_fuzzy": q_kg_resolve_fuzzy,
-        "changeset_apply": q_changeset_apply,
         "join_salted": q_join_salted,
-        "zorder_key": q_zorder_key,
         "quality_checks": q_quality_checks,
         "kg_negatives": q_kg_negatives,
         "text_tfidf": q_text_tfidf,
         "text_bm25": q_text_bm25,
         "text_pmi": q_text_pmi,
-        "kg_diff": q_kg_diff,
         "text_inverted": q_text_inverted,
         "corpus_stats": q_corpus_stats,
         "text_entropy": q_text_entropy,
@@ -2078,36 +1965,6 @@ def retired_oracle_sql() -> dict[str, str]:
             where pa.co >= 5)
           select a, b, co, pmi from out
         """,
-        # full-outer replay of the snapshot compare with the same planted
-        # removed/changed/added families
-        "kg_diff": """
-          with base as (
-            select doc_id, 'd' || cast(doc_id as varchar) as subj,
-                   'linksTo' as pred,
-                   'g' || cast(doc_id % 50 as varchar) as obj
-            from documents),
-          v1 as (select subj, pred, obj from base),
-          v2 as (
-            select subj, pred,
-                   case when doc_id % 13 = 5
-                        then 'g' || cast((doc_id + 1) % 50 as varchar)
-                        else obj end as obj
-            from base where doc_id % 17 != 3
-            union all
-            select 'd' || cast(doc_id as varchar) || '_new', 'linksTo',
-                   'g' || cast(doc_id % 50 as varchar)
-            from documents where doc_id % 19 = 2)
-          select coalesce(v1.subj, v2.subj) as subj,
-                 coalesce(v1.pred, v2.pred) as pred,
-                 case when v1.subj is null then 'added'
-                      when v2.subj is null then 'removed'
-                      else 'changed' end as change,
-                 v1.obj as old_obj, v2.obj as new_obj
-          from v1 full outer join v2
-            on v1.subj = v2.subj and v1.pred = v2.pred
-          where v1.subj is null or v2.subj is null
-             or v1.obj is distinct from v2.obj
-        """,
         # the successor rule replayed as a correlated min over the WHOLE
         # ring (no bucketing) — agreement re-proves the 2-bucket probe
         "kg_negatives": """
@@ -2165,40 +2022,6 @@ def retired_oracle_sql() -> dict[str, str]:
           select v.constraint, v."column", t.total, v.violations,
                  v.violations = 0 as passed
           from v cross join t
-        """,
-        # the same bit interleave with DuckDB shift/mask operators
-        "zorder_key": """
-          with d as (select doc_id, doc_id % 1024 as x,
-                            (doc_id * 7) % 1024 as y
-                     from documents)
-          select doc_id, x, y,
-                 cast(list_sum(list_transform(range(21), i ->
-                   (((x >> i) & 1) << (2 * i)) +
-                   (((y >> i) & 1) << (2 * i + 1)))) as bigint) as z
-          from d
-        """,
-        # latest-wins + tombstone + passthrough replayed declaratively
-        "changeset_apply": """
-          with base as (select c_custkey as k, c_acctbal as bal,
-                               c_mktsegment as seg from customer),
-          ch as (
-            select c_custkey as k, c_acctbal + 1000.0 as bal,
-                   c_mktsegment as seg, 1 as seq, 'upsert' as op
-            from customer where c_custkey % 10 = 0
-            union all
-            select c_custkey, c_acctbal, c_mktsegment, 2, 'delete'
-            from customer where c_custkey % 20 = 0
-            union all
-            select c_custkey + 1000000, c_acctbal, c_mktsegment, 1, 'upsert'
-            from customer where c_custkey % 50 = 0),
-          latest as (select *, row_number() over (partition by k
-                                                  order by seq desc) as rn
-                     from ch),
-          win as (select k, bal, seg, op from latest where rn = 1)
-          select b.k, b.bal, b.seg from base b
-          where b.k not in (select k from ch)
-          union all
-          select k, bal, seg from win where op = 'upsert'
         """,
         # the salted join is row-identical to the plain join by
         # construction; the oracle is the unsalted join + agg
@@ -2294,25 +2117,6 @@ def retired_oracle_sql() -> dict[str, str]:
             on a.term < b.term
            and abs(length(a.term) - length(b.term)) <= 1
           where levenshtein(a.term, b.term) <= 1
-        """,
-        # full-recompute oracle for the incremental fold: groups 0..10 are
-        # merged by the bridge chain (root group 0), every other group
-        # keeps its own root; component label = min doc node over the
-        # merged class; x0020 lands in group 20's class. Untouched rows
-        # must pass through byte-identical.
-        "kg_cc_incremental": """
-          with r as (select doc_id, doc_id % 50 as grp,
-                            case when doc_id % 50 <= 10 then 0 else doc_id % 50 end as rg
-                     from documents),
-          m as (select rg, 'd' || lpad(cast(min(doc_id) as varchar), 8, '0') as component
-                from r group by rg)
-          select 'd' || lpad(cast(doc_id as varchar), 8, '0') as node, component
-          from r join m using (rg)
-          union all
-          select distinct 'g' || lpad(cast(grp as varchar), 4, '0') as node, component
-          from r join m using (rg)
-          union all
-          select 'x0020' as node, component from m where rg = 20
         """,
         "events_pivot": """
           select user_id % 100 as ubucket,

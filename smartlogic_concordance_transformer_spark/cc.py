@@ -46,13 +46,6 @@ class ConvergenceError(RuntimeError):
     pass
 
 
-def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    return fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))).filter(
-        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
-    ).distinct()
-
-
 def _union_find_partition(batches):
     """mapInArrow kernel: union-find over every edge of the partition,
     smaller root wins -> (member, root, changed) per non-root node."""
@@ -132,61 +125,6 @@ def connected_components(
             members = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
             return members.unionByName(roots)
     raise ConvergenceError(f"connected_components did not converge in {max_iter} iterations")
-
-
-def incremental_components(
-    labels: DataFrame,
-    new_edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    **kw,
-) -> DataFrame:
-    """Daily-ingest entity linking: fold a batch of new concordance edges
-    into a persisted ``(node, component)`` label table WITHOUT re-running
-    connected components over the whole graph.
-
-    Returns the full updated label table, row-identical to a from-scratch
-    ``connected_components`` over (star edges of ``labels``) ∪ ``new_edges``
-    — the label table is an exact connectivity encoding (every node points
-    at its component root), so only components actually touched by the
-    batch can change.
-
-    Plan shape (the 100 TB contract, same family as
-    ``minhash_incremental_candidates`` / ``semantic_dedup_incremental_pairs``):
-
-    * the persisted ``labels`` table is NEVER shuffled — it is scanned
-      with two broadcast joins (semi for the affected slice, anti for the
-      pass-through slice). Both broadcast sides are batch-sized: the
-      batch's node set, then the affected component-id set.
-    * the iterative CC loop runs ONLY over the affected subgraph — one
-      star edge per affected member plus the new edges. Components the
-      batch never touches contribute zero edges to the loop.
-    * at scale, persist ``labels`` partitioned/bucketed by ``component``:
-      the semi/anti scans then partition-prune instead of reading the
-      full store.
-
-    Component ids stay consistent with a full recompute: the merged
-    class's label is the min node id across all merged old classes and
-    any brand-new nodes, which is exactly what CC over star+new edges
-    yields. Brand-new nodes (absent from ``labels``) enter via the new
-    edges alone.
-    """
-    new_sym = _symmetrize(new_edges, src, dst)
-    batch_nodes = new_sym.select(F.col("u").alias("node")).distinct()
-    affected = (
-        labels.join(F.broadcast(batch_nodes), "node", "semi")
-        .select("component")
-        .distinct()
-    )
-    affected_members = labels.join(F.broadcast(affected), "component", "semi")
-    star = affected_members.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(src), F.col("component").alias(dst)
-    )
-    updated = connected_components(
-        star.unionByName(new_edges.select(F.col(src), F.col(dst))), src, dst, **kw
-    )
-    untouched = labels.join(F.broadcast(affected), "component", "anti")
-    return untouched.unionByName(updated)
 
 
 def canonical_mapping(edges: DataFrame, src: str = "subj", dst: str = "obj", **kw) -> DataFrame:

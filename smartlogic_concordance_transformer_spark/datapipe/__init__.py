@@ -9,7 +9,6 @@ semantics (simhash bit-majority, embedding matrix math, binary decode).
 
 from .curation import pretraining_pipeline
 from .dedup import (
-    banded_signatures,
     choose_bands,
     lsh_collision_prob,
     duplicate_substring_spans,
@@ -22,7 +21,6 @@ from .dedup import (
     paragraph_dedup,
     shingles,
     simhash,
-    simhash_banded,
     simhash_near_dups,
 )
 from .fuzzy import deletion_neighborhood, fuzzy_match_pairs
@@ -98,8 +96,6 @@ __all__ = [
     "lsh_collision_prob",
     "negative_samples",
     "exact_dedup",
-    "banded_signatures",
-    "simhash_banded",
     "duplicate_substring_spans",
     "excise_duplicate_substrings",
     "shingles",

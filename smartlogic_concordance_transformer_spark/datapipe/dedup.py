@@ -270,29 +270,12 @@ def _banded(signatures: DataFrame, key_col: str, bands: int, rows_per_band: int)
     )
 
 
-def banded_signatures(
-    signatures: DataFrame,
-    key_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """The (key, band, band_hash) banded form of a signature table —
-    the thing the PERSISTED incremental-dedup store should be: write it
-    once via ``io_tables.write_bucketed(..., ["band", "band_hash"], n)``
-    and every future batch's probe joins it with zero store-side
-    Exchange (see ``minhash_incremental_candidates(base_banded=...)``).
-    """
-    return _banded(signatures, key_col, bands, rows_per_band)
-
-
 def minhash_incremental_candidates(
     new_sigs: DataFrame,
-    base_sigs: DataFrame | None = None,
+    base_sigs: DataFrame,
     key_col: str = "doc_id",
     bands: int = 16,
     rows_per_band: int = 4,
-    truncate_lineage: bool = True,
-    base_banded: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs for INCREMENTAL dedup: each NEW document against
     the existing corpus AND the other new documents — the daily-ingest
@@ -306,35 +289,11 @@ def minhash_incremental_candidates(
     result to ``ngram_jaccard_pairs`` over the union corpus for exact
     verification, exactly as with the batch path.
 
-    ``base_banded`` (instead of ``base_sigs``): the store is ALREADY a
-    persisted banded table (key, band, band_hash) — pass the frame from
-    ``io_tables.read_bucketed`` over a table written bucketed on
-    (band, band_hash) and the store side of the probe joins WITHOUT any
-    Exchange, every batch, forever: only the small new batch shuffles.
-    The new-vs-base join runs SEPARATELY from the new-vs-new join in
-    this mode (a union of the probe sides would erase the store's
-    co-partitioning) — same result set by construction.
+    ``new_sigs`` feeds both sides of the probe, so its lineage is cut
+    once and the signature build runs once.
     """
-    if (base_sigs is None) == (base_banded is None):
-        raise ValueError("exactly one of base_sigs / base_banded required")
-    if truncate_lineage:
-        new_sigs = new_sigs.localCheckpoint(eager=False)
-    nb = _banded(new_sigs, key_col, bands, rows_per_band)
+    nb = _banded(new_sigs.localCheckpoint(eager=False), key_col, bands, rows_per_band)
     a = nb.select(F.col(key_col).alias("a"), "band", "band_hash")
-    if base_banded is not None:
-        vs_base = a.join(
-            base_banded.select(F.col(key_col).alias("b"), "band", "band_hash"),
-            ["band", "band_hash"],
-        ).select("a", "b")
-        vs_new = (
-            a.join(
-                nb.select(F.col(key_col).alias("b"), "band", "band_hash"),
-                ["band", "band_hash"],
-            )
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        return vs_base.unionByName(vs_new).distinct()
     probe = _banded(base_sigs, key_col, bands, rows_per_band).select(
         F.col(key_col).alias("b"), "band", "band_hash", F.lit(False).alias("_bn")
     ).unionByName(
@@ -541,7 +500,7 @@ def simhash_near_dups(
     ``truncate_lineage=False`` then to skip the redundant copy."""
     if truncate_lineage:
         fps = fps.localCheckpoint(eager=False)
-    banded = _simhash_banded(fps, key_col)
+    banded = _simhash_chunks(fps, key_col)
     a = banded.select(F.col(key_col).alias("a"), F.col("simhash").alias("fa"), "band", "chunk")
     b = banded.select(F.col(key_col).alias("b"), F.col("simhash").alias("fb"), "band", "chunk")
     cand = a.join(b, ["band", "chunk"]).filter(F.col("a") < F.col("b")).select("a", "b", "fa", "fb").distinct()
@@ -549,7 +508,7 @@ def simhash_near_dups(
     return cand.withColumn("hamming", hamming).filter(F.col("hamming") <= 3).select("a", "b", "hamming")
 
 
-def _simhash_banded(fps: DataFrame, key_col: str) -> DataFrame:
+def _simhash_chunks(fps: DataFrame, key_col: str) -> DataFrame:
     """(key, simhash, band, chunk) — one row per 16-bit fingerprint
     chunk; the shared banding for the batch self-join and the
     incremental probe (drift-proof by construction)."""
@@ -562,21 +521,10 @@ def _simhash_banded(fps: DataFrame, key_col: str) -> DataFrame:
     return fps.select(key_col, "simhash", F.posexplode(chunks).alias("band", "chunk"))
 
 
-def simhash_banded(fps: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """The (key, simhash, band, chunk) banded form of a fingerprint
-    table — the persisted SimHash store shape: write it once via
-    ``io_tables.write_bucketed(..., ["band", "chunk"], n)`` and every
-    batch's probe joins it with zero store-side Exchange (see
-    ``simhash_incremental_candidates(base_banded=...)``)."""
-    return _simhash_banded(fps, key_col)
-
-
 def simhash_incremental_candidates(
     new_fps: DataFrame,
-    base_fps: DataFrame | None = None,
+    base_fps: DataFrame,
     key_col: str = "doc_id",
-    truncate_lineage: bool = True,
-    base_banded: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidates for INCREMENTAL SimHash dedup — the
     daily-ingest shape, mirroring ``minhash_incremental_candidates``:
@@ -589,49 +537,10 @@ def simhash_incremental_candidates(
     Returns (a, b, hamming) with hamming <= 3 (exact popcount over the
     banding's pigeonhole candidates): ``a`` is a new key; ``b`` is an
     existing key, or a new key with ``a < b`` (each new-new pair
-    reported once).
-
-    ``base_banded`` (instead of ``base_fps``): the store is ALREADY the
-    persisted banded table from ``simhash_banded`` — when it is bucket-
-    co-located on (band, chunk) the store side of the probe joins with
-    zero Exchange (new-vs-base and new-vs-new join separately; a probe
-    union would erase the co-partitioning). Identical result set."""
-    if (base_fps is None) == (base_banded is None):
-        raise ValueError("exactly one of base_fps / base_banded required")
-    if truncate_lineage:
-        new_fps = new_fps.localCheckpoint(eager=False)
-    nb = _simhash_banded(new_fps, key_col)
-    hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-    if base_banded is not None:
-        a = nb.select(
-            F.col(key_col).alias("a"), F.col("simhash").alias("fa"), "band", "chunk"
-        )
-        vs_base = a.join(
-            base_banded.select(
-                F.col(key_col).alias("b"), F.col("simhash").alias("fb"),
-                "band", "chunk",
-            ),
-            ["band", "chunk"],
-        ).select("a", "b", "fa", "fb")
-        vs_new = (
-            a.join(
-                nb.select(
-                    F.col(key_col).alias("b"), F.col("simhash").alias("fb"),
-                    "band", "chunk",
-                ),
-                ["band", "chunk"],
-            )
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", "fa", "fb")
-        )
-        return (
-            vs_base.unionByName(vs_new)
-            .distinct()
-            .withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= 3)
-            .select("a", "b", "hamming")
-        )
-    probe = _simhash_banded(base_fps, key_col).select(
+    reported once). ``new_fps`` feeds both sides of the probe, so its
+    lineage is cut once."""
+    nb = _simhash_chunks(new_fps.localCheckpoint(eager=False), key_col)
+    probe = _simhash_chunks(base_fps, key_col).select(
         F.col(key_col).alias("b"), F.col("simhash").alias("fb"),
         "band", "chunk", F.lit(False).alias("_bn"),
     ).unionByName(

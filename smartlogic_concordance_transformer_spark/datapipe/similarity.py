@@ -543,9 +543,6 @@ def semantic_dedup_incremental_pairs(
     threshold: float = 0.99,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    truncate_lineage: bool = True,
-    new_assigned: bool = False,
-    split_probe: bool = False,
 ) -> DataFrame:
     """Semantic-duplicate candidates for INCREMENTAL ingest — the
     daily-batch shape, mirroring ``minhash_incremental_candidates`` /
@@ -562,50 +559,13 @@ def semantic_dedup_incremental_pairs(
     new key; ``b`` is an existing key, or a new key with ``a < b`` (each
     new-new pair reported once). Keys must be globally unique across
     both frames. Same within-cell semantic as ``semantic_dedup_pairs``.
-
-    ``new_assigned=True``: ``new_corpus`` is ALREADY an assigned table
-    ``(key_col, cell, vec_col)`` — the streaming-ingest path, where the
-    sink signs each batch exactly once and persists the assigned rows;
-    ``centroids`` is then unused (assignment happened at signing).
-
-    ``split_probe=True``: join new-vs-base and new-vs-new SEPARATELY
-    instead of unioning the probe sides — when ``base_assigned`` is a
-    bucket-co-located table on ``cell`` (``io_tables.write_bucketed``),
-    the union would erase its co-partitioning; split, the store side
-    joins with zero Exchange every batch. Identical result set."""
-    if new_assigned:
-        na = new_corpus.select(
-            F.col(key_col).alias("_k"),
-            F.col("cell"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-    else:
-        na = spherical_assign(new_corpus, centroids, vec_col).select(
-            F.col(key_col).alias("_k"),
-            F.col("_cell").alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-    if truncate_lineage:
-        na = na.localCheckpoint(eager=False)
-    if split_probe:
-        cos = cosine_udf()
-        a = na.select(F.col("_k").alias("a"), "cell", F.col("_v").alias("_va"))
-        vs_base = a.join(
-            base_assigned.select(
-                F.col(key_col).alias("b"), "cell",
-                F.col(vec_col).cast("array<double>").alias("_vb"),
-            ),
-            "cell",
-        )
-        vs_new = a.join(
-            na.select(F.col("_k").alias("b"), "cell", F.col("_v").alias("_vb")),
-            "cell",
-        ).filter(F.col("a") < F.col("b"))
-        return (
-            vs_base.unionByName(vs_new)
-            .filter(cos(F.col("_va"), F.col("_vb")) >= threshold)
-            .select("a", "b", "cell")
-        )
+    The assigned new batch feeds both sides of the probe, so its lineage
+    is cut once and the assignment runs once."""
+    na = spherical_assign(new_corpus, centroids, vec_col).select(
+        F.col(key_col).alias("_k"),
+        F.col("_cell").alias("cell"),
+        F.col(vec_col).cast("array<double>").alias("_v"),
+    ).localCheckpoint(eager=False)
     probe = base_assigned.select(
         F.col(key_col).alias("b"),
         F.col("cell"),

@@ -20,11 +20,16 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import _symmetrize
-
 _MOTIF_TERM = re.compile(r"^\((\w*)\)-\[(\w*)\]->\((\w*)\)$")
 
 RESET_PROBABILITY = 0.15
+
+
+def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    return fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))).filter(
+        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
+    ).distinct()
 
 
 class GraphFrame:

@@ -11,6 +11,11 @@
 Resume: ledger-done buckets are excluded from the *scan* (predicate on the
 bucket expression pushes to the parquet reader / Iceberg manifest), so a
 re-run after a kill only pays for unfinished partitions.
+
+Commit record: the three bucketed tables are written with dynamic
+partition overwrite, so they carry no ``_SUCCESS`` marker, and a table
+with no rows is an empty directory. The per-bucket ledger entry plus the
+manifest's GTG section is their commit record; ``_SUCCESS`` is not.
 """
 
 from __future__ import annotations
@@ -55,10 +60,12 @@ def run_pipeline(
     good, quarantine = split_unified(unified, carry=("bucket",))
     triples = emit_triples(good, carry=("bucket",))
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    good.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(out_root, "upp"))
-    quarantine.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(out_root, "quarantine"))
-    triples.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(out_root, "triples"))
+    # dynamic overwrite replaces only the buckets this run writes, so the
+    # done buckets a resume skipped stay; set per write, not on the session
+    for name, df in (("upp", good), ("quarantine", quarantine), ("triples", triples)):
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(os.path.join(out_root, name))
 
     # One collect: a few rows per bucket, from which the ledger counts and
     # the manifest are both derived.

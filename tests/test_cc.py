@@ -205,72 +205,3 @@ def test_cc_converges_on_chained_shared_id_corpus(spark):
     assert comp.count() == comp.select("node").distinct().count()
     # canonical is the component min
     assert comp.filter(F.col("component") > F.col("node")).count() == 0
-
-
-def _labels_of(spark, edges):
-    df = spark.createDataFrame(edges, "subj string, obj string")
-    return connected_components(df)
-
-
-@pytest.mark.parametrize("seed,n_nodes,n_base,n_new", [(11, 60, 50, 12), (12, 250, 200, 40)])
-def test_incremental_cc_equals_full_recompute(spark, seed, n_nodes, n_base, n_new):
-    from smartlogic_concordance_transformer_spark.cc import incremental_components
-
-    rng = random.Random(seed)
-
-    def mk(n):
-        out = []
-        while len(out) < n:
-            u, v = f"n{rng.randrange(n_nodes):04d}", f"n{rng.randrange(n_nodes):04d}"
-            if u != v:
-                out.append((u, v))
-        return out
-
-    base, new = mk(n_base), mk(n_new)
-    labels = _labels_of(spark, base)
-    new_df = spark.createDataFrame(new, "subj string, obj string")
-    got = {r.node: r.component for r in incremental_components(labels, new_df).collect()}
-
-    assert got == _canonical(union_find_components(base + new))
-
-
-def test_incremental_cc_disjoint_batch_leaves_store_untouched(spark):
-    # a batch touching only brand-new nodes must pass every existing label
-    # row through unchanged and add exactly the new component
-    from smartlogic_concordance_transformer_spark.cc import incremental_components
-
-    labels = _labels_of(spark, [("a", "b"), ("c", "d")])
-    before = {(r.node, r.component) for r in labels.collect()}
-    new_df = spark.createDataFrame([("x2", "x1")], "subj string, obj string")
-    got = {(r.node, r.component) for r in incremental_components(labels, new_df).collect()}
-    assert got == before | {("x1", "x1"), ("x2", "x1")}
-
-
-def test_incremental_cc_merges_across_existing_components(spark):
-    # one bridge edge merges two persisted components; the merged label is
-    # the min across BOTH old classes (full-recompute semantics)
-    from smartlogic_concordance_transformer_spark.cc import incremental_components
-
-    labels = _labels_of(spark, [("m1", "m2"), ("k1", "k2"), ("z1", "z2")])
-    new_df = spark.createDataFrame([("m2", "k2")], "subj string, obj string")
-    got = {(r.node, r.component) for r in incremental_components(labels, new_df).collect()}
-    assert got == {
-        ("k1", "k1"), ("k2", "k1"), ("m1", "k1"), ("m2", "k1"),
-        ("z1", "z1"), ("z2", "z1"),
-    }
-
-
-def test_incremental_cc_store_is_broadcast_probed_never_shuffled(spark):
-    # the persisted label table enters the plan through broadcast semi/anti
-    # joins only, so the store is never hash-exchanged. The CC loop's two
-    # store probes ran eagerly (checkpoint truncates them); the final plan
-    # still carries the pass-through anti join and, inside its broadcast
-    # subtree, the batch-node semi probe — both must be BroadcastHashJoin.
-    from smartlogic_concordance_transformer_spark.cc import incremental_components
-
-    labels = _labels_of(spark, [("a", "b"), ("c", "d")]).localCheckpoint()
-    new_df = spark.createDataFrame([("b", "c")], "subj string, obj string")
-    out = incremental_components(labels, new_df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "LeftSemi" in plan and "LeftAnti" in plan, plan

@@ -2645,36 +2645,6 @@ def test_cooccurrence_pmi_matches_python(spark):
     assert all(a <= b for a, b in got), "pairs must be canonically ordered"
 
 
-def test_snapshot_diff_semantics(spark):
-    from smartlogic_concordance_transformer_spark.io_tables import snapshot_diff
-
-    old = spark.createDataFrame(
-        [("s1", "p", "o1"), ("s2", "p", "o2"), ("s3", "p", None), ("s4", "p", "o4")],
-        "subj string, pred string, obj string",
-    )
-    new = spark.createDataFrame(
-        [("s1", "p", "o1"),        # unchanged -> drops out
-         ("s2", "p", "oX"),        # changed
-         ("s3", "p", "o3"),        # null -> value = changed (null-safe)
-         ("s5", "p", "o5")],       # added; s4 removed
-        "subj string, pred string, obj string",
-    )
-    got = {r.subj: (r.change, r.old_obj, r.new_obj)
-           for r in snapshot_diff(old, new, keys=["subj", "pred"]).collect()}
-    assert got == {
-        "s2": ("changed", "o2", "oX"),
-        "s3": ("changed", None, "o3"),
-        "s4": ("removed", "o4", None),
-        "s5": ("added", None, "o5"),
-    }
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="schema mismatch"):
-        snapshot_diff(old, new.withColumnRenamed("obj", "val"), keys=["subj"])
-    with _pytest.raises(ValueError, match="key columns"):
-        snapshot_diff(old, new, keys=["nope"])
-
-
 def test_heavy_hitters_misra_gries_bounds(spark):
     from smartlogic_concordance_transformer_spark.datapipe.sketches import (
         heavy_hitters,

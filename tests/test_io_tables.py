@@ -1,60 +1,7 @@
-"""ParquetTableIO: the Iceberg-shaped bucketed writer + ledger interface
-(the sink a real deployment swaps for an Iceberg catalog)."""
+"""Table IO: the per-bucket ledger's bucket-count guard, and format parity
+of the parquet sink with ORC and CSV."""
 
-import os
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from smartlogic_concordance_transformer_spark.io_tables import (
-    CheckpointLedger,
-    ParquetTableIO,
-    with_bucket,
-)
-
-
-def test_bucketed_write_read_roundtrip(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    io = ParquetTableIO(root, n_buckets=4)
-    df = with_bucket(
-        spark.createDataFrame(
-            [(f"repo-{i % 7}", f"s{i}", i) for i in range(100)],
-            "repo string, subj string, n long",
-        ),
-        4,
-    )
-    assert io.pending_buckets() == [0, 1, 2, 3]
-    entries = {b: io.write_bucket(df, b, fingerprint_cols=["subj"]) for b in range(4)}
-    assert sum(e["rows"] for e in entries.values()) == 100
-    assert io.pending_buckets() == []
-
-    back = io.read(spark)
-    assert back.count() == 100
-    assert set(back.columns) == {"repo", "subj", "n", "bucket"}
-    # bucket partition column survives the hive-style layout; only
-    # non-empty buckets carry rows (hash collisions can leave buckets empty)
-    expected_buckets = {r.bucket for r in df.select("bucket").distinct().collect()}
-    assert {r.bucket for r in back.select("bucket").distinct().collect()} == expected_buckets
-
-
-def test_fingerprint_is_order_insensitive_and_content_sensitive(spark, tmp_path):
-    io_a = ParquetTableIO(str(tmp_path / "a"), n_buckets=1)
-    io_b = ParquetTableIO(str(tmp_path / "b"), n_buckets=1)
-    rows = [("r", f"s{i}") for i in range(50)]
-    df1 = with_bucket(spark.createDataFrame(rows, "repo string, subj string"), 1)
-    df2 = with_bucket(
-        spark.createDataFrame(list(reversed(rows)), "repo string, subj string").repartition(5), 1
-    )
-    f1 = io_a.write_bucket(df1, 0, ["subj"])["fingerprint"]
-    f2 = io_b.write_bucket(df2, 0, ["subj"])["fingerprint"]
-    assert f1 == f2  # same content, any order/partitioning
-
-    io_c = ParquetTableIO(str(tmp_path / "c"), n_buckets=1)
-    df3 = with_bucket(
-        spark.createDataFrame(rows[:-1] + [("r", "sXX")], "repo string, subj string"), 1
-    )
-    assert io_c.write_bucket(df3, 0, ["subj"])["fingerprint"] != f1
+from smartlogic_concordance_transformer_spark.io_tables import CheckpointLedger
 
 
 def test_ledger_n_buckets_guard(tmp_path):
@@ -64,490 +11,6 @@ def test_ledger_n_buckets_guard(tmp_path):
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "n_buckets=8" in str(e)
-
-
-def test_compact_parquet_dir_roundtrip(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        compact_parquet_dir,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.range(1000).selectExpr("id", "id * 2 as v")
-    df.repartition(16).write.parquet(path)
-    import os as _os
-
-    before = [f for f in _os.listdir(path) if f.endswith(".parquet")]
-    assert len(before) == 16
-    want = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    r = compact_parquet_dir(spark, path, target_rows_per_file=500)
-    assert r == {"compacted": True, "files_before": 16, "files_after": 2, "rows": 1000}
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-    # idempotent: already at target -> reported no-op, nothing rewritten
-    r2 = compact_parquet_dir(spark, path, target_rows_per_file=500)
-    assert r2["compacted"] is False and r2["files_after"] == 2
-    # stale temp/old dirs from a crashed prior run are cleared, not fatal
-    _os.makedirs(path + ".compact_tmp", exist_ok=True)
-    r3 = compact_parquet_dir(spark, path, target_rows_per_file=100, shuffle=True)
-    assert r3["compacted"] is False or r3["files_after"] <= 10
-
-
-def test_compact_parquet_dir_validation(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        compact_parquet_dir,
-    )
-
-    path = str(tmp_path / "t2")
-    spark.range(10).coalesce(1).write.parquet(path)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        compact_parquet_dir(spark, path, target_rows_per_file=0)
-    # single file: below min_files -> no-op
-    r = compact_parquet_dir(spark, path)
-    assert r["compacted"] is False and r["rows"] == 10
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """The write-once-shuffle-never claim: two tables bucketed on the
-    join key with equal bucket counts must sort-merge join with ZERO
-    Exchange on either side (broadcast disabled so the plan can't
-    sidestep the question), and sortBy must also eliminate the
-    per-task Sort."""
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    a = spark.range(2000).selectExpr("id as k", "id * 3 as va")
-    b = spark.range(0, 2000, 2).selectExpr("id as k", "id * 7 as vb")
-    write_bucketed(a, "t_buck_a", str(tmp_path / "a"), "k", 8, sort_col="k")
-    write_bucketed(b, "t_buck_b", str(tmp_path / "b"), "k", 8, sort_col="k")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = read_bucketed(spark, "t_buck_a").join(
-            read_bucketed(spark, "t_buck_b"), "k"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        got = {(r["k"], r["va"], r["vb"]) for r in j.collect()}
-        assert got == {(i, i * 3, i * 7) for i in range(0, 2000, 2)}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("drop table if exists t_buck_a")
-        spark.sql("drop table if exists t_buck_b")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        write_bucketed(a, "t_buck_bad", str(tmp_path / "c"), "k", 0)
-
-
-def test_bucketed_banded_store_probe(spark, tmp_path):
-    """The daily-ingest economics end-to-end: a banded signature store
-    written bucket-co-located on (band, band_hash) is probed by a new
-    batch with EXACTLY ONE Exchange — the small new side — and the
-    composed base_banded path returns the identical candidate set to
-    the classic base_sigs path."""
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.datapipe import (
-        banded_signatures,
-        minhash_lsh_candidates,
-        minhash_signatures,
-    )
-    from smartlogic_concordance_transformer_spark.datapipe.dedup import (
-        minhash_incremental_candidates,
-    )
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = docs.filter("doc_id % 3 != 0").select("doc_id", "text")
-    # new batch: fresh docs plus exact twins of some base docs
-    new = (
-        docs.filter("doc_id % 3 = 0")
-        .select("doc_id", "text")
-        .unionByName(
-            base.filter("doc_id % 10 = 1").select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-            )
-        )
-    )
-    base_sigs = minhash_signatures(base)
-    new_sigs = minhash_signatures(new).localCheckpoint()
-    write_bucketed(
-        banded_signatures(base_sigs),
-        "t_band_store",
-        str(tmp_path / "store"),
-        ["band", "band_hash"],
-        8,
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        store = read_bucketed(spark, "t_band_store")
-        classic = {
-            (r["a"], r["b"])
-            for r in minhash_incremental_candidates(
-                new_sigs, base_sigs, truncate_lineage=False
-            ).collect()
-        }
-        bucketed = minhash_incremental_candidates(
-            new_sigs, base_banded=store, truncate_lineage=False
-        )
-        assert {(r["a"], r["b"]) for r in bucketed.collect()} == classic
-        assert classic, "no candidates — twins did not band-collide"
-        # the store-probe join alone: one Exchange (new side), store none
-        nb = banded_signatures(new_sigs).select(
-            F.col("doc_id").alias("a"), "band", "band_hash"
-        )
-        j = nb.join(
-            store.select(F.col("doc_id").alias("b"), "band", "band_hash"),
-            ["band", "band_hash"],
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("drop table if exists t_band_store")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        minhash_incremental_candidates(new_sigs)
-    with _pytest.raises(ValueError):
-        minhash_incremental_candidates(new_sigs, base_sigs, base_banded=store)
-
-
-def test_bucketed_store_probe_simhash_and_semantic(spark, tmp_path):
-    """The co-location pattern generalizes across kernels: SimHash and
-    SemDeDup incremental probes over bucket-co-located stores return
-    the classic result sets, and each store-probe join runs with
-    exactly ONE Exchange (the new side)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from smartlogic_concordance_transformer_spark.datapipe import (
-        simhash,
-        simhash_banded,
-    )
-    from smartlogic_concordance_transformer_spark.datapipe.dedup import (
-        simhash_incremental_candidates,
-    )
-    from smartlogic_concordance_transformer_spark.datapipe.similarity import (
-        semantic_dedup_incremental_pairs,
-        spherical_assign,
-    )
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = docs.filter("doc_id % 3 != 0").select("doc_id", "text")
-    new = (
-        docs.filter("doc_id % 3 = 0")
-        .select("doc_id", "text")
-        .unionByName(
-            base.filter("doc_id % 10 = 1").select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-            )
-        )
-    )
-    base_fps = simhash(base)
-    new_fps = simhash(new).localCheckpoint()
-    write_bucketed(
-        simhash_banded(base_fps), "t_sh_store", str(tmp_path / "sh"),
-        ["band", "chunk"], 8,
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        store = read_bucketed(spark, "t_sh_store")
-        classic = {
-            tuple(r)
-            for r in simhash_incremental_candidates(
-                new_fps, base_fps, truncate_lineage=False
-            ).collect()
-        }
-        got = {
-            tuple(r)
-            for r in simhash_incremental_candidates(
-                new_fps, base_banded=store, truncate_lineage=False
-            ).collect()
-        }
-        assert got == classic and classic
-        nb = simhash_banded(new_fps).select(
-            F.col("doc_id").alias("a"), "band", "chunk"
-        )
-        j = nb.join(
-            store.select(F.col("doc_id").alias("b"), "band", "chunk"),
-            ["band", "chunk"],
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-
-        # --- semantic kernel: store = assigned (key, cell, vec), bucketed on cell
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        rows = emb.orderBy("vec_id").limit(64).collect()
-        C = [list(rows[i]["embedding"]) for i in range(0, 64, 8)]
-        all_assigned = spherical_assign(emb.limit(200), C).select(
-            "vec_id", F.col("_cell").alias("cell"), "embedding"
-        )
-        base_a = all_assigned.filter("vec_id % 3 != 0")
-        new_a = all_assigned.filter("vec_id % 3 = 0").unionByName(
-            base_a.filter("vec_id % 10 = 1").select(
-                (F.col("vec_id") + 1_000_000).alias("vec_id"), "cell", "embedding"
-            )
-        ).localCheckpoint()
-        write_bucketed(base_a, "t_sem_store", str(tmp_path / "sem"), "cell", 8)
-        sem_store = read_bucketed(spark, "t_sem_store")
-        kw = dict(centroids=C, threshold=0.99, key_col="vec_id",
-                  truncate_lineage=False, new_assigned=True)
-        classic_s = {
-            tuple(r)
-            for r in semantic_dedup_incremental_pairs(new_a, base_a, **kw).collect()
-        }
-        got_s = {
-            tuple(r)
-            for r in semantic_dedup_incremental_pairs(
-                new_a, sem_store, split_probe=True, **kw
-            ).collect()
-        }
-        assert got_s == classic_s and classic_s  # twins hit cos=1.0
-        js = new_a.select(F.col("vec_id").alias("a"), "cell").join(
-            sem_store.select(F.col("vec_id").alias("b"), "cell"), "cell"
-        )
-        plan_s = js._jdf.queryExecution().executedPlan().toString()
-        assert plan_s.count("Exchange hashpartitioning") == 1, plan_s
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("drop table if exists t_sh_store")
-        spark.sql("drop table if exists t_sem_store")
-
-
-# --- changeset apply (SCD1 merge with tombstones) ---
-
-
-def test_apply_changeset_semantics(spark):
-    from smartlogic_concordance_transformer_spark.io_tables import apply_changeset
-
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "k long, v string"
-    )
-    changes = spark.createDataFrame(
-        [
-            (2, "b2", 1, "upsert"),   # replace
-            (3, "xx", 1, "upsert"),   # superseded by the later delete
-            (3, None, 2, "delete"),   # latest wins -> key 3 gone
-            (5, "e", 1, "upsert"),    # insert of a new key
-            (4, None, 1, "delete"),   # plain tombstone
-        ],
-        "k long, v string, seq int, op string",
-    )
-    got = {(r.k, r.v) for r in apply_changeset(base, changes, ["k"]).collect()}
-    assert got == {(1, "a"), (2, "b2"), (5, "e")}
-
-
-def test_apply_changeset_upsert_after_delete_resurrects(spark):
-    from smartlogic_concordance_transformer_spark.io_tables import apply_changeset
-
-    base = spark.createDataFrame([(1, "a")], "k long, v string")
-    changes = spark.createDataFrame(
-        [(1, None, 1, "delete"), (1, "a2", 2, "upsert")],
-        "k long, v string, seq int, op string",
-    )
-    got = {(r.k, r.v) for r in apply_changeset(base, changes, ["k"]).collect()}
-    assert got == {(1, "a2")}
-
-
-def test_apply_changeset_validates(spark):
-    from smartlogic_concordance_transformer_spark.io_tables import apply_changeset
-
-    base = spark.createDataFrame([(1, "a")], "k long, v string")
-    dup = spark.createDataFrame(
-        [(1, "x", 1, "upsert"), (1, "y", 1, "upsert")],
-        "k long, v string, seq int, op string",
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        apply_changeset(base, dup, ["k"]).collect()
-    badop = spark.createDataFrame(
-        [(1, "x", 1, "merge")], "k long, v string, seq int, op string"
-    )
-    with pytest.raises(ValueError, match="unknown"):
-        apply_changeset(base, badop, ["k"]).collect()
-
-
-def test_apply_changeset_store_side_is_broadcast_anti(spark):
-    # the snapshot never shuffles: its only plan entry is a broadcast
-    # anti-join against the batch's key set
-    from smartlogic_concordance_transformer_spark.io_tables import apply_changeset
-
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    changes = spark.createDataFrame(
-        [(2, "b2", 1, "upsert")], "k long, v string, seq int, op string"
-    )
-    out = apply_changeset(base, changes, ["k"], check_unique=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-
-
-def test_changeset_store_sequential_batches_match_reference(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        ChangesetStore,
-        apply_changeset,
-    )
-
-    root = str(tmp_path / "store")
-    base_rows = [(i, f"v{i}") for i in range(20)]
-    base = spark.createDataFrame(base_rows, "k long, v string")
-    store = ChangesetStore(root, ["k"], n_buckets=4)
-    store.init(base)
-
-    batches = [
-        [(3, "v3b", 1, "upsert"), (4, None, 1, "delete"), (100, "new", 1, "upsert")],
-        [(100, None, 1, "delete"), (3, "v3c", 1, "upsert"), (5, None, 1, "delete")],
-        [(4, "back", 1, "upsert")],
-    ]
-    ref = base
-    for b in batches:
-        ch = spark.createDataFrame(b, "k long, v string, seq int, op string")
-        store.apply(ch)
-        ref = apply_changeset(ref, ch, ["k"]).localCheckpoint()
-    got = {(r.k, r.v) for r in store.read(spark).collect()}
-    want = {(r.k, r.v) for r in ref.collect()}
-    assert got == want
-
-
-def test_changeset_store_untouched_buckets_not_rewritten(spark, tmp_path):
-    import glob
-    import os as _os
-
-    from smartlogic_concordance_transformer_spark.io_tables import ChangesetStore
-
-    root = str(tmp_path / "store")
-    base = spark.createDataFrame([(i, i * 10) for i in range(40)], "k long, v long")
-    store = ChangesetStore(root, ["k"], n_buckets=8)
-    store.init(base)
-    ch = spark.createDataFrame([(1, 999, 1, "upsert")], "k long, v long, seq int, op string")
-    before = {p: _os.path.getmtime(p) for p in glob.glob(f"{root}/kb=*/*.parquet")}
-    affected = store.apply(ch)
-    assert len(affected) == 1
-    after = {p: _os.path.getmtime(p) for p in glob.glob(f"{root}/kb=*/*.parquet")}
-    touched_prefix = f"{root}/kb={affected[0]}/"
-    for p, t in before.items():
-        if not p.startswith(touched_prefix):
-            assert p in after and after[p] == t, f"untouched bucket rewritten: {p}"
-
-
-def test_changeset_store_clears_fully_tombstoned_bucket(spark, tmp_path):
-    import os as _os
-
-    from smartlogic_concordance_transformer_spark.io_tables import ChangesetStore
-
-    root = str(tmp_path / "store")
-    base = spark.createDataFrame([(1, "a")], "k long, v string")
-    store = ChangesetStore(root, ["k"], n_buckets=2)
-    store.init(base)
-    ch = spark.createDataFrame([(1, None, 1, "delete")], "k long, v string, seq int, op string")
-    store.apply(ch)
-    assert store.read(spark).count() == 0
-    assert not any(
-        d.startswith("kb=") and _os.listdir(_os.path.join(root, d))
-        for d in _os.listdir(root)
-        if _os.path.isdir(_os.path.join(root, d))
-    )
-
-
-def test_changeset_store_replay_is_idempotent(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.io_tables import ChangesetStore
-
-    root = str(tmp_path / "store")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    store = ChangesetStore(root, ["k"], n_buckets=2)
-    store.init(base)
-    ch = spark.createDataFrame(
-        [(1, "a2", 1, "upsert"), (2, None, 1, "delete")],
-        "k long, v string, seq int, op string",
-    )
-    store.apply(ch)
-    first = {(r.k, r.v) for r in store.read(spark).collect()}
-    store.apply(ch)  # at-least-once redelivery
-    second = {(r.k, r.v) for r in store.read(spark).collect()}
-    assert first == second == {(1, "a2")}
-
-
-# --- Z-order clustering ---
-
-
-def test_zorder_key_matches_python_morton(spark):
-    import random as _random
-
-    from smartlogic_concordance_transformer_spark.io_tables import zorder_key
-
-    rng = _random.Random(3)
-    pts = [(rng.randrange(2**21), rng.randrange(2**21)) for _ in range(200)]
-    pts += [(0, 0), (2**21 - 1, 0), (0, 2**21 - 1), (2**21 - 1, 2**21 - 1)]
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = {(r.x, r.y): r.z for r in df.select("x", "y", zorder_key("x", "y").alias("z")).collect()}
-
-    def morton(x, y, bits=21):
-        z = 0
-        for i in range(bits):
-            z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    assert all(z == morton(x, y) for (x, y), z in got.items())
-    with pytest.raises(ValueError):
-        zorder_key("x", "y", bits=0)
-
-
-def test_write_zordered_files_cover_narrow_rectangles(spark, tmp_path):
-    """The point of Z-ordering: every output file's (x, y) footer stats
-    span a narrow rectangle, so min/max pruning works on BOTH columns —
-    an x-sorted layout prunes x but each file spans the full y range."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from smartlogic_concordance_transformer_spark.io_tables import write_zordered
-
-    side = 64  # 64x64 grid
-    grid = spark.range(side * side).selectExpr(
-        f"id % {side} as x", f"id div {side} as y"
-    )
-
-    def spans(path):
-        out = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.read_metadata(f)
-            cols = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            lo = {c: None for c in cols}
-            hi = {c: None for c in cols}
-            for rg in range(md.num_row_groups):
-                for c, i in cols.items():
-                    st = md.row_group(rg).column(i).statistics
-                    lo[c] = st.min if lo[c] is None else min(lo[c], st.min)
-                    hi[c] = st.max if hi[c] is None else max(hi[c], st.max)
-            out.append({c: hi[c] - lo[c] + 1 for c in cols})
-        return out
-
-    zpath = str(tmp_path / "z")
-    write_zordered(grid, zpath, "x", "y", n_files=16)
-    xpath = str(tmp_path / "xsort")
-    grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(xpath)
-
-    zs = spans(zpath)
-    xs = spans(xpath)
-    # Z-order: both dimensions narrow (16 files over a 64x64 grid ->
-    # ideal 16x16 tiles; allow 2x slack for range-partitioner estimation)
-    assert all(s["x"] <= side // 2 and s["y"] <= side // 2 for s in zs), zs
-    # the x-sorted baseline leaves y unprunable in every file
-    assert all(s["y"] == side for s in xs), xs
 
 
 def test_orc_and_csv_roundtrip_match_parquet(spark, tmp_path):
@@ -565,90 +28,3 @@ def test_orc_and_csv_roundtrip_match_parquet(spark, tmp_path):
     src.write.option("header", True).csv(csv_p)
     back = spark.read.schema(src.schema).option("header", True).csv(csv_p)
     assert {tuple(r) for r in back.collect()} == want
-
-
-def test_diff_publish_roundtrip_equals_rebuild(spark, tmp_path):
-    # nightly incremental publish: v2 = apply(diff(v1, v2)) on a store
-    # initialized at v1 — only the delta is written, result equals v2
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        ChangesetStore,
-        apply_changeset,
-        diff_to_changeset,
-        snapshot_diff,
-    )
-
-    v1 = spark.createDataFrame(
-        [("s1", "p", "o1"), ("s2", "p", "o2"), ("s3", "p", "o3")],
-        "subj string, pred string, obj string",
-    )
-    v2 = spark.createDataFrame(
-        [("s1", "p", "o1"),        # unchanged
-         ("s2", "p", "oX"),        # changed
-         ("s4", "p", "o4")],       # added; s3 removed
-        "subj string, pred string, obj string",
-    )
-    keys = ["subj", "pred"]
-    ch = diff_to_changeset(snapshot_diff(v1, v2, keys), keys, seq=7)
-    assert set(ch.columns) == {"subj", "pred", "obj", "seq", "op"}
-
-    # pure-frame merge
-    got = apply_changeset(v1, ch, keys)
-    assert sorted(tuple(r) for r in got.collect()) == sorted(
-        tuple(r) for r in v2.collect()
-    )
-
-    # durable store: only affected buckets rewrite, read-back equals v2
-    store = ChangesetStore(str(tmp_path / "kg"), keys, n_buckets=8)
-    store.init(v1)
-    store.apply(ch)
-    back = sorted(tuple(r) for r in store.read(spark).collect())
-    assert back == sorted(tuple(r) for r in v2.collect())
-
-    # an empty diff publishes nothing and changes nothing
-    ch2 = diff_to_changeset(snapshot_diff(v2, v2, keys), keys, seq=8)
-    assert ch2.count() == 0
-
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-
-def _snapshot(entries):
-    # entries: dict key -> (obj, flag) — unique keys by construction
-    return [(k, v[0], v[1]) for k, v in sorted(entries.items())]
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.dictionaries(
-        st.text(alphabet="abcdef", min_size=1, max_size=3),
-        st.tuples(st.one_of(st.none(), st.integers(0, 5)), st.booleans()),
-        max_size=8,
-    ),
-    st.dictionaries(
-        st.text(alphabet="abcdef", min_size=1, max_size=3),
-        st.tuples(st.one_of(st.none(), st.integers(0, 5)), st.booleans()),
-        max_size=8,
-    ),
-)
-def test_diff_publish_roundtrip_property(spark, v1e, v2e):
-    # for ANY two keyed snapshots (nullable values, overlapping or
-    # disjoint key sets), applying the diff-derived changeset to v1
-    # reproduces v2 exactly
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        apply_changeset,
-        diff_to_changeset,
-        snapshot_diff,
-    )
-
-    schema = "k string, obj int, flag boolean"
-    v1 = spark.createDataFrame(_snapshot(v1e) or [("zz", None, True)], schema)
-    v2 = spark.createDataFrame(_snapshot(v2e) or [("zz", None, True)], schema)
-    ch = diff_to_changeset(snapshot_diff(v1, v2, ["k"]), ["k"], seq=1)
-    got = sorted(tuple(r) for r in apply_changeset(v1, ch, ["k"]).collect())
-    want = sorted(tuple(r) for r in v2.collect())
-    assert got == want

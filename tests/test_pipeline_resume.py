@@ -211,6 +211,21 @@ def test_one_data_file_per_bucket(shaped_run):
             assert len(_data_files(os.path.join(out, table, d))) == 1, (table, d)
 
 
+def test_run_pipeline_leaves_session_overwrite_mode_alone(spark, shaped_run, tmp_path):
+    # dynamic overwrite is an option of run_pipeline's own writes: the
+    # caller's session keeps its static default, so a later partitioned
+    # overwrite still replaces partitions its input no longer has
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a"), (2, "b")], "p int, v string").write.partitionBy(
+        "p"
+    ).parquet(path)
+    spark.createDataFrame([(1, "c")], "p int, v string").write.mode("overwrite").partitionBy(
+        "p"
+    ).parquet(path)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("c", 1)]
+
+
 def test_persisted_unified_is_rebalanced_by_bucket(shaped_run):
     _, _, plan = shaped_run
     assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan

@@ -64,57 +64,3 @@ def test_stream_processes_microbatches(spark, tmp_path):
     assert triples2.filter(F.col("pred") == "concordsWith").count() == 8
     # batch ids are distinct across restarts — no reprocessing of b0
     assert triples2.select("batch_id").distinct().count() == 2
-
-
-def test_changeset_store_as_streaming_sink(spark, tmp_path):
-    """CDC-style streaming upsert/tombstone sink: a file-source changeset
-    stream folded into a ChangesetStore via foreachBatch must equal the
-    sequential batch application of the same changesets."""
-    import json as _json
-    import os as _os
-
-    from smartlogic_concordance_transformer_spark.io_tables import (
-        ChangesetStore,
-        apply_changeset,
-    )
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    _os.makedirs(in_dir)
-    root = str(tmp_path / "store")
-    base = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string")
-    store = ChangesetStore(root, ["k"], n_buckets=4)
-    store.init(base)
-
-    schema = "k long, v string, seq int, op string"
-    batches = [
-        [(1, "v1b", 1, "upsert"), (2, None, 1, "delete"), (50, "new", 1, "upsert")],
-        [(50, None, 1, "delete"), (1, "v1c", 1, "upsert")],
-    ]
-
-    def write_batch(name, rows):
-        with open(_os.path.join(in_dir, name), "w") as f:
-            for k, v, seq, op in rows:
-                f.write(_json.dumps({"k": k, "v": v, "seq": seq, "op": op}) + "\n")
-
-    write_batch("b0.json", batches[0])
-    src = spark.readStream.schema(schema).json(in_dir)
-    q = (
-        src.writeStream.foreachBatch(lambda df, _id: store.apply(df))
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_batch("b1.json", batches[1])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    ref = base
-    for rows in batches:
-        ch = spark.createDataFrame(rows, schema)
-        ref = apply_changeset(ref, ch, ["k"]).localCheckpoint()
-    got = {(r.k, r.v) for r in store.read(spark).collect()}
-    assert got == {(r.k, r.v) for r in ref.collect()}
-    assert (1, "v1c") in got and not any(k == 2 or k == 50 for k, _ in got)
