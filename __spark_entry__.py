@@ -199,7 +199,7 @@ def q_kg_validate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_shipped(spark)  # the union-find rounds run a Python kernel
+    _ensure_shipped(spark)  # union-find runs in a Python kernel
     edges = _docs(spark, sf_dir).selectExpr(
         "concat('d', lpad(cast(doc_id as string), 8, '0')) as subj",
         "concat('g', lpad(cast(pmod(doc_id, 50) as string), 4, '0')) as obj",

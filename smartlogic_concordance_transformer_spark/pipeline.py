@@ -57,19 +57,24 @@ def run_pipeline(
     # per bucket instead of one per (scan task, bucket); at scale AQE splits
     # a hot bucket to the advisory partition size.
     unified = transform_unified(src, carry=("bucket",)).hint("rebalance", "bucket").persist()
-    good, quarantine = split_unified(unified, carry=("bucket",))
-    triples = emit_triples(good, carry=("bucket",))
+    try:
+        good, quarantine = split_unified(unified, carry=("bucket",))
+        triples = emit_triples(good, carry=("bucket",))
 
-    # dynamic overwrite replaces only the buckets this run writes, so the
-    # done buckets a resume skipped stay; set per write, not on the session
-    for name, df in (("upp", good), ("quarantine", quarantine), ("triples", triples)):
-        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(out_root, name))
+        # dynamic overwrite replaces only the buckets this run writes, so the
+        # done buckets a resume skipped stay; set per write, not on the session
+        for name, df in (("upp", good), ("quarantine", quarantine), ("triples", triples)):
+            df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+                "bucket"
+            ).parquet(os.path.join(out_root, name))
 
-    # One collect: a few rows per bucket, from which the ledger counts and
-    # the manifest are both derived.
-    metrics_rows = partition_metrics(good, quarantine, triples, unified=unified).collect()
+        # One collect: a few rows per bucket, from which the ledger counts and
+        # the manifest are both derived.
+        metrics_rows = partition_metrics(good, quarantine, triples, unified=unified).collect()
+    finally:
+        # the metrics are the cache's last reader; a failed write or
+        # aggregation must not leave it in the caller's session either
+        unified.unpersist()
 
     # Ledger commit per bucket, after data is durable.
     written = {int(r["bucket"]) for r in metrics_rows}
@@ -99,7 +104,6 @@ def run_pipeline(
         extra["canonical_edges"] = canon_rows.get["rows"]
 
     manifest = write_run_manifest(out_root, metrics_rows, extra=extra)
-    unified.unpersist()
 
     # GTG: the batch analog of the reference healthcheck/__gtg surface
     # (smartlogic/healthcheck.go:1-147) — instead of probing live

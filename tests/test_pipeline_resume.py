@@ -99,6 +99,21 @@ def test_pipeline_single_parse_pass(spark, tmp_path):
     assert acc.value == 300
 
 
+def test_failed_run_leaves_no_cached_frame(spark, tmp_path, monkeypatch):
+    # the persisted unified frame is released once the metrics have read
+    # it, and also when a later step raises: the caller's session keeps
+    # no cache of a failed run
+    spark.catalog.clearCache()
+
+    def failing_cc(*args, **kwargs):
+        raise RuntimeError("connected components failed")
+
+    monkeypatch.setattr(pipeline, "canonical_triples", failing_cc)
+    with pytest.raises(RuntimeError, match="connected components failed"):
+        run_pipeline(spark, generate_source_repos(spark, 200, seed=3), str(tmp_path / "kg"), n_buckets=4)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_gtg_report_and_injected_mismatch(spark, tmp_path):
     from smartlogic_concordance_transformer_spark.metrics import gtg_check
 
