@@ -45,7 +45,6 @@ from smartlogic_concordance_transformer_spark.transform import transform
 from smartlogic_concordance_transformer_spark.triples import emit_triples
 from smartlogic_concordance_transformer_spark.cc import connected_components
 from smartlogic_concordance_transformer_spark.uuids import (
-    ft_factset_uuid,
     ft_md5_uuid,
     ft_md5_uuid_sql,
 )
@@ -53,7 +52,7 @@ from smartlogic_concordance_transformer_spark.uuids import (
 DEFAULT_SF = "/root/testdata/sf0.001"
 
 # The driver's correctness gate always runs oracle_sql() against sf0.01;
-# three oracles precompute literal VALUES tables from that parquet and must
+# the oracles that precompute literal VALUES tables from that parquet must
 # read the same files the gate registers. Overridable for machines where
 # the test data lives elsewhere; when the parquet is absent those oracles
 # degrade to the driver's rows-only check (builders return None).
@@ -178,17 +177,6 @@ def q_kg_uuid_tme(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kg_uuid_factset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # double-MD5 kernel: not DuckDB-expressible (md5 is VARCHAR-only there)
-    # -> rows-only check; pinned by pytest goldens instead.
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        ft_factset_uuid(
-            F.expr("concat('0', upper(substr(md5(cast(doc_id as string)), 1, 5)), '-E')")
-        ).alias("factset_uuid"),
-    )
-
-
 def q_kg_validate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).selectExpr(
         "doc_id",
@@ -205,74 +193,6 @@ def q_kg_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat('g', lpad(cast(pmod(doc_id, 50) as string), 4, '0')) as obj",
     )
     return connected_components(edges)
-
-
-_BM25_QUERY = ["hash", "join", "spark"]
-
-
-def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # top-5 TF-IDF keywords per document with a [min_df, max_df] band-
-    # pass — the keyword-metadata operator a curation pipeline routes
-    # domains with. One corpus-sized (doc, token) count; the IDF table
-    # is vocabulary-sized and joined back; the top-k window partitions
-    # by document (bounded by per-doc distinct vocabulary).
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        tfidf_terms,
-    )
-
-    return tfidf_terms(
-        _spread(spark, _docs(spark, sf_dir)), top_k=5, min_df=2, max_df_frac=0.8
-    )
-
-
-def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Okapi BM25 scores against a fixed 3-token query — targeted subset
-    # mining over the corpus. The query filter lands before the per-term
-    # aggregation; document lengths reuse the same single token explode.
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        bm25_scores,
-    )
-
-    return bm25_scores(_spread(spark, _docs(spark, sf_dir)), _BM25_QUERY)
-
-
-def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # windowed co-occurrence + PMI, the word2vec/GloVe preprocessing
-    # statistic: pairs built in-row from the token array (no position
-    # self-join), two map-side-combinable counts, single-ln float
-    # discipline.
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        cooccurrence_pmi,
-    )
-
-    return cooccurrence_pmi(
-        _spread(spark, _docs(spark, sf_dir)), window=4, min_count=5
-    )
-
-
-def q_text_inverted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # inverted index with the stopword band-pass applied BEFORE the
-    # posting-list aggregation (the row-size bound), postings sorted.
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        inverted_index,
-    )
-
-    # the synthetic vocabulary is head-heavy (most tokens appear in >half
-    # the docs), so the gate runs the band at 0.9 to keep a meaningful
-    # index; production corpora use a tighter fraction
-    return inverted_index(
-        _spread(spark, _docs(spark, sf_dir)), min_df=5, max_df_frac=0.9
-    )
-
-
-def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-source mixing report: docs, tokens, mean quality, language mix
-    # in ONE map-side-combinable pass over one scan.
-    from smartlogic_concordance_transformer_spark.datapipe.quality_checks import (
-        corpus_report,
-    )
-
-    return corpus_report(_docs(spark, sf_dir))
 
 
 def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,44 +224,6 @@ def q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_samples(t, n_neg=2)
 
 
-def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Deequ-style validation report over a deliberately dirtied orders
-    # frame: every 97th custkey nulled (not_null + ref exemption), every
-    # 89th totalprice negated (in_range), every 101st row duplicated
-    # (unique). One aggregation pass for the predicates + one broadcast
-    # anti-join for the foreign key; the oracle recomputes each count
-    # declaratively.
-    from smartlogic_concordance_transformer_spark.datapipe.quality_checks import (
-        in_range,
-        not_null,
-        ref_integrity,
-        run_checks,
-        unique,
-    )
-
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    dirty = o.select(
-        "o_orderkey",
-        F.when(F.pmod("o_orderkey", 97) == 0, F.lit(None))
-        .otherwise(F.col("o_custkey"))
-        .alias("o_custkey"),
-        F.when(F.pmod("o_orderkey", 89) == 0, -F.col("o_totalprice"))
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-    )
-    dirty = dirty.unionByName(dirty.filter(F.pmod("o_orderkey", 101) == 0))
-    return run_checks(
-        dirty,
-        [
-            not_null("o_custkey"),
-            in_range("o_totalprice", 0, 10**7),
-            unique("o_orderkey"),
-            ref_integrity("o_custkey", c, "c_custkey"),
-        ],
-    )
-
-
 def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the salted join must be row-identical to the plain join, so the
     # oracle is simply the unsalted SQL join + aggregation
@@ -360,34 +242,6 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
         .cast("double")
         .alias("revenue"),
-    )
-
-
-def q_kg_resolve_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Entity resolution composition: fuzzy label pairs (SymSpell blocking
-    # + levenshtein verify) -> connected components -> canonical label per
-    # term (singletons map to themselves). Term set capped at 300 names so
-    # the oracle's recursive-CTE closure stays oracle-sized; the engine
-    # side is the same partition-local union-find rounds as kg_cc.
-    _ensure_shipped(spark)
-    from smartlogic_concordance_transformer_spark.datapipe.fuzzy import (
-        fuzzy_match_pairs,
-    )
-
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).filter(
-        "c_custkey <= 300"
-    )
-    base = c.select(F.col("c_name").alias("term"))
-    planted = c.filter("c_custkey % 97 = 0").select(
-        F.concat(
-            F.substring("c_name", 1, 9), F.expr("substring(c_name, 11)")
-        ).alias("term")
-    )
-    terms = base.unionByName(planted).distinct()
-    pairs = fuzzy_match_pairs(terms).select("a", "b")
-    cc = connected_components(pairs, src="a", dst="b")
-    return terms.join(cc, terms.term == cc.node, "left").select(
-        "term", F.coalesce("component", "term").alias("canonical")
     )
 
 
@@ -440,28 +294,6 @@ def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return paragraph_dedup(d).select("doc_id", "clean", "n_dropped")
-
-
-def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Entity-label fuzzy linking: every customer-name pair within edit
-    # distance 1, via SymSpell deletion-neighborhood blocking + exact
-    # levenshtein verify. Customer names differ in single digit positions
-    # (substitutions); planted single-deletion variants (every 97th key)
-    # exercise the insert/delete cases. The oracle is the quadratic
-    # all-pairs levenshtein over the same term set — equality proves the
-    # blocking misses nothing.
-    from smartlogic_concordance_transformer_spark.datapipe.fuzzy import (
-        fuzzy_match_pairs,
-    )
-
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    base = c.select(F.col("c_name").alias("term"))
-    planted = c.filter("c_custkey % 97 = 0").select(
-        F.concat(
-            F.substring("c_name", 1, 9), F.expr("substring(c_name, 11)")
-        ).alias("term")
-    )
-    return fuzzy_match_pairs(base.unionByName(planted))
 
 
 def _graph(spark: SparkSession, sf_dir: str):
@@ -1031,10 +863,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select("doc_id", token_count("text").alias("n_tokens"))
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select("doc_id", quality_score("text").alias("quality"))
 
@@ -1300,19 +1128,6 @@ def _pipeline_raw(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     )
     bench = d.filter(F.pmod("doc_id", 50) == 0).select("text")
     return raw, bench
-
-
-def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # deterministic hash-based train/test split: a per-row projection
-    # (no RNG, no shuffle); assignment is a pure function of (salt, key)
-    # so the DuckDB oracle reproduces it exactly
-    from smartlogic_concordance_transformer_spark.datapipe.sampling import (
-        train_test_split,
-    )
-
-    return train_test_split(_docs(spark, sf_dir), key_col="doc_id").select(
-        "doc_id", "split"
-    )
 
 
 def q_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1586,42 +1401,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return all_c.exceptAll(hi).select(F.col("o_custkey").alias("custkey"))
 
 
-def q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hierarchical totals: rollup over (returnflag, linestatus)
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n",
-            "sum_qty",
-        )
-    )
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # pivot: event counts per user bucket, one column per event type.
-    # Explicit pivot values keep the plan single-pass (no distinct-values
-    # pre-scan) — the form you want at scale.
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    p = (
-        ev.groupBy(F.pmod("user_id", 100).alias("ubucket"))
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-    )
-    return p.select(
-        "ubucket", *[F.coalesce(F.col(t), F.lit(0)).alias(t) for t in _EVENT_TYPES]
-    )
-
-
 def q_cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cube: totals for every subset of (returnflag, linestatus) — the
     # rollup variant with all 2^k groupings
@@ -1681,15 +1460,6 @@ def q_events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG transform over synthetic payloads at sf0.001."""
     return q_kg_upp_json(spark, DEFAULT_SF)
@@ -1701,9 +1471,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_triples": q_kg_triples,
         "kg_quarantine": q_kg_quarantine,
         "kg_uuid_tme": q_kg_uuid_tme,
-        # r7 ROTATION (docs/COVERAGE.md "Gate rotation"): kg_uuid_factset
-        # -> pytest gate for a round; events_quantiles rotated back in so
-        # driver-side verification touches every family over time
+        # r7 ROTATION (docs/COVERAGE.md "Gate rotation"): events_quantiles
+        # rotated back in so driver-side verification touches every
+        # family over time
         "events_quantiles": q_events_quantiles,
         "kg_validate_ids": q_kg_validate_ids,
         "kg_cc": q_kg_cc,
@@ -1764,14 +1534,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "events_by_type": q_events_by_type,
-        "events_pivot": q_events_pivot,
-        "rollup_pricing": q_rollup_pricing,
-        "split_assign": q_split_assign,
-        "text_tokens": q_text_tokens,
-        # overflow, not retired-as-redundant: NEW r6 operators that the
-        # 50-entry driver cap has no room for — they get the identical
-        # rows+schema+value check through the pytest gate instead
+        # overflow: NEW r6 operators that the 50-entry driver cap has no
+        # room for — they get the identical rows+schema+value check
+        # through the pytest gate instead
         "dedup_semantic_incremental": q_dedup_semantic_incremental,
         "text_bpe_encode": q_text_bpe_encode,
         "sample_token_budget": q_sample_token_budget,
@@ -1781,97 +1546,17 @@ def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sample_pack": q_sample_pack,
         "sim_recall": q_sim_recall,
         "web_urls": q_web_urls,
-        "fuzzy_match": q_fuzzy_match,
         "dedup_paragraphs": q_dedup_paragraphs,
         "range_join": q_range_join,
-        "kg_resolve_fuzzy": q_kg_resolve_fuzzy,
         "join_salted": q_join_salted,
-        "quality_checks": q_quality_checks,
         "kg_negatives": q_kg_negatives,
-        "text_tfidf": q_text_tfidf,
-        "text_bm25": q_text_bm25,
-        "text_pmi": q_text_pmi,
-        "text_inverted": q_text_inverted,
-        "corpus_stats": q_corpus_stats,
         "text_entropy": q_text_entropy,
-        # swapped INTO the driver gate in favour of these (round 6):
+        # swapped INTO the driver gate in favour of this (round 6):
         # text_fingerprint is a one-expression projection — the
         # substring-dedup and LM-perplexity operators carry far more
-        # semantics. events_quantiles rotated BACK into the gate in r7
-        # in place of kg_uuid_factset (long-stable: byte-exact golden
-        # UUID tests + the hashlib-literal oracle keep covering it here)
+        # semantics
         "text_fingerprint": q_text_fingerprint,
-        "kg_uuid_factset": q_kg_uuid_factset,
     }
-
-
-_TOKENIZE_CTE = """t as (
-        select doc_id,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') as tk
-        from documents),
-      w as (select doc_id, unnest(tk) as token from t),
-      w2 as (select doc_id, token from w where token <> '')"""
-
-
-def _tfidf_oracle(top_k: int = 5, min_df: int = 2, max_df_frac: float = 0.8) -> str:
-    """Independent replay of ``tfidf_terms``: same band-pass bounds,
-    ``round(ln(N/df), 9)`` IDF, ``round(tf * idf, 6)`` score, and the
-    identical (score desc, token asc) total order for the top-k cut."""
-    return f"""
-      with {_TOKENIZE_CTE},
-      tf as (select doc_id, token, count(*) as tf from w2 group by 1, 2),
-      nd as (select count(*) as n from documents),
-      idf as (
-        select token, round(ln(cast(n as double) / cast(df_t as double)), 9) as idf
-        from (select token, count(*) as df_t from tf group by 1) d
-        cross join nd
-        where df_t >= {int(min_df)}
-          and cast(df_t as double) <= floor({repr(float(max_df_frac))} * cast(n as double))),
-      sc as (
-        select tf.doc_id, tf.token, tf.tf,
-               round(cast(tf.tf as double) * idf.idf, 6) as score
-        from tf join idf using (token)),
-      r as (
-        select doc_id, token, tf, score,
-               row_number() over (partition by doc_id
-                                  order by score desc, token asc) as "rank"
-        from sc)
-      select doc_id, token, tf, score, "rank" from r where "rank" <= {int(top_k)}
-    """
-
-
-def _bm25_oracle(terms: list[str], k1: float = 1.2, b: float = 0.75) -> str:
-    """Independent replay of ``bm25_scores``: identical operation order,
-    with the derived double constants (k1+1, 1-b) embedded via repr so
-    both engines mix the exact literals the Spark plan folds."""
-    tlist = ", ".join(f"'{t}'" for t in sorted({t.lower() for t in terms}))
-    k1p1, onemb = repr(float(k1) + 1.0), repr(1.0 - float(b))
-    k1r, br = repr(float(k1)), repr(float(b))
-    return f"""
-      with {_TOKENIZE_CTE},
-      dl as (select doc_id, count(*) as dl from w2 group by 1),
-      tf as (select doc_id, token, count(*) as tf from w2
-             where token in ({tlist}) group by 1, 2),
-      st as (select (select count(*) from documents) as n,
-                    (select sum(dl) from dl) as sum_dl),
-      idf as (
-        select token,
-               round(ln(1.0 + (cast(n as double) - cast(df_t as double) + 0.5)
-                              / (cast(df_t as double) + 0.5)), 9) as idf,
-               cast(sum_dl as double) / cast(n as double) as avgdl
-        from (select token, count(*) as df_t from tf group by 1) d
-        cross join st),
-      p as (
-        select tf.doc_id,
-               round(idf.idf * (cast(tf.tf as double) * {k1p1})
-                     / (cast(tf.tf as double)
-                        + {k1r} * ({onemb} + {br} * (cast(dl.dl as double) / idf.avgdl))),
-                     9) as part
-        from tf join idf using (token) join dl using (doc_id))
-      select doc_id, cast(count(*) as bigint) as n_matched,
-             round(cast(sum(cast(part as decimal(28,9))) as double), 6) as bm25
-      from p group by doc_id
-    """
 
 
 def retired_oracle_sql() -> dict[str, str]:
@@ -1903,68 +1588,6 @@ def retired_oracle_sql() -> dict[str, str]:
           from nn left join t using (doc_id)
           group by nn.doc_id, nn.n_chars
         """,
-        # one-pass per-source report; quality replays the shared SQL
-        "corpus_stats": f"""
-          with q as (select doc_id, quality
-                     from {_quality_sql("text", "documents")} _q),
-          d as (select doc_id, source, lang,
-                       len(string_split_regex(trim(text), '\\s+')) as nt
-                from documents)
-          select d.source,
-                 count(*) as n_docs,
-                 cast(sum(d.nt) as bigint) as n_tokens,
-                 round(cast(sum(cast(q.quality as decimal(18,6))) as double)
-                       / cast(count(*) as double), 6) as mean_quality,
-                 cast(sum(case when d.lang = 'en' then 1 else 0 end) as bigint)
-                   as n_lang_en
-          from d join q using (doc_id)
-          group by d.source
-        """,
-        "text_tfidf": _tfidf_oracle(top_k=5, min_df=2, max_df_frac=0.8),
-        "text_bm25": _bm25_oracle(_BM25_QUERY),
-        # band-pass before list aggregation, postings sorted
-        "text_inverted": f"""
-          with {_TOKENIZE_CTE},
-          kt as (select token, doc_id from w2 group by token, doc_id),
-          nd as (select count(*) as n from documents),
-          b as (
-            select token, count(*) as df_t
-            from kt group by 1),
-          bb as (
-            select token, df_t from b cross join nd
-            where df_t >= 5
-              and cast(df_t as double) <= floor(0.9 * cast(n as double)))
-          select kt.token, bb.df_t,
-                 list(kt.doc_id order by kt.doc_id) as postings
-          from kt join bb using (token)
-          group by kt.token, bb.df_t
-        """,
-        # PMI: same unordered-pair enumeration via a position × distance
-        # product, single-ln + round-9 over an exactly-rounded ratio
-        "text_pmi": f"""
-          with {_TOKENIZE_CTE},
-          g as (select doc_id, tk, unnest(range(len(tk))) as i from t),
-          pr as (
-            select least(g.tk[i + 1], g.tk[i + d + 1]) as a,
-                   greatest(g.tk[i + 1], g.tk[i + d + 1]) as b
-            from g cross join (select unnest(range(1, 5)) as d) ds
-            where i + d < len(tk)),
-          pa as (select a, b, count(*) as co from pr where a <> '' group by 1, 2),
-          u as (select token as w, count(*) as cu from w2 group by 1),
-          tot as (select (select sum(cu) from u) as n,
-                         (select sum(co) from pa) as t),
-          out as (
-            select pa.a, pa.b, pa.co,
-                   round(ln((cast(co as double) / cast(t as double))
-                            / ((cast(ua.cu as double) / cast(n as double))
-                               * (cast(ub.cu as double) / cast(n as double)))), 9) as pmi
-            from pa
-            join u ua on pa.a = ua.w
-            join u ub on pa.b = ub.w
-            cross join tot
-            where pa.co >= 5)
-          select a, b, co, pmi from out
-        """,
         # the successor rule replayed as a correlated min over the WHOLE
         # ring (no bucketing) — agreement re-proves the 2-bucket probe
         "kg_negatives": """
@@ -1991,38 +1614,6 @@ def retired_oracle_sql() -> dict[str, str]:
           select subj, pred, obj, i, pe.ent as neg
           from pick where pe.ent <> obj
         """,
-        # each constraint's count recomputed declaratively over the same
-        # dirtied frame
-        "quality_checks": """
-          with d0 as (
-            select o_orderkey,
-                   case when o_orderkey % 97 = 0 then null
-                        else o_custkey end as ck,
-                   case when o_orderkey % 89 = 0 then -o_totalprice
-                        else o_totalprice end as tp
-            from orders),
-          d as (select * from d0
-                union all
-                select * from d0 where o_orderkey % 101 = 0),
-          t as (select count(*) as total from d),
-          v as (
-            select 'not_null' as constraint, 'o_custkey' as "column",
-                   (select count(*) from d where ck is null) as violations
-            union all
-            select 'in_range', 'o_totalprice',
-                   (select count(*) from d
-                    where tp is null or tp < 0 or tp > 10000000)
-            union all
-            select 'unique', 'o_orderkey',
-                   (select count(*) - count(distinct o_orderkey) from d)
-            union all
-            select 'ref_integrity', 'o_custkey',
-                   (select count(*) from d where ck is not null
-                    and ck not in (select c_custkey from customer)))
-          select v.constraint, v."column", t.total, v.violations,
-                 v.violations = 0 as passed
-          from v cross join t
-        """,
         # the salted join is row-identical to the plain join by
         # construction; the oracle is the unsalted join + agg
         "join_salted": """
@@ -2030,32 +1621,6 @@ def retired_oracle_sql() -> dict[str, str]:
                  cast(sum(cast(o_totalprice as decimal(18,2))) as double) as revenue
           from orders join customer on o_custkey = c_custkey
           group by c_mktsegment
-        """,
-        # independent closure: quadratic levenshtein pairs + recursive-CTE
-        # min-label propagation; singletons self-canonical via left join
-        "kg_resolve_fuzzy": """
-          with recursive t as (
-            select c_name as term from customer where c_custkey <= 300
-            union
-            select substr(c_name, 1, 9) || substr(c_name, 11) from customer
-            where c_custkey % 97 = 0 and c_custkey <= 300
-          ),
-          p as (
-            select a.term as a, b.term as b
-            from t a join t b
-              on a.term < b.term
-             and abs(length(a.term) - length(b.term)) <= 1
-            where levenshtein(a.term, b.term) <= 1),
-          e as (select a as u, b as v from p union select b, a from p),
-          n as (select distinct u as node from e),
-          reach(node, r) as (
-            select node, node from n
-            union
-            select e.u, reach.r from e join reach on reach.node = e.v
-          ),
-          lab as (select node, min(r) as canonical from reach group by node)
-          select t.term, coalesce(lab.canonical, t.term) as canonical
-          from t left join lab on t.term = lab.node
         """,
         # the declarative range join the chunking rewrite must equal
         "range_join": """
@@ -2101,52 +1666,7 @@ def retired_oracle_sql() -> dict[str, str]:
                  cast(tot.total - coalesce(agg.kept, 0) as int) as n_dropped
           from d join tot using (doc_id) left join agg using (doc_id)
         """,
-        # quadratic all-pairs levenshtein over the same (names + planted
-        # single-deletion variants) term set — the blocking's ground truth;
-        # the length prefilter is sound (|len(a)-len(b)| <= lev) and only
-        # speeds the oracle up
-        "fuzzy_match": """
-          with t as (
-            select c_name as term from customer
-            union
-            select substr(c_name, 1, 9) || substr(c_name, 11) from customer
-            where c_custkey % 97 = 0
-          )
-          select a.term as a, b.term as b, levenshtein(a.term, b.term) as dist
-          from t a join t b
-            on a.term < b.term
-           and abs(length(a.term) - length(b.term)) <= 1
-          where levenshtein(a.term, b.term) <= 1
-        """,
-        "events_pivot": """
-          select user_id % 100 as ubucket,
-                 count(*) filter (where event_type = 'click') as click,
-                 count(*) filter (where event_type = 'error') as error,
-                 count(*) filter (where event_type = 'purchase') as purchase,
-                 count(*) filter (where event_type = 'signup') as signup,
-                 count(*) filter (where event_type = 'view') as view
-          from events group by 1
-        """,
-        "text_tokens": "select doc_id, len(string_split_regex(trim(text), '\\s+')) as n_tokens from documents",
-        "rollup_pricing": """
-          select coalesce(l_returnflag, 'ALL') as returnflag,
-                 coalesce(l_linestatus, 'ALL') as linestatus,
-                 count(*) as n,
-                 cast(sum(cast(l_quantity as decimal(18,2))) as double) as sum_qty
-          from lineitem group by rollup (l_returnflag, l_linestatus)
-        """,
-        "split_assign": """
-          select doc_id,
-                 case when substr(md5('split:' || cast(doc_id as varchar)), 1, 2) < '1a'
-                      then 'test' else 'train' end as split
-          from documents
-        """,
-        "events_by_type": """
-          select event_type, count(*) as n,
-                 cast(sum(cast(value as decimal(18,4))) as double) as sum_value,
-                 count(distinct user_id) as n_users
-          from events group by event_type
-        """,    }
+    }
     oracles["text_bpe_encode"] = _bpe_encode_oracle()
     oracles["sample_token_budget"] = """
       with d as (
@@ -2272,8 +1792,6 @@ def retired_oracle_sql() -> dict[str, str]:
     """
     for name, builder in (
         ("dedup_semantic_incremental", _dedup_semantic_incremental_oracle),
-        # rotated out of the driver gate in r7 (see retired_queries)
-        ("kg_uuid_factset", _factset_uuid_oracle),
         ("sim_recall", _sim_recall_oracle),
     ):
         sql = builder()
@@ -2421,38 +1939,6 @@ def _dlist(vec) -> str:
 
 
 import functools
-
-
-@functools.lru_cache(maxsize=1)
-def _factset_uuid_oracle() -> str | None:
-    """Precomputed-literal oracle for the FACTSET double-MD5 kernel.
-    DuckDB 1.0 md5/sha256 accept VARCHAR only (re-verified: no BLOB
-    overload), so the inner raw-digest hash is not SQL-expressible —
-    instead the expected rows are computed here with hashlib (an
-    implementation INDEPENDENT of the engine's native md5/unhex/translate
-    expression chain) from the same parquet the driver registers, and
-    emitted as a VALUES table. A reference golden
-    (handlers_test.go 012345-E) guards the Python spec itself."""
-    import pyarrow.parquet as pq
-
-    from smartlogic_concordance_transformer_spark.pyfold import _factset_uuid
-
-    assert _factset_uuid("012345-E") == "949a7e7f-2516-30c0-9123-f866601ffbe4"
-    path = os.path.join(ORACLE_SF_DIR, "documents.parquet")
-    if not os.path.exists(path):
-        return None
-    import hashlib
-
-    doc_ids = sorted(pq.read_table(path, columns=["doc_id"]).column("doc_id").to_pylist())
-    rows = []
-    for d in doc_ids:
-        fid = "0" + hashlib.md5(str(d).encode()).hexdigest()[:5].upper() + "-E"
-        rows.append(f"({d}, '{_factset_uuid(fid)}')")
-    return (
-        "select cast(doc_id as bigint) as doc_id, factset_uuid from (values "
-        + ", ".join(rows)
-        + ") as t(doc_id, factset_uuid)"
-    )
 
 
 @functools.lru_cache(maxsize=1)

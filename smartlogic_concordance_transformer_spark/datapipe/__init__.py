@@ -1,7 +1,7 @@
 """Large-scale training-data pipeline operators.
 
 Beyond the reference's concordance transform, a 100 TB corpus engine needs
-corpus hygiene and retrieval primitives. All operators here follow the same
+corpus hygiene primitives. All operators here follow the same
 rules as the KG pipeline: native Column expressions in the hot path,
 Arrow-batched pandas UDFs only where built-ins genuinely can't express the
 semantics (simhash bit-majority, embedding matrix math, binary decode).
@@ -23,7 +23,6 @@ from .dedup import (
     simhash,
     simhash_near_dups,
 )
-from .fuzzy import deletion_neighborhood, fuzzy_match_pairs
 from .joins import salted_join
 from .hygiene import boilerplate_lines, flag_contaminated, strip_boilerplate
 from .sampling import (
@@ -50,16 +49,6 @@ from .similarity import (
     train_ivf_centroids,
 )
 from .negatives import negative_samples
-from .quality_checks import (
-    Check,
-    in_range,
-    in_set,
-    matches,
-    not_null,
-    ref_integrity,
-    run_checks,
-    unique,
-)
 from .sketches import distinct_count_estimate, quantile_estimate
 from .web import normalize_url, url_host
 from .text import (
@@ -78,20 +67,10 @@ from .text import (
 )
 
 __all__ = [
-    "deletion_neighborhood",
-    "fuzzy_match_pairs",
     "paragraph_dedup",
     "salted_join",
     "distinct_count_estimate",
     "quantile_estimate",
-    "run_checks",
-    "Check",
-    "not_null",
-    "in_range",
-    "in_set",
-    "matches",
-    "unique",
-    "ref_integrity",
     "choose_bands",
     "lsh_collision_prob",
     "negative_samples",

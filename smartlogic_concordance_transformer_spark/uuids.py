@@ -1,10 +1,9 @@
-"""Deterministic UUID derivation kernels — pure native Column expressions.
+"""Deterministic UUID derivation kernel — a pure native Column expression.
 
 The reference derives concordance UUIDs two ways (empirically recovered and
 verified against all 13 golden UUIDs in its test suite; see SURVEY.md 2.4):
 
-* TME / DBpedia / Geonames / Wikidata ids
-  (``/root/reference/smartlogic/service.go:298,308-310``):
+* TME / DBpedia / Geonames / Wikidata ids (``smartlogic/service.go:298,308-310``):
   ``uuid.NewMD5(uuid.UUID{}, id)`` with pborman's zero-value UUID, which is a
   0-byte slice — i.e. plain ``MD5(id)`` with the v3 version nibble and
   RFC-4122 variant bits forced in.
@@ -14,15 +13,14 @@ verified against all 13 golden UUIDs in its test suite; see SURVEY.md 2.4):
   version/variant surgery on the outer digest only.
 
 The KG job derives both inside its fold (``pyfold._md5_uuid`` /
-``_factset_uuid``). This module keeps them as **native Spark SQL column
-expressions** (``md5``, ``unhex``, ``substring``, ``translate``,
-``concat``) for the ``kg_uuid_tme`` / ``kg_uuid_factset`` queries:
+``_factset_uuid``). This module keeps the single-MD5 one as a **native
+Spark SQL column expression** (``md5``, ``substring``, ``translate``,
+``concat``) for the ``kg_uuid_tme`` query:
 
-* they run inside whole-stage codegen on the JVM — no Python in the hot
+* it runs inside whole-stage codegen on the JVM — no Python in the hot
   path, no Arrow exchange, vectorized end to end;
-* the single-MD5 expression is runnable in DuckDB for the oracle check
-  (DuckDB's ``md5`` is VARCHAR-only, so the FACTSET kernel's oracle is a
-  hashlib-literal table instead).
+* the same expression is runnable in DuckDB for the oracle check
+  (``ft_md5_uuid_sql``).
 
 Hex surgery on the 32-char lowercase digest ``h``:
 
@@ -64,17 +62,6 @@ def ft_md5_uuid(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return _hex_to_uuid(F.md5(c.cast("string")))
-
-
-def ft_factset_uuid(col: Column | str) -> Column:
-    """FACTSET UUID: set_v3_bits(MD5(raw_bytes(MD5(id)))).
-
-    Parity: /root/reference/smartlogic/service.go:305 (uuid-utils-go
-    DeriveFactsetUUID). The inner digest is fed to the outer MD5 as raw
-    bytes, hence ``md5(unhex(md5(id)))``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return _hex_to_uuid(F.md5(F.unhex(F.md5(c.cast("string")))))
 
 
 # SQL-fragment builders (same expressions as strings, for spark.sql and for

@@ -2106,67 +2106,6 @@ def test_url_ops_are_zero_shuffle(spark):
     assert "Exchange" not in plan and "EvalPython" not in plan
 
 
-# --- fuzzy matching (SymSpell deletion-neighborhood blocking) ---
-
-
-def _py_lev(a, b):
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def test_deletion_neighborhood_golden(spark):
-    from smartlogic_concordance_transformer_spark.datapipe import deletion_neighborhood
-
-    df = spark.createDataFrame([("cat",), ("aa",)], "term string")
-    rows = {r.term: sorted(r.n) for r in df.select("term", deletion_neighborhood("term").alias("n")).collect()}
-    assert rows["cat"] == sorted(["cat", "at", "ct", "ca"])
-    # repeated chars collapse — the neighborhood is a set
-    assert rows["aa"] == ["a", "aa"]
-
-
-def test_fuzzy_match_pairs_golden(spark):
-    from smartlogic_concordance_transformer_spark.datapipe import fuzzy_match_pairs
-
-    terms = ["cat", "cot", "cart", "dog", "", "cat"]  # dup + empty excluded
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    got = {(r.a, r.b, r.dist) for r in fuzzy_match_pairs(df).collect()}
-    # substitution (cat,cot), insertion (cat,cart); NOT (cart,cot) dist 2,
-    # NOT dog, never the empty term
-    assert got == {("cat", "cot", 1), ("cart", "cat", 1)}
-
-
-def test_fuzzy_match_pairs_equals_all_pairs_python(spark):
-    # random vocabulary over a small alphabet so every edit case
-    # (insert/delete/substitute, repeated chars) occurs; blocking+verify
-    # must equal the quadratic oracle exactly
-    import random as _random
-
-    from smartlogic_concordance_transformer_spark.datapipe import fuzzy_match_pairs
-
-    rng = _random.Random(7)
-    vocab = sorted({
-        "".join(rng.choice("abc") for _ in range(rng.randrange(1, 6)))
-        for _ in range(120)
-    })
-    expected = {
-        (a, b, 1)
-        for i, a in enumerate(vocab)
-        for b in vocab[i + 1:]
-        if _py_lev(a, b) <= 1
-    }
-    df = spark.createDataFrame([(t,) for t in vocab], "term string")
-    got = {(r.a, r.b, r.dist) for r in fuzzy_match_pairs(df).collect()}
-    assert got == expected
-    assert expected, "oracle degenerate: no qualifying pairs"
-
-
 # --- paragraph-grain dedup (RefinedWeb rule) ---
 
 
@@ -2363,78 +2302,6 @@ def test_quantile_estimate_within_rank_error(spark):
         quantile_estimate(e, "value", [1.5])
 
 
-# --- data-quality constraint suite ---
-
-
-def test_run_checks_semantics(spark):
-    from smartlogic_concordance_transformer_spark.datapipe import (
-        in_range,
-        in_set,
-        matches,
-        not_null,
-        ref_integrity,
-        run_checks,
-        unique,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (2, "b", -1.0), (2, None, 3.0), (4, "zz", 200.0)],
-        "k long, s string, v double",
-    )
-    ref = spark.createDataFrame([(1,), (2,)], "rk long")
-    rep = {
-        (r.constraint, r.column): (r.total, r.violations, r.passed)
-        for r in run_checks(
-            df,
-            [
-                not_null("s"),
-                in_range("v", 0, 100),
-                matches("s", "^[a-z]$"),
-                in_set("s", ["a", "b"]),
-                unique("k"),
-                ref_integrity("k", ref, "rk"),
-            ],
-        ).collect()
-    }
-    assert rep == {
-        ("not_null", "s"): (4, 1, False),
-        ("in_range", "v"): (4, 2, False),   # -1.0 and 200.0; nulls count
-        ("matches", "s"): (4, 2, False),    # null and 'zz'
-        ("in_set", "s"): (4, 2, False),
-        ("unique", "k"): (4, 1, False),     # rows beyond first occurrence
-        ("ref_integrity", "k"): (4, 1, False),  # k=4 orphan; nulls exempt
-    }
-
-
-def test_run_checks_clean_frame_passes(spark):
-    from smartlogic_concordance_transformer_spark.datapipe import (
-        not_null,
-        run_checks,
-        unique,
-    )
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string")
-    rep = run_checks(df, [not_null("s"), unique("k", "s")]).collect()
-    assert all(r.passed and r.violations == 0 for r in rep)
-    with pytest.raises(ValueError):
-        run_checks(df, [])
-
-
-def test_run_checks_is_single_scan_for_predicates(spark):
-    # every predicate constraint folds into ONE aggregate over one scan:
-    # exactly one read of the source in the plan
-    from smartlogic_concordance_transformer_spark.datapipe import (
-        in_range,
-        not_null,
-        run_checks,
-    )
-
-    df = spark.range(1000).selectExpr("id as k", "id * 2.0 as v")
-    rep = run_checks(df, [not_null("k"), in_range("v", 0, 1e9), not_null("v")])
-    plan = rep._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Range (0, 1000") == 1, plan
-
-
 # --- banding selection (S-curve) ---
 
 
@@ -2518,131 +2385,10 @@ def test_negative_samples_rejects_empty_buckets_and_bad_args(spark):
         negative_samples(df, corrupt="pred")
 
 
-def test_tfidf_terms_matches_python(spark):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import tfidf_terms
-
-    corpus = [
-        (1, "apple banana apple cherry"),
-        (2, "banana cherry cherry date"),
-        (3, "apple date date date eel"),
-        (4, "banana banana fig apple"),
-        (5, None),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {
-        (r.doc_id, r.rank): (r.token, r.tf, r.score)
-        for r in tfidf_terms(df, top_k=2, min_df=2, max_df_frac=0.8).collect()
-    }
-
-    import math
-    from collections import Counter
-
-    docs = {d: (t or "").lower().split() for d, t in corpus}
-    n = len(corpus)
-    dfreq = Counter()
-    for toks in docs.values():
-        dfreq.update(set(toks))
-    band = {
-        t: round(math.log(n / c), 9)
-        for t, c in dfreq.items()
-        if c >= 2 and c <= math.floor(0.8 * n)
-    }
-    want = {}
-    for d, toks in docs.items():
-        tf = Counter(toks)
-        scored = sorted(
-            ((round(tf[t] * band[t], 6), t) for t in tf if t in band),
-            key=lambda s: (-s[0], s[1]),
-        )
-        for rank, (score, t) in enumerate(scored[:2], start=1):
-            want[(d, rank)] = (t, tf[t], score)
-    assert got == want
     # 'banana' (df 3) passes the band; 'date' (df 2) passes; a df-4 token
     # on 5 docs exceeds floor(0.8*5)=4? floor gives 4 so df=4 stays —
     # assert the band actually excluded nothing unexpectedly is implicit
     # in the dict equality above.
-
-
-def test_bm25_scores_matches_python(spark):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import bm25_scores
-
-    corpus = [
-        (1, "spark hash join hash"),
-        (2, "merge sort join"),
-        (3, "scan filter project"),
-        (4, "hash hash hash spark spark join extra tokens here"),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {r.doc_id: (r.n_matched, r.bm25) for r in
-           bm25_scores(df, ["hash", "spark", "join"]).collect()}
-
-    import math
-    from collections import Counter
-    from decimal import Decimal
-
-    k1, b = 1.2, 0.75
-    docs = {d: t.lower().split() for d, t in corpus}
-    n = len(corpus)
-    dls = {d: len(t) for d, t in docs.items()}
-    avgdl = sum(dls.values()) / n
-    terms = sorted({"hash", "spark", "join"})
-    dfreq = {t: sum(1 for toks in docs.values() if t in toks) for t in terms}
-    want = {}
-    for d, toks in docs.items():
-        tf = Counter(w for w in toks if w in terms)
-        if not tf:
-            continue
-        parts = []
-        for t, c in tf.items():
-            idf = round(math.log(1.0 + (n - dfreq[t] + 0.5) / (dfreq[t] + 0.5)), 9)
-            parts.append(round(
-                idf * (c * (k1 + 1.0)) / (c + k1 * ((1.0 - b) + b * (dls[d] / avgdl))),
-                9,
-            ))
-        total = sum(Decimal(repr(p)) for p in parts)
-        want[d] = (len(tf), round(float(total), 6))
-    assert got == want
-    assert 3 not in got, "doc with no query terms must drop out"
-
-
-def test_cooccurrence_pmi_matches_python(spark):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        cooccurrence_pmi,
-    )
-
-    corpus = [
-        (1, "a b c a b"),
-        (2, "b c d"),
-        (3, "a a a b"),
-        (4, None),
-        (5, ""),
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {(r.a, r.b): (r.co, r.pmi) for r in
-           cooccurrence_pmi(df, window=2, min_count=2).collect()}
-
-    import math
-    from collections import Counter
-
-    toks = {d: (t or "").lower().split() for d, t in corpus}
-    pairs = Counter()
-    uni = Counter()
-    for ws in toks.values():
-        uni.update(ws)
-        for i in range(len(ws)):
-            for j in range(i + 1, min(i + 2, len(ws) - 1) + 1):
-                a, b = sorted((ws[i], ws[j]))
-                pairs[(a, b)] += 1
-    n = sum(uni.values())
-    t = sum(pairs.values())
-    want = {}
-    for (a, b), co in pairs.items():
-        if co < 2:
-            continue
-        x = (co / t) / ((uni[a] / n) * (uni[b] / n))
-        want[(a, b)] = (co, round(math.log(x), 9))
-    assert got == want
-    assert all(a <= b for a, b in got), "pairs must be canonically ordered"
 
 
 def test_heavy_hitters_misra_gries_bounds(spark):
@@ -2690,119 +2436,6 @@ def test_heavy_hitters_ignores_nulls(spark):
     )
     got = {r.val: r.est_count for r in heavy_hitters(df, "val", k=5).collect()}
     assert got == {"a": 2, "b": 1}
-
-
-def test_corpus_report_matches_python(spark):
-    from smartlogic_concordance_transformer_spark.datapipe.quality_checks import (
-        corpus_report,
-    )
-    from smartlogic_concordance_transformer_spark.datapipe.text import STOPWORDS
-
-    rows = [
-        ("s1", "en", "the quick brown fox jumps over the lazy dog " * 8),
-        ("s1", "de", "kurz"),
-        ("s2", "en", "a b c"),
-    ]
-    df = spark.createDataFrame(rows, "source string, lang string, text string")
-    got = {r.source: (r.n_docs, r.n_tokens, r.mean_quality, r.n_lang_en)
-           for r in corpus_report(df).collect()}
-
-    def quality(t):
-        toks = [w for w in t.strip().split() if w]
-        n_chars = len(t)
-        alpha = sum(ch.isalpha() for ch in t) / max(n_chars, 1)
-        stop = len(set(toks) & set(STOPWORDS["en"]))
-        mwl = n_chars / max(len(toks), 1)
-        s = (1.0 if 200 <= n_chars <= 100000 else 0.5 if n_chars >= 50 else 0.0)
-        s += 1.0 if 3 <= mwl <= 12 else 0.0
-        s += 1.0 if stop >= 2 else 0.5 if stop >= 1 else 0.0
-        s += 1.0 if alpha >= 0.6 else 0.5 if alpha >= 0.4 else 0.0
-        return s / 4
-
-    import re
-    def ntok(t):
-        return len(re.split(r"\s+", t.strip()))
-
-    for src in ("s1", "s2"):
-        docs = [(l, t) for s, l, t in rows if s == src]
-        want = (
-            len(docs),
-            sum(ntok(t) for _, t in docs),
-            round(sum(quality(t) for _, t in docs) / len(docs), 6),
-            sum(1 for l, _ in docs if l == "en"),
-        )
-        assert got[src] == want, (src, got[src], want)
-
-
-def _posting_fixture_docs(spark):
-    rows = [
-        (1, "alpha beta gamma"),
-        (2, "beta gamma delta"),
-        (3, "gamma delta epsilon"),
-        (4, "alpha epsilon"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_posting_store_incremental_equals_batch(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        PostingStore,
-        inverted_index,
-    )
-
-    docs = _posting_fixture_docs(spark)
-    store = PostingStore(str(tmp_path / "idx"), n_buckets=8)
-    store.ingest(docs.filter("doc_id <= 2"), batch_id=0)
-    store.ingest(docs.filter("doc_id > 2"), batch_id=1)
-
-    inc = {r.token: (r.df_t, tuple(r.postings))
-           for r in store.posting_lists(spark, min_df=1, max_df_frac=1.0).collect()}
-    full = {r.token: (r.df_t, tuple(r.postings))
-            for r in inverted_index(docs, min_df=1, max_df_frac=1.0).collect()}
-    assert inc == full
-    # band-pass applies identically on the incremental path
-    banded = {r.token for r in
-              store.posting_lists(spark, min_df=2, max_df_frac=0.6).collect()}
-    assert banded == {"alpha", "beta", "delta", "epsilon"}  # gamma df=3 > 0.6*4
-
-
-def test_posting_store_replay_is_idempotent(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        PostingStore,
-    )
-
-    docs = _posting_fixture_docs(spark)
-    store = PostingStore(str(tmp_path / "idx"), n_buckets=8)
-    store.ingest(docs.filter("doc_id <= 2"), batch_id=0)
-    store.ingest(docs.filter("doc_id > 2"), batch_id=1)
-    before = sorted(
-        tuple(r) for r in store.read(spark).select("token", "key").collect()
-    )
-    store.ingest(docs.filter("doc_id <= 2"), batch_id=0)  # at-least-once replay
-    after = sorted(
-        tuple(r) for r in store.read(spark).select("token", "key").collect()
-    )
-    assert before == after
-
-
-def test_posting_store_lookup_semantics_and_pruning(spark, tmp_path):
-    from smartlogic_concordance_transformer_spark.datapipe.ranking import (
-        PostingStore,
-    )
-    import pytest as _pytest
-
-    docs = _posting_fixture_docs(spark)
-    store = PostingStore(str(tmp_path / "idx"), n_buckets=8)
-    store.ingest(docs, batch_id=0)
-    got = [r.key for r in store.lookup(spark, "gamma").collect()]
-    assert got == [1, 2, 3]
-    assert store.lookup(spark, "nosuchtoken").count() == 0
-    # the tb equality must reach the scan as a PARTITION filter
-    plan = store.lookup(spark, "gamma")._jdf.queryExecution().executedPlan().toString()
-    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert scan and any("tb" in l for l in scan), plan
-    with _pytest.raises(ValueError, match="n_buckets"):
-        PostingStore("/tmp/x", n_buckets=0)
 
 
 def test_char_entropy_matches_python(spark):

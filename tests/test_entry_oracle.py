@@ -68,8 +68,8 @@ def test_query_matches_duckdb_oracle(spark, name):
 
 def test_registry_holds_exactly_fifty_queries():
     # the driver's correctness gate checks AT MOST 50 queries (round-5
-    # registered 51, the driver file carried exactly the first 50 — the
-    # events_by_type gap); every entry must land in the gate, so the
+    # registered 51, the driver file carried exactly the first 50 — see
+    # docs/COVERAGE.md); every entry must land in the gate, so the
     # registry pins to exactly 50 and the overflow lives in
     # retired_queries() below, oracle-checked here instead
     assert len(entry.queries()) == 50
@@ -108,19 +108,19 @@ def test_every_query_has_oracle_or_reason():
     assert os_ <= qs
     # since round 4 EVERY query is oracle-checked: dedup_simhash via the
     # portable md5 token hash, sim_ivf via deterministic training +
-    # centroid literals, and kg_uuid_factset / multimodal_features via
-    # precomputed-literal VALUES tables built with hashlib (independent
-    # of the engine's expression/UDF paths; DuckDB 1.0 cannot hash BLOBs
-    # so the raw-digest steps are not SQL-expressible directly). Those
-    # three builders read the ORACLE_SF_DIR parquet; on a machine without
-    # it they degrade to the driver's rows-only check rather than fail.
-    # per-query gating on the file each builder actually reads: the two
-    # hashlib-literal oracles need documents.parquet, sim_ivf's retrain
+    # centroid literals, and multimodal_features via a precomputed-literal
+    # VALUES table built with hashlib (independent of the engine's
+    # expression/UDF paths; DuckDB 1.0 cannot hash BLOBs so the raw-digest
+    # steps are not SQL-expressible directly). Those two builders read the
+    # ORACLE_SF_DIR parquet; on a machine without it they degrade to the
+    # driver's rows-only check rather than fail.
+    # per-query gating on the file each builder actually reads: the
+    # hashlib-literal oracle needs documents.parquet, sim_ivf's retrain
     # needs embeddings.parquet — a builder regression on a machine that
     # HAS its input still fails here
     allowed_missing = set()
     if not os.path.exists(os.path.join(SF_DIR, "documents.parquet")):
-        allowed_missing |= {"kg_uuid_factset", "multimodal_features"}
+        allowed_missing |= {"multimodal_features"}
     if not os.path.exists(os.path.join(SF_DIR, "embeddings.parquet")):
         allowed_missing |= {"sim_ivf"}
     assert qs - os_ <= allowed_missing

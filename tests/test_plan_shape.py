@@ -488,17 +488,6 @@ def test_pack_documents_two_phase_plan(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_fuzzy_match_has_no_cartesian_product(spark):
-    # deletion-neighborhood blocking joins on the 8-byte variant hash;
-    # all-pairs must never appear even for a pathological vocabulary
-    from smartlogic_concordance_transformer_spark.datapipe import fuzzy_match_pairs
-
-    df = spark.range(500).selectExpr("concat('term', cast(id as string)) as term")
-    plan = _plan(fuzzy_match_pairs(df))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_interval_join_is_equi_join_not_cartesian(spark):
     # the chunking rewrite must plan as a hash/sort-merge equi-join on the
     # cell id — a pure range predicate would fall back to
@@ -544,26 +533,3 @@ def test_negative_samples_probes_buckets_not_cartesian(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Window" not in plan, plan
-
-
-def test_cooccurrence_pmi_builds_pairs_in_row(spark):
-    # pair enumeration is an in-row transform over the token array: no
-    # position self-join (the token stream must never be joined to
-    # itself), and no cartesian anywhere; the single
-    # BroadcastNestedLoopJoin allowed is the 1-row totals cross join
-    import __spark_entry__ as entry
-
-    plan = _plan(entry.q_text_pmi(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # all joins broadcast at this size
-
-
-def test_tfidf_top_k_is_one_rank_limited_window(spark):
-    # the per-document top-k cut is the only window, and Spark's
-    # WindowGroupLimit pushdown must hold (partial top-k before the
-    # exchange — without it every document's full term list sorts)
-    import __spark_entry__ as entry
-
-    plan = _plan(entry.q_text_tfidf(spark, SF))
-    assert plan.count("Window [") == 1, plan
-    assert "WindowGroupLimit" in plan, plan

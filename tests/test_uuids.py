@@ -1,20 +1,16 @@
 """UUID kernel goldens — all 13 golden UUIDs from the reference test suite
 (smartlogic/service_test.go:48-91,146-315), pinned on the
 kernels the KG job runs: the fold's ``pyfold._md5_uuid``/``_factset_uuid``
-and the native ``uuids.ft_md5_uuid``/``ft_factset_uuid`` Column kernels
-(used by kg_uuid_tme / kg_uuid_factset), plus a random cross-check of all
-four against the reference model."""
+(the FACTSET goldens also through the fold on Spark) and the native
+``uuids.ft_md5_uuid`` Column kernel (used by kg_uuid_tme), plus a random
+cross-check of all three against the reference model."""
 
 import random
 import string
 
 from smartlogic_concordance_transformer_spark.pyfold import _factset_uuid, _md5_uuid
 from smartlogic_concordance_transformer_spark.transform import transform
-from smartlogic_concordance_transformer_spark.uuids import (
-    ft_factset_uuid,
-    ft_md5_uuid,
-    ft_md5_uuid_sql,
-)
+from smartlogic_concordance_transformer_spark.uuids import ft_md5_uuid, ft_md5_uuid_sql
 from tests.reference_model import factset_uuid, md5_uuid
 
 MD5_GOLDENS = {
@@ -49,10 +45,6 @@ def test_spark_kernels_match_goldens(spark):
         "id", ft_md5_uuid("id").alias("u")
     )
     assert {r.id: r.u for r in df.collect()} == MD5_GOLDENS
-    df = spark.createDataFrame([(k,) for k in FACTSET_GOLDENS], "id string").select(
-        "id", ft_factset_uuid("id").alias("u")
-    )
-    assert {r.id: r.u for r in df.collect()} == FACTSET_GOLDENS
     # FACTSET uuids as the KG job derives them: through the fold on Spark
     payload = (
         '{"@graph":[{"@id":"http://www.ft.com/thing/20db1bd6-59f9-4404-adb5-3165a448f8b0",'
@@ -77,11 +69,10 @@ def test_spark_matches_python_on_random_inputs(spark):
         for _ in range(500)
     ]
     df = spark.createDataFrame([(v,) for v in values], "id string").select(
-        "id", ft_md5_uuid("id").alias("a"), ft_factset_uuid("id").alias("b")
+        "id", ft_md5_uuid("id").alias("a")
     )
     for r in df.collect():
         assert r.a == md5_uuid(r.id)
-        assert r.b == factset_uuid(r.id)
     for v in values:
         assert _md5_uuid(v) == md5_uuid(v)
         assert _factset_uuid(v) == factset_uuid(v)
